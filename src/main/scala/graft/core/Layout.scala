@@ -37,23 +37,6 @@ object Layout {
     Fs.deleteRecursively(new java.io.File(warehouse, rel))
   }
 
-  /** Complete an interrupted park-promote-drop swap before a compact
-    * re-runs: the rename dance (park live → `_old`, promote `_compact`,
-    * drop parked) is not crash-atomic, and a crash between the park and
-    * the promote leaves the live name missing with the parked copy
-    * holding the data — at which point a naive re-run dies on the very
-    * first `SHOW TBLPROPERTIES`/`spark.table` of the live name. Called
-    * at compact entry: if the live table is gone but `<table>_old`
-    * survives, rename it back so the compact proceeds from the parked
-    * (pre-compact) state; every other crash point leaves the live name
-    * present and needs no repair. Makes "retriable after re-running
-    * compact" TRUE at every crash point instead of most of them. */
-  def recoverParkedSwap(spark: SparkSession, table: String): Unit = {
-    val parked = table + "_old"
-    if (!spark.catalog.tableExists(table) && spark.catalog.tableExists(parked))
-      spark.sql(s"ALTER TABLE $parked RENAME TO $table")
-  }
-
   /** True when `batchIds` (a single long id column named `keyCol`)
     * intersects the tombstone side table `t`. The append paths of the
     * persisted indexes call this to catch the retire→re-append trap:

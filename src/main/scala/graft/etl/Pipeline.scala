@@ -1,5 +1,9 @@
 package graft.etl
 
+import java.io.File
+import java.nio.file.Files
+
+import graft.core.Commit
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -111,223 +115,200 @@ object Pipeline {
     * parquet snapshot, emulating `replace_one({key: id}, doc,
     * upsert=True)` without a MERGE-capable table format:
     * read current snapshot → union with batch (batch wins) → keep one
-    * row per key → write to a temp dir → atomic swap. Keyed rows are
-    * idempotent (re-upserting the same batch changes nothing); keyless
-    * rows append on every run — faithful to the reference's R19 insert
-    * path (etl_connector.py:184-191, `insert_one` with no key).
+    * row per key → write the next generation → publish it. Keyed rows
+    * are idempotent (re-upserting the same batch changes nothing);
+    * keyless rows append on every run — faithful to the reference's R19
+    * insert path (etl_connector.py:184-191, `insert_one` with no key).
+    *
+    * CRASH CONTRACT, shared by every snapshot writer here and
+    * `EventStreams.etlStream` ([[graft.core.Commit]]): `snapshotDir` is
+    * a link to the live generation; a call writes a new generation
+    * beside it and publishes it with one atomic link flip. A reader of
+    * `snapshotDir` sees the snapshot from before the call or after it,
+    * never a mix; a crash at any point leaves the earlier snapshot live,
+    * and the next call deletes what the crash left and produces what a
+    * crash-free run would. Single writer.
     *
     * Scale: the snapshot rewrite is the no-Delta fallback; the merge
     * itself is one hash shuffle on the key. On a real deployment this
     * slot is a Delta/Iceberg MERGE — same logical semantics. */
   def upsert(spark: SparkSession, batch: DataFrame, snapshotDir: String,
-             key: String = "pulse_id", maxRecordsPerFile: Int = 0): Unit = {
-    val fs = new java.io.File(snapshotDir)
-    // within a batch, arrival order = (ingestion ts, page, item) — the
-    // reference's sequential page-then-item loop; without the item
-    // index, two same-key docs in ONE page tie on (ts, page) and the
-    // survivor depends on shuffle order
-    val arrival: Seq[Column] =
-      Seq(col("ingestion_timestamp")) ++
-        (if (batch.columns.contains("source_page")) Seq(col("source_page")) else Nil) ++
-        (if (batch.columns.contains("source_item")) Seq(col("source_item")) else Nil)
-    val batchDeduped = lastWins(batch.withColumn("__gen", lit(1)), key, arrival)
+             key: String = "pulse_id", maxRecordsPerFile: Int = 0): Unit =
+    Commit.write(snapshotDir)(writeMerged(spark, batch, snapshotDir, _, key, maxRecordsPerFile))
+
+  /** [[upsert]]'s merge, written as generation `gen` of `snapshotDir`
+    * for a caller that adds to the generation before publishing it. */
+  private[graft] def writeMerged(spark: SparkSession, batch: DataFrame, snapshotDir: String,
+                                 gen: File, key: String = "pulse_id",
+                                 maxRecordsPerFile: Int = 0): Unit = {
+    val live = new File(snapshotDir)
+    val batchDeduped = lastWins(batch.withColumn("__gen", lit(1)), key, arrival(batch))
     val merged =
-      if (fs.exists() && fs.listFiles() != null && fs.listFiles().nonEmpty) {
+      if (live.exists() && live.listFiles() != null && live.listFiles().nonEmpty) {
         val existing = spark.read.parquet(snapshotDir).withColumn("__gen", lit(0))
         // batch rows (gen=1) beat snapshot rows (gen=0) per key
-        lastWins(existing.unionByName(batchDeduped), key, col("__gen") +: arrival)
+        lastWins(existing.unionByName(batchDeduped), key, col("__gen") +: arrival(batch))
       } else batchDeduped
-    val tmp = snapshotDir + ".tmp-" + java.util.UUID.randomUUID().toString
     // R17's sink batch size, Spark-shaped: the reference flushes every
     // `batchSize` docs per bulk write (etl_connector.py:206,229); the
     // parquet analog bounds rows per output file.
     val writer = merged.drop("__gen").write.mode("overwrite")
     (if (maxRecordsPerFile > 0)
        writer.option("maxRecordsPerFile", maxRecordsPerFile.toLong)
-     else writer).parquet(tmp)
-    // swap via checked renames (SURVEY §7: write temp + rename). A
-    // failed rename must surface, not silently strand the new snapshot
-    // in tmp; true crash-atomicity needs a manifest/table format
-    // (Delta/Iceberg MERGE is the production slot for this sink).
-    val old = new java.io.File(snapshotDir + ".old-" + java.util.UUID.randomUUID())
-    if (fs.exists() && !fs.renameTo(old))
-      throw new java.io.IOException(s"upsert swap: could not move $fs aside")
-    if (!new java.io.File(tmp).renameTo(fs)) {
-      old.renameTo(fs) // best-effort rollback of the first rename
-      throw new java.io.IOException(
-        s"upsert swap: could not move $tmp into place (same filesystem required)")
-    }
-    deleteRecursively(old)
+     else writer).parquet(gen.getPath)
   }
 
-  private def deleteRecursively(f: java.io.File): Unit =
-    graft.core.Fs.deleteRecursively(f)
+  /** Within a batch, arrival order = (ingestion ts, page, item) — the
+    * reference's sequential page-then-item loop; without the item
+    * index, two same-key docs in ONE page tie on (ts, page) and the
+    * survivor depends on shuffle order. */
+  private def arrival(batch: DataFrame): Seq[Column] =
+    Seq(col("ingestion_timestamp")) ++
+      (if (batch.columns.contains("source_page")) Seq(col("source_page")) else Nil) ++
+      (if (batch.columns.contains("source_item")) Seq(col("source_item")) else Nil)
 
   /** Manifest for the incremental snapshot layout: bucket count and
     * key are FIXED at snapshot creation (a different bucket count
     * would route keys to different directories and silently duplicate
-    * them). Stored as one tiny JSON file, written via temp + atomic
-    * rename. */
+    * them). One tiny JSON file in every generation. */
   private case class SnapshotManifest(numBuckets: Int, key: String)
 
-  private def manifestFile(snapshotDir: String) =
-    new java.io.File(snapshotDir, "_MANIFEST.json")
-
   private def readManifest(snapshotDir: String): Option[SnapshotManifest] = {
-    val f = manifestFile(snapshotDir)
+    val f = new File(snapshotDir, "_MANIFEST.json")
     if (!f.exists()) None
     else {
       // two int/string fields — a regex parse keeps the format honest
       // without a JSON dependency in the hot path
-      val s = java.nio.file.Files.readString(f.toPath)
+      val s = Files.readString(f.toPath)
       val nb = """"numBuckets"\s*:\s*(\d+)""".r.findFirstMatchIn(s).map(_.group(1).toInt)
       val k = """"key"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(s).map(_.group(1))
       for (n <- nb; kk <- k) yield SnapshotManifest(n, kk)
     }
   }
 
-  private def writeManifest(snapshotDir: String, m: SnapshotManifest): Unit = {
-    val f = manifestFile(snapshotDir)
-    val tmp = java.nio.file.Files.createTempFile(
-      f.getParentFile.toPath, "_MANIFEST", ".tmp")
-    java.nio.file.Files.writeString(tmp,
+  /** The `bucket=<p>` entries of `dir`, sorted by p. */
+  private def buckets(dir: File): Array[Int] =
+    Option(dir.list()).getOrElse(Array.empty[String])
+      .collect { case s"bucket=$p" => p.toInt }.sorted
+
+  private def bucketDir(dir: String, p: Int): File = new File(dir, s"bucket=$p")
+
+  /** The buckets among `ps` whose live directory holds files. */
+  private def liveBuckets(snapshotDir: String, ps: Array[Int]): Array[Int] =
+    ps.filter(p => Option(bucketDir(snapshotDir, p).listFiles()).exists(_.nonEmpty))
+
+  /** Selective read of live buckets `ps`; basePath keeps the bucket
+    * partition column. */
+  private def readBuckets(spark: SparkSession, snapshotDir: String, ps: Array[Int]): DataFrame =
+    spark.read.option("basePath", snapshotDir)
+      .parquet(ps.toIndexedSeq.map(bucketDir(snapshotDir, _).getAbsolutePath): _*)
+
+  /** Complete bucketed generation `gen`, which holds the buckets this
+    * call rewrote: every other live keyed bucket is linked in unchanged,
+    * the keyless bucket lists its earlier files (hard links) beside any
+    * new ones, and the manifest is written. A rewritten bucket with no
+    * rows left simply has no entry. */
+  private def completeGeneration(snapshotDir: String, gen: File, m: SnapshotManifest,
+                                 rewritten: Set[Int]): Unit = {
+    Files.createDirectories(gen.toPath)
+    buckets(new File(snapshotDir)).filterNot(rewritten).foreach { p =>
+      if (p < 0) Commit.linkFiles(bucketDir(snapshotDir, p), bucketDir(gen.getPath, p))
+      else Commit.inherit(snapshotDir, gen, s"bucket=$p")
+    }
+    Files.writeString(new File(gen, "_MANIFEST.json").toPath,
       s"""{"numBuckets": ${m.numBuckets}, "key": "${m.key}"}""")
-    java.nio.file.Files.move(tmp, f.toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
   /** Incremental key-upsert: O(touched keys), not O(snapshot).
     *
     * [[upsert]] rewrites the ENTIRE snapshot every batch — correct,
     * but at 100 TB a 1k-row batch would rewrite terabytes. This form
-    * hash-partitions the snapshot into `numBuckets` directories
+    * hash-partitions the snapshot into `numBuckets` buckets
     * (`bucket=<p>`, p = xxhash64(key) mod numBuckets) with a manifest
     * pinning the layout, and a batch rewrites ONLY the buckets its
     * keys land in: cost is proportional to the touched fraction of
-    * the snapshot. Untouched bucket directories are never opened —
-    * their files stay byte-identical (the spec asserts this).
+    * the snapshot. Every other bucket of the new generation is a link
+    * to the directory it already was — never opened, its files
+    * byte-identical at the same path (the spec asserts this).
     *
     * Semantics are identical to [[upsert]] (last-write-wins per key,
     * R18; keyless rows append every run, R19 — they land in the
-    * reserved `bucket=-1` directory via append-mode writes, never
-    * rewritten). Reading the whole snapshot back:
+    * reserved `bucket=-1`, whose earlier files the new generation
+    * hard-links, never rewrites). Reading the whole snapshot back:
     * [[readIncrementalSnapshot]] (plain parquet read + drop the
-    * layout column).
-    *
-    * The per-bucket swap is checked-rename, like [[upsert]]: a crash
-    * mid-swap can leave SOME buckets on the new batch and others on
-    * the old — the documented gap a transactional format
-    * (Delta/Iceberg MERGE) closes; this is the no-dependency fallback
-    * with the same directory-granular write pattern those formats use
-    * underneath. */
+    * layout column). Crash contract: [[upsert]]'s — the new generation,
+    * every bucket at once, is published by one link flip. */
   def upsertIncremental(spark: SparkSession, batch: DataFrame, snapshotDir: String,
                         key: String = "pulse_id", numBuckets: Int = 32,
                         maxRecordsPerFile: Int = 0): Unit = {
     require(numBuckets >= 1, s"numBuckets ($numBuckets) must be >= 1")
-    val root = new java.io.File(snapshotDir)
-    root.mkdirs()
-    val manifest = readManifest(snapshotDir) match {
-      case Some(m) =>
-        require(m.key == key && m.numBuckets == numBuckets,
-          s"snapshot $snapshotDir was created with (numBuckets=${m.numBuckets}, " +
-            s"key=${m.key}); re-upserting with ($numBuckets, $key) would split " +
-            "keys across incompatible layouts — recreate the snapshot to re-bucket")
-        m
-      case None =>
-        require(Option(root.list()).forall(_.isEmpty),
-          s"$snapshotDir exists without a manifest — refusing to mix the " +
-            "incremental layout into a snapshot written by the full-rewrite upsert")
-        val m = SnapshotManifest(numBuckets, key)
-        writeManifest(snapshotDir, m); m
-    }
-    val arrival: Seq[Column] =
-      Seq(col("ingestion_timestamp")) ++
-        (if (batch.columns.contains("source_page")) Seq(col("source_page")) else Nil) ++
-        (if (batch.columns.contains("source_item")) Seq(col("source_item")) else Nil)
-    val deduped = lastWins(batch.withColumn("__gen", lit(1)), key, arrival)
-
-    // keyless rows (R19): append-only — new immutable files into the
-    // reserved bucket, no read-modify-write of anything
-    val keyless = deduped.filter(col(key).isNull).drop("__gen")
-    if (!keyless.isEmpty)
-      keyless.write.mode("append").parquet(s"$snapshotDir/bucket=-1")
-
-    // persisted: the touched-bucket collect and the merge write are two
-    // jobs, and both MUST see the same batch rows — an unpersisted
-    // nondeterministic batch (e.g. rand-derived keys) could route rows
-    // to buckets the first job never saw
-    val keyed = deduped.filter(col(key).isNotNull)
-      .withColumn("bucket",
-        pmod(xxhash64(col(key)), lit(manifest.numBuckets.toLong)).cast("int"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // the touched-bucket list is O(numBuckets) scalars on the driver —
-      // the same cardinality a table format's file-pruning pass collects
-      val touched = keyed.select("bucket").distinct()
-        .collect().map(_.getInt(0)).sorted
-      if (touched.isEmpty) return
-      val existingDirs = touched.map(p => new java.io.File(root, s"bucket=$p"))
-        .filter(d => d.exists() && Option(d.listFiles()).exists(_.nonEmpty))
-        .map(_.getAbsolutePath)
-      val merged =
-        if (existingDirs.nonEmpty) {
-          // basePath keeps the bucket partition column on the selective read
-          val existing = spark.read.option("basePath", snapshotDir)
-            .parquet(existingDirs.toIndexedSeq: _*)
-            .withColumn("__gen", lit(0))
-          lastWins(existing.unionByName(keyed), key, col("__gen") +: arrival)
-        } else keyed
-      val tmp = snapshotDir + ".tmp-" + java.util.UUID.randomUUID().toString
-      val writer = merged.drop("__gen").write.mode("overwrite").partitionBy("bucket")
-      (if (maxRecordsPerFile > 0)
-         writer.option("maxRecordsPerFile", maxRecordsPerFile.toLong)
-       else writer).parquet(tmp)
-      // the swap list is what was ACTUALLY written — and it must equal
-      // `touched` exactly, verified BEFORE any rename. A written bucket
-      // outside `touched` was never merged with its live data (swapping
-      // it in would drop live rows; skipping it would drop batch rows),
-      // and a touched bucket with no output dir means the rewrite saw
-      // different rows than the plan — either way the batch recomputed
-      // nondeterministically and no swap is safe.
-      val written = Option(new java.io.File(tmp).listFiles())
-        .getOrElse(Array.empty[java.io.File])
-        .filter(f => f.isDirectory && f.getName.startsWith("bucket="))
-        .map(_.getName.stripPrefix("bucket=").toInt).sorted
-      if (!java.util.Arrays.equals(written, touched)) {
-        deleteRecursively(new java.io.File(tmp))
-        throw new IllegalStateException(
-          s"upsertIncremental: written buckets [${written.mkString(",")}] != " +
-            s"planned buckets [${touched.mkString(",")}] — the batch recomputed " +
-            "nondeterministically between the plan and the write; snapshot left " +
-            "untouched. Materialize the batch (cache/checkpoint) before upserting.")
+    Commit.write(snapshotDir) { gen =>
+      val manifest = readManifest(snapshotDir) match {
+        case Some(m) =>
+          require(m.key == key && m.numBuckets == numBuckets,
+            s"snapshot $snapshotDir was created with (numBuckets=${m.numBuckets}, " +
+              s"key=${m.key}); re-upserting with ($numBuckets, $key) would split " +
+              "keys across incompatible layouts — recreate the snapshot to re-bucket")
+          m
+        case None =>
+          require(Option(new File(snapshotDir).list()).forall(_.isEmpty),
+            s"$snapshotDir exists without a manifest — refusing to mix the " +
+              "incremental layout into a snapshot written by the full-rewrite upsert")
+          SnapshotManifest(numBuckets, key)
       }
-      // swap ONLY the touched bucket directories; `written == touched`
-      // guarantees newDir exists for every p, so a missing dir can no
-      // longer strand the live data in the .old graveyard
-      touched.foreach { p =>
-        val newDir = new java.io.File(tmp, s"bucket=$p")
-        val liveDir = new java.io.File(root, s"bucket=$p")
-        val old = new java.io.File(root, s".old-$p-" + java.util.UUID.randomUUID())
-        if (liveDir.exists() && !liveDir.renameTo(old))
-          throw new java.io.IOException(s"upsertIncremental: could not move $liveDir aside")
-        if (!newDir.renameTo(liveDir)) {
-          if (old.exists() && !old.renameTo(liveDir))
-            throw new java.io.IOException(
-              s"upsertIncremental: bucket=$p swap failed AND rollback failed — " +
-                s"live data is at $old")
-          throw new java.io.IOException(
-            s"upsertIncremental: could not move $newDir into place (same filesystem required)")
+      val deduped = lastWins(batch.withColumn("__gen", lit(1)), key, arrival(batch))
+      // persisted: the touched-bucket collect and the merge write are two
+      // jobs, and both MUST see the same batch rows — an unpersisted
+      // nondeterministic batch (e.g. rand-derived keys) could route rows
+      // to buckets the first job never saw
+      val keyed = deduped.filter(col(key).isNotNull)
+        .withColumn("bucket",
+          pmod(xxhash64(col(key)), lit(manifest.numBuckets.toLong)).cast("int"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        // the touched-bucket list is O(numBuckets) scalars on the driver —
+        // the same cardinality a table format's file-pruning pass collects
+        val touched = keyed.select("bucket").distinct()
+          .collect().map(_.getInt(0)).sorted
+        if (touched.nonEmpty) {
+          val existing = liveBuckets(snapshotDir, touched)
+          val merged =
+            if (existing.nonEmpty) {
+              val live = readBuckets(spark, snapshotDir, existing).withColumn("__gen", lit(0))
+              lastWins(live.unionByName(keyed), key, col("__gen") +: arrival(batch))
+            } else keyed
+          val writer = merged.drop("__gen").write.mode("overwrite").partitionBy("bucket")
+          (if (maxRecordsPerFile > 0)
+             writer.option("maxRecordsPerFile", maxRecordsPerFile.toLong)
+           else writer).parquet(gen.getPath)
+          // what was ACTUALLY written must equal `touched` exactly. A
+          // written bucket outside `touched` was never merged with its live
+          // data (publishing it would drop live rows; skipping it would drop
+          // batch rows), and a touched bucket with no output dir means the
+          // rewrite saw different rows than the plan — either way the batch
+          // recomputed nondeterministically and nothing may be published.
+          val written = buckets(gen)
+          if (!java.util.Arrays.equals(written, touched))
+            throw new IllegalStateException(
+              s"upsertIncremental: written buckets [${written.mkString(",")}] != " +
+                s"planned buckets [${touched.mkString(",")}] — the batch recomputed " +
+                "nondeterministically between the plan and the write; snapshot left " +
+                "untouched. Materialize the batch (cache/checkpoint) before upserting.")
         }
-        deleteRecursively(old)
-      }
-      deleteRecursively(new java.io.File(tmp))
-    } finally { keyed.unpersist(); () }
+        // keyless rows (R19): append-only — new immutable files into the
+        // reserved bucket, no read-modify-write of anything
+        val keyless = deduped.filter(col(key).isNull).drop("__gen")
+        if (!keyless.isEmpty)
+          keyless.write.mode("append").parquet(new File(gen, "bucket=-1").getPath)
+        if (gen.exists()) completeGeneration(snapshotDir, gen, manifest, touched.toSet)
+      } finally { keyed.unpersist(); () }
+    }
   }
 
   /** Read back a snapshot written by [[upsertIncremental]]: standard
-    * partition discovery over the bucket directories, layout column
-    * dropped — same schema the full-rewrite [[upsert]] snapshot has. */
+    * partition discovery over the live generation's bucket entries
+    * (links resolve like directories), layout column dropped — same
+    * schema the full-rewrite [[upsert]] snapshot has. */
   def readIncrementalSnapshot(spark: SparkSession, snapshotDir: String): DataFrame =
     spark.read.parquet(snapshotDir).drop("bucket")
 
@@ -345,29 +326,17 @@ object Pipeline {
     * itself broadcasts into ONE left-anti join over a SELECTIVE read
     * of just the touched bucket directories — at 100 TB a 1k-subject
     * request opens ≤ numBuckets directories and rewrites only those,
-    * never the snapshot. Untouched bucket files stay byte-identical
-    * (same checked-rename swap as [[upsertIncremental]]); the keyless
-    * `bucket=-1` directory is never touched — a NULL key matches no
-    * deletion id by SQL equality, and the audit counts it the same
-    * way. A bucket whose every row purges swaps to ABSENT (directory
-    * removed), the same state it had before its first upsert.
+    * never the snapshot. Untouched buckets are linked into the new
+    * generation and stay byte-identical at the same path (as in
+    * [[upsertIncremental]]); the keyless `bucket=-1` is never rewritten
+    * — a NULL key matches no deletion id by SQL equality, and the
+    * audit counts it the same way. A bucket whose every row purges has
+    * no entry in the new generation, the same state it had before its
+    * first upsert.
     *
-    * CRASH / CONCURRENCY CONTRACT (local-FS rename swap — on an
-    * object store the swap is a manifest pointer flip instead):
-    * single writer only — a concurrent [[upsertIncremental]] or
-    * second purge racing the directory swap is NOT supported (the
-    * same discipline every rename-based committer has). The swap is
-    * two-phase: every rewritten bucket is first STAGED into the
-    * snapshot root as `.new-<p>-*` (a failure before any live rename
-    * rolls back completely — live bytes untouched), then each bucket
-    * swaps live→`.old-<p>-*`→delete. A crash inside the swap window
-    * leaves the bucket's pre-purge rows in `.old-<p>-*` and/or its
-    * post-purge rows in `.new-<p>-*` — nothing is lost; recovery is
-    * mechanical (restore `.old` if `bucket=<p>` is absent, else
-    * delete the leftovers) and the next call FAILS FAST on the
-    * leftover markers rather than purging over an ambiguous layout.
-    * Re-running the same purge after recovery is idempotent: already-
-    * purged keys match no rows.
+    * Crash contract: [[upsert]]'s — one link flip publishes the purge,
+    * and re-running the same purge is idempotent: already-purged keys
+    * match no rows.
     *
     * @param ids one-column frame of subject keys to delete; cast to
     *            the snapshot key's type so bucket routing hashes the
@@ -379,100 +348,45 @@ object Pipeline {
                  ids: DataFrame): (Long, Long) = {
     require(ids.columns.length == 1,
       s"ids must be a one-column frame, got ${ids.columns.toSeq}")
-    val manifest = readManifest(snapshotDir).getOrElse(throw new IllegalArgumentException(
-      s"$snapshotDir has no manifest — purgeApply operates only on " +
-        "upsertIncremental snapshots (the bucket layout IS the pruning index)"))
-    val root = new java.io.File(snapshotDir)
-    // fail fast on leftovers from an interrupted swap: purging over an
-    // ambiguous layout could double-delete or resurrect rows — the
-    // scaladoc's recovery steps are one rename/delete away
-    val stray = Option(root.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(f => f.getName.startsWith(".old-") || f.getName.startsWith(".new-"))
-    require(stray.isEmpty,
-      s"purgeApply: $snapshotDir holds leftover swap markers " +
-        s"[${stray.map(_.getName).mkString(", ")}] from an interrupted run — " +
-        "recover first (restore .old-<p> if bucket=<p> is absent, else delete " +
-        "the leftovers), then re-run; the purge is idempotent after recovery")
-    val keyType = spark.read.parquet(snapshotDir).schema(manifest.key).dataType
-    // persisted: the bucket plan and the anti-join must see the SAME id
-    // set (the upsertIncremental nondeterminism discipline)
-    val keyIds = ids.select(col(ids.columns.head).cast(keyType).as("__k"))
-      .filter(col("__k").isNotNull).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val touched = keyIds
-        .select(pmod(xxhash64(col("__k")), lit(manifest.numBuckets.toLong))
-          .cast("int").as("bucket"))
-        .distinct().collect().map(_.getInt(0)).sorted
-      val existingDirs = touched.map(p => new java.io.File(root, s"bucket=$p"))
-        .filter(d => d.exists() && Option(d.listFiles()).exists(_.nonEmpty))
-      if (existingDirs.isEmpty) return (0L, 0L)
-      val planned = existingDirs
-        .map(_.getName.stripPrefix("bucket=").toInt).sorted
-      val live = spark.read.option("basePath", snapshotDir)
-        .parquet(existingDirs.map(_.getAbsolutePath).toIndexedSeq: _*)
-      val nBefore = live.count()
-      val kept = live.join(broadcast(keyIds),
-        col(manifest.key) === col("__k"), "left_anti")
-      val tmp = snapshotDir + ".tmp-" + java.util.UUID.randomUUID().toString
-      kept.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-      // a fully-purged bucket legitimately writes NO output directory —
-      // unlike the upsert (whose written set must EQUAL the plan), the
-      // purge invariant is written ⊆ planned: an output bucket outside
-      // the plan means the read saw rows the routing said cannot exist
-      val written = Option(new java.io.File(tmp).listFiles())
-        .getOrElse(Array.empty[java.io.File])
-        .filter(f => f.isDirectory && f.getName.startsWith("bucket="))
-        .map(_.getName.stripPrefix("bucket=").toInt).sorted
-      if (!written.toSet.subsetOf(planned.toSet)) {
-        deleteRecursively(new java.io.File(tmp))
-        throw new IllegalStateException(
-          s"purgeApply: written buckets [${written.mkString(",")}] outside the " +
-            s"planned set [${planned.mkString(",")}] — snapshot left untouched.")
-      }
-      val nAfter =
-        if (written.isEmpty) 0L else spark.read.parquet(tmp).count()
-      // PHASE 1 — stage every rewritten bucket into the snapshot root
-      // (same FS as the live dirs): any failure here rolls back fully
-      // with the live bytes never touched
-      val staged = scala.collection.mutable.Map.empty[Int, java.io.File]
+    Commit.write(snapshotDir) { gen =>
+      val manifest = readManifest(snapshotDir).getOrElse(throw new IllegalArgumentException(
+        s"$snapshotDir has no manifest — purgeApply operates only on " +
+          "upsertIncremental snapshots (the bucket layout IS the pruning index)"))
+      val keyType = spark.read.parquet(snapshotDir).schema(manifest.key).dataType
+      // persisted: the bucket plan and the anti-join must see the SAME id
+      // set (the upsertIncremental nondeterminism discipline)
+      val keyIds = ids.select(col(ids.columns.head).cast(keyType).as("__k"))
+        .filter(col("__k").isNotNull).distinct()
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        written.foreach { p =>
-          val src = new java.io.File(tmp, s"bucket=$p")
-          val dst = new java.io.File(root, s".new-$p-" + java.util.UUID.randomUUID())
-          if (!src.renameTo(dst))
-            throw new java.io.IOException(
-              s"purgeApply: could not stage $src into $root (same filesystem required)")
-          staged(p) = dst
+        val touched = keyIds
+          .select(pmod(xxhash64(col("__k")), lit(manifest.numBuckets.toLong))
+            .cast("int").as("bucket"))
+          .distinct().collect().map(_.getInt(0)).sorted
+        val planned = liveBuckets(snapshotDir, touched)
+        if (planned.isEmpty) (0L, 0L)
+        else {
+          val live = readBuckets(spark, snapshotDir, planned)
+          val nBefore = live.count()
+          val kept = live.join(broadcast(keyIds),
+            col(manifest.key) === col("__k"), "left_anti")
+          kept.write.mode("overwrite").partitionBy("bucket").parquet(gen.getPath)
+          // a fully-purged bucket legitimately writes NO output directory —
+          // unlike the upsert (whose written set must EQUAL the plan), the
+          // purge invariant is written ⊆ planned: an output bucket outside
+          // the plan means the read saw rows the routing said cannot exist
+          val written = buckets(gen)
+          if (!written.toSet.subsetOf(planned.toSet))
+            throw new IllegalStateException(
+              s"purgeApply: written buckets [${written.mkString(",")}] outside the " +
+                s"planned set [${planned.mkString(",")}] — snapshot left untouched.")
+          val nAfter =
+            if (written.isEmpty) 0L else spark.read.parquet(gen.getPath).count()
+          completeGeneration(snapshotDir, gen, manifest, planned.toSet)
+          (nBefore, nBefore - nAfter)
         }
-      } catch {
-        case e: Throwable =>
-          staged.values.foreach(deleteRecursively)
-          deleteRecursively(new java.io.File(tmp))
-          throw e
-      }
-      // PHASE 2 — per-bucket swap: live moves aside, staged moves in,
-      // aside deletes last. A crash inside one bucket's window leaves
-      // its rows recoverable in .old-/.new- (see the scaladoc contract)
-      planned.foreach { p =>
-        val liveDir = new java.io.File(root, s"bucket=$p")
-        val old = new java.io.File(root, s".old-$p-" + java.util.UUID.randomUUID())
-        if (!liveDir.renameTo(old))
-          throw new java.io.IOException(s"purgeApply: could not move $liveDir aside")
-        staged.get(p).foreach { newDir =>
-          if (!newDir.renameTo(liveDir)) {
-            if (!old.renameTo(liveDir))
-              throw new java.io.IOException(
-                s"purgeApply: bucket=$p swap failed AND rollback failed — live data is at $old")
-            throw new java.io.IOException(
-              s"purgeApply: could not move $newDir into place")
-          }
-        }
-        deleteRecursively(old)
-      }
-      deleteRecursively(new java.io.File(tmp))
-      (nBefore, nBefore - nAfter)
-    } finally { keyIds.unpersist(); () }
+      } finally { keyIds.unpersist(); () }
+    }
   }
 
   /** Full run (reference main(), etl_connector.py:206-239): extract →

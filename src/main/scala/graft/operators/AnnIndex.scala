@@ -58,7 +58,7 @@ object AnnIndex {
     * candidate at probe time — never an index rewrite on the deletion
     * path. [[compactLshIndex]]/[[compactIvfIndex]] fold the tombstones
     * into the index when the list outgrows its broadcast budget; the
-    * purge/governance story is the same two-phase discipline as
+    * purge/governance story is the same audit-then-apply discipline as
     * [[graft.etl.Pipeline.purgeApply]]. Spec-proven: a probe with
     * tombstones ≡ a probe of a fresh index built without the deleted
     * rows (AnnIndexSpec). */
@@ -94,7 +94,7 @@ object AnnIndex {
 
   /** Fold tombstones into the LSH index: staged rewrite (write the
     * kept rows to a side table through the SAME bucketed writer, swap
-    * by rename, drop the tombstones) — the probe-visible result is
+    * by `Commit.swapTable`, drop the tombstones) — the probe-visible result is
     * unchanged (spec-pinned), the broadcast list resets to empty.
     * No-op without tombstones. */
   def compactLshIndex(spark: SparkSession, table: String): Unit =
@@ -110,31 +110,17 @@ object AnnIndex {
                            carryProps: String*): Unit = {
     // a prior compact may have died mid-swap with the live name parked
     // aside — repair that first or the property read below throws
-    graft.core.Layout.recoverParkedSwap(spark, table)
+    graft.core.Commit.recoverTable(spark, table)
     val t = tombsTable(table)
     if (!spark.catalog.tableExists(t)) return
     val buckets = getProp(spark, table, bucketsProp)
     val props = (bucketsProp +: carryProps).map(p =>
       p -> getProp(spark, table, p).toString)
     val kept = minusTombstones(spark, table, spark.table(table))
-    val stage = table + "_compact"
-    graft.core.Layout.dropManagedTable(spark, stage)
+    val stage = graft.core.Commit.stageTable(spark, table)
     graft.core.Layout.writeBucketed(kept, stage, buckets, bucketCols)
     setProps(spark, stage, props: _*)
-    // swap via double rename — NOT crash-atomic (the catalog has no
-    // multi-statement transaction), but ordered so the index data is
-    // never stranded without a recovery path: park the live table
-    // aside FIRST, promote the stage, then drop the parked copy. A
-    // crash inside the window leaves probes failing table-not-found
-    // (loud, retriable — re-running compact first restores the parked
-    // copy via recoverParkedSwap above, then redoes the fold) rather
-    // than silently reading a half-swapped index, and both copies
-    // survive on disk.
-    val parked = table + "_old"
-    graft.core.Layout.dropManagedTable(spark, parked)
-    spark.sql(s"ALTER TABLE $table RENAME TO $parked")
-    spark.sql(s"ALTER TABLE $stage RENAME TO $table")
-    graft.core.Layout.dropManagedTable(spark, parked)
+    graft.core.Commit.swapTable(spark, table)
     graft.core.Layout.dropManagedTable(spark, t)
   }
 

@@ -1382,14 +1382,13 @@ object Dedup {
   }
 
   /** Fold the tombstones into the state table: staged bucketed rewrite
-    * + the park-promote-drop rename dance (`AnnIndex.compactIndex`'s
-    * ordering — not crash-atomic, but the state always survives under
-    * some name), properties carried, tombstone table dropped.
-    * [[readPairState]] results are unchanged (spec-pinned). No-op
-    * without tombstones. */
+    * + `Commit.swapTable` (not crash-atomic, but the state always
+    * survives under some name), properties carried, tombstone table
+    * dropped. [[readPairState]] results are unchanged (spec-pinned).
+    * No-op without tombstones. */
   def compactPairState(spark: org.apache.spark.sql.SparkSession, table: String): Unit = {
     // repair a mid-swap crash from a prior compact before reading props
-    graft.core.Layout.recoverParkedSwap(spark, table)
+    graft.core.Commit.recoverTable(spark, table)
     val t = table + "_tombs"
     if (!spark.catalog.tableExists(t)) return
     def prop(key: String): Int = spark.sql(s"SHOW TBLPROPERTIES $table")
@@ -1398,16 +1397,11 @@ object Dedup {
         s"$table has no '$key' property — was it built by writePairState?"))
     val (k, buckets) = (prop(ShingleKProp), prop(StateBucketsProp))
     val kept = readPairState(spark, table)
-    val stage = table + "_compact"
-    graft.core.Layout.dropManagedTable(spark, stage)
+    val stage = graft.core.Commit.stageTable(spark, table)
     graft.core.Layout.writeBucketed(kept, stage, buckets, Seq("doc_id"))
     spark.sql(s"ALTER TABLE $stage SET TBLPROPERTIES (" +
       s"'$ShingleKProp'='$k', '$StateBucketsProp'='$buckets')")
-    val parked = table + "_old"
-    graft.core.Layout.dropManagedTable(spark, parked)
-    spark.sql(s"ALTER TABLE $table RENAME TO $parked")
-    spark.sql(s"ALTER TABLE $stage RENAME TO $table")
-    graft.core.Layout.dropManagedTable(spark, parked)
+    graft.core.Commit.swapTable(spark, table)
     graft.core.Layout.dropManagedTable(spark, t)
   }
 
@@ -2292,10 +2286,10 @@ object Dedup {
     // network once at materialization instead of once per round —
     // only the |V|-row label table shuffles per iteration (guide §2.4
     // shared-exchange discipline; same shape the pageRank edge cache
-    // uses). Evidence: plans/r17/cc_round_join_{helper,noprep}.txt
-    // (CcRoundPlanDump) — the round join's edge side is a bare
-    // InMemoryTableScan with the keyed layout, and gains an Exchange
-    // without it. An r17-opt edit briefly added a SECOND adjacent
+    // uses). Evidence: the committed round-join plans in
+    // plans/r17/cc_round_join_{helper,noprep}.txt — the round join's
+    // edge side is a bare InMemoryTableScan with the keyed layout, and
+    // gains an Exchange without it. An r17-opt edit briefly added a SECOND adjacent
     // repartition(src) here; CollapseRepartition folds that to this
     // exact plan (plans/r17/cc_round_join_dup.txt is node-for-node
     // identical), so it was removed as a no-op.

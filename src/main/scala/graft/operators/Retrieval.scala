@@ -308,31 +308,25 @@ object Retrieval {
   }
 
   /** Fold the tombstones into both index tables: staged rewrite of
-    * the kept rows through the SAME bucketed writers, then the
-    * park-promote-drop rename dance (`AnnIndex.compactIndex`'s
-    * ordering — NOT crash-atomic, but the data always survives under
-    * some name and a failed swap is loud + retriable), then drop the
-    * tombstone table. Probe-visible results are unchanged
+    * the kept rows through the SAME bucketed writers, then
+    * `Commit.swapTable` (not crash-atomic, but the data always survives
+    * under some name and a failed swap is loud + retriable), then drop
+    * the tombstone table. Probe-visible results are unchanged
     * (RetrievalSpec-pinned). No-op without tombstones. */
   def compactLexIndex(spark: org.apache.spark.sql.SparkSession,
                       postingsTable: String, lengthsTable: String): Unit = {
     // repair a mid-swap crash from a prior compact (either table) first
-    graft.core.Layout.recoverParkedSwap(spark, postingsTable)
-    graft.core.Layout.recoverParkedSwap(spark, lengthsTable)
+    graft.core.Commit.recoverTable(spark, postingsTable)
+    graft.core.Commit.recoverTable(spark, lengthsTable)
     val t = lexTombsTable(postingsTable)
     if (!spark.catalog.tableExists(t)) return
     val buckets = getLexBuckets(spark, postingsTable)
     def rewrite(table: String, bucketCols: Seq[String]): Unit = {
       val kept = minusLexTombstones(spark, postingsTable, spark.table(table))
-      val stage = table + "_compact"
-      graft.core.Layout.dropManagedTable(spark, stage)
+      val stage = graft.core.Commit.stageTable(spark, table)
       graft.core.Layout.writeBucketed(kept, stage, buckets, bucketCols)
       setLexBuckets(spark, stage, buckets)
-      val parked = table + "_old"
-      graft.core.Layout.dropManagedTable(spark, parked)
-      spark.sql(s"ALTER TABLE $table RENAME TO $parked")
-      spark.sql(s"ALTER TABLE $stage RENAME TO $table")
-      graft.core.Layout.dropManagedTable(spark, parked)
+      graft.core.Commit.swapTable(spark, table)
     }
     rewrite(postingsTable, Seq("tok"))
     rewrite(lengthsTable, Seq("doc_id"))

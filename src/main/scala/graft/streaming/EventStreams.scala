@@ -789,32 +789,28 @@ object EventStreams {
     * stream — transform + validate per micro-batch, then foreachBatch
     * does the upsert (≙ R17 micro-batching + R18 upsert).
     *
-    * foreachBatch is at-least-once, and the sink is NOT idempotent
-    * across replays (keyless valid rows append per run — R19 — and the
-    * quarantine is append-mode), so the batchId guards replays: a
-    * marker file records the last completed batch and re-delivered
-    * batches are skipped. The marker is written via temp file +
-    * atomic rename so a crash mid-write can never leave a torn
-    * marker that parses as "not done" and double-applies a completed
-    * batch. The marker is a LOCAL-FILESYSTEM guard: it protects
-    * restarts on the same machine with a local snapshot path only
-    * (object stores lack atomic rename). The unguarded window (crash
-    * between the two sink writes and the marker) remains — a
-    * transactional table format (Delta/Iceberg) closes both gaps for
-    * real.
+    * foreachBatch is at-least-once, and a replayed batch must not apply
+    * twice (keyless valid rows append per run — R19). Both sink writes
+    * are therefore idempotent per batch id: the quarantine rows go to
+    * `<snapshotDir>.quarantine/batch_id=<b>`, overwritten on a replay,
+    * and the snapshot generation that applies batch b records b in its
+    * `_BATCH_ID` file (skipped by Spark's reader), published by the same
+    * link flip as the rows ([[graft.etl.Pipeline.upsert]]'s crash
+    * contract). A batch whose id the live generation already records is
+    * skipped; one that crashed before its publish re-runs from the
+    * snapshot it started from. Local filesystem only, like the commit.
     * The micro-batch is cached for its two consumers (upsert +
-    * quarantine append): unpersisted, each would re-run the transform
+    * quarantine write): unpersisted, each would re-run the transform
     * and the validation parse over the source. */
   def etlStream(raw: DataFrame, cfg: graft.etl.EtlConfig, snapshotDir: String) = {
     val transformed = graft.etl.Pipeline.transform(raw, cfg)
     transformed.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val marker = new java.io.File(snapshotDir + ".batchid")
-        val done = marker.exists() &&
-          scala.util.Try(
-            java.nio.file.Files.readString(marker.toPath).trim.toLong).toOption
-            .exists(_ >= batchId)
+        val stamp = new java.io.File(snapshotDir, BatchIdFile)
+        val done = stamp.exists() &&
+          scala.util.Try(java.nio.file.Files.readString(stamp.toPath).trim.toLong)
+            .toOption.exists(_ >= batchId)
         if (!done) {
           val b = batch.persist()
           try {
@@ -822,19 +818,18 @@ object EventStreams {
             // quarantined (reference logs each dropped doc, R16),
             // never silently discarded
             val (valid, quarantine) = graft.etl.Pipeline.validate(b)
-            graft.etl.Pipeline.upsert(b.sparkSession, valid, snapshotDir)
-            quarantine.write.mode("append").parquet(snapshotDir + ".quarantine")
-            // temp + atomic rename: the marker is either absent or the
-            // complete previous/new value, never a torn prefix
-            val tmp = java.nio.file.Files.createTempFile(
-              marker.getAbsoluteFile.getParentFile.toPath, ".batchid", ".tmp")
-            java.nio.file.Files.writeString(tmp, batchId.toString)
-            java.nio.file.Files.move(tmp, marker.toPath,
-              java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-            ()
+            quarantine.write.mode("overwrite")
+              .parquet(s"$snapshotDir.quarantine/batch_id=$batchId")
+            graft.core.Commit.write(snapshotDir) { gen =>
+              graft.etl.Pipeline.writeMerged(b.sparkSession, valid, snapshotDir, gen)
+              java.nio.file.Files.writeString(
+                new java.io.File(gen, BatchIdFile).toPath, batchId.toString)
+              ()
+            }
           } finally { b.unpersist(); () }
         }
       }
   }
+
+  private val BatchIdFile = "_BATCH_ID"
 }

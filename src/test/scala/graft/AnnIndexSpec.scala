@@ -1,7 +1,7 @@
 package graft
 
 import graft.core.{Layout, Tables}
-import graft.operators.{AnnIndex, Similarity}
+import graft.operators.{AnnIndex, Dedup, Retrieval, Similarity}
 import org.apache.spark.sql.functions._
 
 /** Prebuilt ANN index artifacts: results must equal the on-the-fly
@@ -177,6 +177,64 @@ class AnnIndexSpec extends SparkSpec {
     assert(probe("lsh_rec_ref") === probe("lsh_rec"),
       "re-appended rows must be probe-visible, once")
   }
+
+  /** The parked crash above, for the other two catalog-table compactors:
+    * the live table renamed to `<parked>_old`, never promoted back. */
+  private case class ParkedCompactor(name: String, tables: Seq[String], parked: String,
+                                     buildAndDelete: () => Unit, compact: () => Unit,
+                                     probe: () => Set[Seq[Any]],
+                                     fresh: () => Set[Seq[Any]])
+
+  private def parkedCompactors = {
+    import spark.implicits._
+    val lexDocs = Seq((1L, "cat dog cat"), (2L, "cat fish"), (3L, "dog dog dog dog"),
+      (4L, "bird")).toDF("doc_id", "text")
+    val text = "spark makes big data small again with catalyst and tungsten " +
+      "columnar execution whole stage codegen adaptive query execution"
+    val stateDocs = Seq(1L -> text, 2L -> text, 3L -> (text + " extra tail tokens"),
+      4L -> "completely different text about cooking pasta with tomatoes and basil")
+      .toDF("doc_id", "text")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    Seq(
+      ParkedCompactor("BM25 lex index", Seq("lex_rec", "lex_rec_len"), "lex_rec",
+        () => {
+          Retrieval.buildLexIndex(lexDocs, "lex_rec", "lex_rec_len", buckets = 4)
+          Retrieval.deleteFromLexIndex(spark, "lex_rec", Seq(2L).toDF("doc_id"))
+        },
+        () => Retrieval.compactLexIndex(spark, "lex_rec", "lex_rec_len"),
+        () => rows(Retrieval.bm25TopKPrebuilt(spark, "lex_rec", "lex_rec_len",
+          Seq("cat", "fish"), k = 10)),
+        () => rows(Retrieval.bm25TopK(lexDocs.filter(col("doc_id") =!= 2L),
+          Seq("cat", "fish"), k = 10))),
+      ParkedCompactor("pair state", Seq("ps_rec"), "ps_rec",
+        () => {
+          Dedup.writePairState(stateDocs, "ps_rec", shingleK = 2, buckets = 2)
+          Dedup.deleteFromPairState(spark, "ps_rec", Seq(2L).toDF("doc_id"))
+        },
+        () => Dedup.compactPairState(spark, "ps_rec"),
+        () => rows(Dedup.pairsFromState(Dedup.readPairState(spark, "ps_rec"),
+          minPermille = 300)),
+        () => rows(Dedup.minHashLshPairs(stateDocs.filter(col("doc_id") =!= 2L),
+          shingleK = 2, minPermille = 300))))
+  }
+
+  for (name <- Seq("BM25 lex index", "pair state"))
+    test(s"compact recovers a crash parked mid-swap: $name") {
+      val c = parkedCompactors.find(_.name == name).get
+      c.tables.flatMap(t => Seq(t, t + "_old", t + "_compact", t + "_tombs"))
+        .foreach(Layout.dropManagedTable(spark, _))
+      try {
+        c.buildAndDelete()
+        spark.sql(s"ALTER TABLE ${c.parked} RENAME TO ${c.parked}_old")
+        c.compact()
+        assert(c.tables.forall(spark.catalog.tableExists))
+        assert(!spark.catalog.tableExists(c.parked + "_old"))
+        assert(!spark.catalog.tableExists(c.parked + "_tombs"))
+        assert(c.probe().nonEmpty)
+        assert(c.probe() === c.fresh(),
+          "a recovered-then-compacted state must answer like a fresh build")
+      } finally Dedup.releaseCaches()
+    }
 
   test("deleteFromIndex: tombstoned IVF at nprobe=nlist ≡ brute force over the survivors") {
     Seq("ivf_del", "ivf_del_c", "ivf_del_tombs")

@@ -504,6 +504,69 @@ class StreamingSpec extends SparkSpec with SlowSuite {
     assert(snapDf.count() === 1L)
     assert(snapDf.head().getAs[String]("pulse_name") === "b") // last write wins
   }
+
+  test("streaming ETL replays (crash before the publish, redelivery after it) " +
+    "leave the snapshot and the quarantine as one delivery") {
+    import java.nio.file.{Files, Path, StandardCopyOption}
+    implicit val sqlCtx = spark.sqlContext
+    val cfg = graft.etl.EtlConfig(apiKey = "k")
+    val first = Seq("""{"id": 1, "pulse_info": {"name": "a", "id": 11}}""")
+    // a keyed update, a keyless item and a malformed (scalar) payload
+    val second = Seq("""{"id": 1, "pulse_info": {"name": "b", "id": 11}}""",
+      """{"note": "keyless"}""", "5")
+    def start(input: MemoryStream[String], dir: Path) = EventStreams.etlStream(
+      input.toDF().select(col("value").as("raw_json"), lit(0).as("page")),
+      cfg, dir.resolve("snap").toString)
+      .option("checkpointLocation", dir.resolve("ck").toString).start()
+    def deliver(dir: Path, input: MemoryStream[String], rows: Seq[String]): Unit = {
+      val q = start(input, dir)
+      try { input.addData(rows); q.processAllAvailable() } finally q.stop()
+    }
+    // drop batch b's commit from the checkpoint and restart: Spark redelivers b
+    def redeliver(dir: Path, input: MemoryStream[String], b: Long): Unit = {
+      Seq(s"$b", s".$b.crc").foreach(f => Files.deleteIfExists(dir.resolve(s"ck/commits/$f")))
+      val q = start(input, dir)
+      try q.processAllAvailable() finally q.stop()
+    }
+    def state(dir: Path) = {
+      val snap = dir.resolve("snap").toString
+      (spark.read.parquet(snap).select("pulse_id", "pulse_name", "raw").collect()
+        .map(_.toString).toSeq.sorted, spark.read.parquet(snap + ".quarantine").count())
+    }
+    def liveGeneration(dir: Path) =
+      dir.resolve(Files.readSymbolicLink(dir.resolve("snap"))).normalize
+
+    // one delivery, then a redelivery of the published batch: a no-op
+    val after = Files.createTempDirectory("graft-stream-redeliver")
+    val in1 = MemoryStream[String]
+    deliver(after, in1, first)
+    deliver(after, in1, second)
+    val once = state(after)
+    assert(once._1.length === 2 && once._2 === 1L)
+    redeliver(after, in1, 1L)
+    assert(state(after) === once)
+
+    // a crash after the quarantine write, before the publish: the batch's
+    // quarantine partition is on disk, its generation is built but the
+    // link still names the generation before it, the batch is uncommitted
+    val crashed = Files.createTempDirectory("graft-stream-crash")
+    val in2 = MemoryStream[String]
+    deliver(crashed, in2, first)
+    val before = liveGeneration(crashed)
+    val saved = Files.createTempDirectory("graft-stream-saved").resolve("gen")
+    Files.walk(before).forEach(p => Files.copy(p, saved.resolve(before.relativize(p).toString)))
+    deliver(crashed, in2, second)
+    Files.walk(saved).forEach { p =>
+      val d = before.resolve(saved.relativize(p).toString)
+      if (!Files.exists(d)) Files.copy(p, d)
+    }
+    val tmp = crashed.resolve("snap-tmp-link")
+    Files.createSymbolicLink(tmp, crashed.relativize(before))
+    Files.move(tmp, crashed.resolve("snap"), StandardCopyOption.ATOMIC_MOVE)
+    assert(spark.read.parquet(crashed.resolve("snap").toString).count() === 1L)
+    redeliver(crashed, in2, 1L)
+    assert(state(crashed) === once)
+  }
   test("a bridging event chains the late run into the open session (no over-split)") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[EventStreams.UserStamped]
