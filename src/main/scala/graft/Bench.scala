@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.Tables
+import graft.operators.{Clustering, Dedup, Graph, Similarity}
 
 /** Bench harness (driver contract): runs every declared query on
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line. One untimed warm-up pass
@@ -9,7 +11,7 @@ import org.apache.spark.sql.SparkSession
   *
   * Modes:
   *  - default: one shared JVM, warm-up pass then best-of-3(+2) per
-  *    query, with a clearCache + System.gc() + settle pause BETWEEN
+  *    query, with a Harness.release + System.gc() + settle pause BETWEEN
   *    queries — round 10's driver artifact showed 24 queries with >3×
   *    rep spread on identical code purely from cross-query heap/cache
   *    pressure in the shared JVM; the inter-query barrier is the cheap
@@ -21,6 +23,11 @@ import org.apache.spark.sql.SparkSession
   *    shared mode would and reports on a marker line. ~10 s session
   *    startup per query, so this is the bisect/scale-probe tool, not
   *    the per-commit loop.
+  *
+  * Board queries come from `SparkEntry.queries`; the named scale
+  * `probes` below run under the same protocol when SPARK_GRAFT_ONLY
+  * names them, e.g.
+  * `SPARK_GRAFT_ISOLATE=1 SPARK_GRAFT_ONLY=k_core runMain graft.Bench`.
   *
   * Artifacts: a FULL board run writes BENCH_FULL.json; a tiered or
   * SPARK_GRAFT_ONLY-filtered run writes BENCH_scratch.json instead so a
@@ -43,7 +50,7 @@ object Bench {
     * board run. The list is PINNED (not derived from a moving
     * artifact) so the measurement protocol itself cannot drift with
     * the numbers; additions belong here when a new query lands in the
-    * tier. SPARK_GRAFT_HEAVY_ISOLATE=0 restores the old behavior. */
+    * tier. */
   private val HeavyTier: Set[String] = Set(
     "x216_cluster_quality", "x291_cluster_refresh",
     "x262_band_recall_curve", "x230_mutual_topk_ann", "x100_triangles",
@@ -76,58 +83,113 @@ object Bench {
     "x210_wcontain_prefix" -> 1.410,
     "x236_pair_jac_hist" -> 1.324)
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+  /** Named scale probes, run by name only (`SPARK_GRAFT_ONLY`), never
+    * as part of a full or core board. They back BENCH_NOTES' ×10/×100
+    * ladders for operators whose BOARD form is deliberately
+    * scale-pinned. Example: x329 certifies `semanticDedup`'s auto-k on
+    * a FIXED 320-row slice (so the sizing rule is oracle-replayable at
+    * every sf); the scale question — "does auto-k keep the full-corpus
+    * form in the gentle tier at ×100?" — needs the UNpinned form over
+    * the whole embeddings table, which no oracle can carry (k = ⌊√n⌋
+    * changes per corpus). No key may equal a `SparkEntry.queries` key. */
+  val probes: Map[String, (SparkSession, String) => DataFrame] = Map(
+    // the x329 question at corpus scale: auto-k (k = ⌊√n⌋) SemDeDup
+    // over the FULL embeddings table — at a fixed k this is the one
+    // operator the r15 verdict marked weak
+    "semdedup_autok" -> ((spark, d) =>
+      Clustering.semanticDedup(Tables.embeddings(spark, d),
+        idCol = "vec_id", vecCol = "embedding", k = 0, iterations = 2,
+        minPermille = 900L)),
+    // the fixed-k comparison anchor (the x73 board operating point)
+    "semdedup_k16" -> ((spark, d) =>
+      Clustering.semanticDedup(Tables.embeddings(spark, d),
+        idCol = "vec_id", vecCol = "embedding", k = 16, iterations = 2,
+        minPermille = 900L)),
+    // x330's scale contract, two honest operating points. A FIXED RATE
+    // (everyN constant) is ~linear in the corpus where the full mutual
+    // operator (x230) is n^1.5 ...
+    "mutual_sampled" -> ((spark, d) =>
+      Similarity.mutualTopKAnnSampled(Tables.embeddings(spark, d), k = 8, everyN = 4)),
+    // ... and the AUDIT point, everyN scaled so the sample COUNT stays
+    // ~500 (everyN 4/40/400 at ×1/×10/×100), is ~O(|S|·k·√n),
+    // sub-linear: how the operator is meant to be driven at 100 TB
+    // (estimate density from a bounded sample)
+    "mutual_sampled_audit" -> { (spark, d) =>
+      val emb = Tables.embeddings(spark, d)
+      Similarity.mutualTopKAnnSampled(emb, k = 8,
+        everyN = math.max(4L, emb.count() / 500).toInt)
+    },
+    // stage isolation for the autok reading: the k-means bin alone,
+    // at the same auto-sized k the full operator would pick
+    "kmeans_autok" -> { (spark, d) =>
+      val emb = Tables.embeddings(spark, d)
+      val n = emb.count()
+      val k = math.min(n, math.max(16L, math.sqrt(n.toDouble).toLong)).toInt
+      Clustering.kmeans(emb, "vec_id", "embedding", k, 2)
+    },
+    // the FULL x230 operator (auto-sized nlist ≈ √n): the declared
+    // n^1.5 contract mutual_sampled is the escape from
+    "mutual_full" -> ((spark, d) =>
+      Similarity.mutualTopKAnn(Tables.embeddings(spark, d), k = 8)),
+    // the text-tier flagship at full corpus: the x07 MinHash-LSH
+    // pipeline at its board operating point (banded equi-join, exact
+    // verification) — the dedup ladder's anchor
+    "minhash_pairs" -> ((spark, d) =>
+      Dedup.minHashLshPairs(Tables.documents(spark, d),
+        shingleK = 2, numHashes = 16, rowsPerBand = 4, minPermille = 300)),
+    // the closure-family flagship (x205's operating point): mining +
+    // the connected-components fixpoint + the weight projection
+    "loss_weights" -> ((spark, d) =>
+      Dedup.clusterLossWeights(Tables.documents(spark, d),
+        Dedup.minHashLshPairs(Tables.documents(spark, d),
+          shingleK = 2, numHashes = 16, rowsPerBand = 4, minPermille = 300))),
+    // the peel-family flagship (x162's operating point): mining + the
+    // 4-round 2-core peel — the row behind the r17 finding that the
+    // per-round degree aggregation is ALREADY deduped by AQE stage
+    // reuse (see OPTIMIZATION_r17.md)
+    "k_core" -> ((spark, d) =>
+      Graph.kCore(
+        Dedup.minHashLshPairs(Tables.documents(spark, d),
+          shingleK = 2, minPermille = 300), k = 2, rounds = 4)))
 
+  /** The board plus the probes: every name SPARK_GRAFT_ONLY may pick. */
+  private[graft] lazy val runnable = SparkEntry.queries ++ probes
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = Harness.sfDir()
     // tier flag: the full board takes ~35 min wall-clock at sf0.1 — too
     // slow for per-commit iteration. SPARK_GRAFT_TIER=core runs the
     // declared q-board (the driver's 22-query oracle contract, the
     // per-commit smoke tier); default/"full" runs everything.
-    val tier = sys.env.getOrElse("SPARK_GRAFT_TIER", "full")
-    require(tier == "full" || tier == "core",
-      s"SPARK_GRAFT_TIER must be core|full, got $tier")
-    // optional subset filter for local iteration, e.g.
-    // SPARK_GRAFT_ONLY=x07_minhash_lsh,x10_ann_lsh
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    // a typo'd (or leaked) ONLY var silently shrinking the run would
-    // print a legitimate-looking total — make subsets loud, and fail on
-    // names that match nothing rather than benching the wrong set
-    only.foreach { o =>
-      val unknown = o -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names not in SparkEntry.queries: ${unknown.toSeq.sorted.mkString(", ")}")
-      System.err.println(
-        s"[bench] SPARK_GRAFT_ONLY active: ${o.size} of ${SparkEntry.queries.size} queries")
+    val tier = Harness.tier()
+    val only = Harness.subset(runnable.keySet)
+    val board = SparkEntry.queries.keys.filter(n => tier == "full" || n.startsWith("q"))
+    val names = only match {
+      case None => board.toSeq.sorted
+      case Some(o) => (board ++ probes.keys).filter(o).toSeq.sorted
     }
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => tier == "full" || n.startsWith("q"))
-      .filter(n => only.forall(_.contains(n)))
     if (tier == "core") System.err.println(
       s"[bench] TIER=core: ${names.size} of ${SparkEntry.queries.size} queries")
 
-    val isChild = sys.env.get("SPARK_GRAFT_CHILD").contains("1")
-    val isolate = !isChild &&
-      sys.env.get("SPARK_GRAFT_ISOLATE").exists(v => v == "1" || v == "true")
+    val isChild = Harness.isChild()
+    val isolate = !isChild && Harness.isolate()
 
     // full-board shared runs isolate the pinned heavy tier (see
     // HeavyTier's scaladoc); subset/tiered runs keep the plain shared
     // path so quick iteration costs no JVM spin-ups
-    val heavyIsolate = !isChild && !isolate && tier == "full" &&
-      only.isEmpty &&
-      !sys.env.get("SPARK_GRAFT_HEAVY_ISOLATE").contains("0")
+    val fullBoard = tier == "full" && only.isEmpty
+    val heavyIsolate = !isChild && !isolate && fullBoard
     val timed: Seq[(String, Double, Seq[Double])] =
       if (isolate) names.map(n => runIsolated(n, sfDir))
       else if (heavyIsolate) {
         val (heavy, light) = names.partition(HeavyTier)
         System.err.println(
           s"[bench] heavy tier: ${heavy.size} queries in fresh JVMs")
-        val byName = (runShared(light, sfDir, cpus) ++
+        val byName = (runShared(light, sfDir) ++
           heavy.map(n => runIsolated(n, sfDir))).map(t => t._1 -> t).toMap
         names.map(byName) // original order: the artifact stays stable
       }
-      else runShared(names, sfDir, cpus)
+      else runShared(names, sfDir)
 
     if (isChild) {
       // machine-readable per-query report for the isolate-mode parent;
@@ -148,10 +210,10 @@ object Bench {
       // committed artifact — r15's BENCH_core.json carried r13 numbers
       // for two rounds before its retirement; scale probes live in
       // BENCH_sf1.json).
-      val fullBoard = tier == "full" && only.isEmpty
-      val outPath = sys.env.getOrElse("SPARK_GRAFT_OUT",
+      val explicitOut = Harness.out()
+      val outPath = explicitOut.getOrElse(
         if (fullBoard) "BENCH_FULL.json" else "BENCH_scratch.json")
-      if (!fullBoard && !sys.env.contains("SPARK_GRAFT_OUT"))
+      if (!fullBoard && explicitOut.isEmpty)
         System.err.println(s"[bench] subset run -> $outPath (BENCH_FULL.json untouched)")
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(outPath),
@@ -163,42 +225,29 @@ object Bench {
 
   /** Shared-JVM measurement of `names`: one warm-up pass, then
     * best-of-3 (+2 spaced retries for slow/inflated queries) each, with
-    * an inter-query cache-drop + GC + settle barrier. */
-  private def runShared(names: Seq[String], sfDir: String,
-                        cpus: Int): Seq[(String, Double, Seq[Double])] = {
-    // the library's own session factory: extensions (native functions +
-    // AntiJoinRewrite) active, so the bench measures the shipped config
-    val spark = graft.core.GraftSession.local(cpus)
-    graft.core.GraftSession.muteBoundedWindowWarning()
-    val settleMs = sys.env.getOrElse("SPARK_GRAFT_SETTLE_MS", "250").toLong
+    * a release after every run and an inter-query GC + settle barrier. */
+  private def runShared(names: Seq[String],
+                        sfDir: String): Seq[(String, Double, Seq[Double])] = {
+    val spark = Harness.session()
     // warm-up: JIT + codegen cache + parquet footer cache
     names.foreach { n =>
-      try SparkEntry.queries(n)(spark, sfDir).count()
+      try runnable(n)(spark, sfDir).count()
       catch { case _: Throwable => () }
+      // dedup shingle/token tables persist per CALL, so stale entries
+      // are dead weight that would spill to disk across the passes
+      finally Harness.release(spark, blocking = false)
     }
-    // drop caches the warm-up pass accumulated (dedup shingle/token
-    // tables persist per CALL, so stale entries are dead weight that
-    // would spill to disk across 4×|queries| invocations)
-    graft.operators.Dedup.releaseCaches()
-    spark.catalog.clearCache()
     // best of three timed passes per query — the host shows up to ±2.5×
     // run-to-run jitter on sub-second queries (noisy-neighbor CPU), and
     // min-of-3 tracks achievable latency much more stably than one shot.
     // Failures report -1, not a (fast-looking) elapsed time.
     def timeOne(n: String): Double = {
       val t0 = System.nanoTime()
-      try { SparkEntry.queries(n)(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
+      try { runnable(n)(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
       catch { case _: Throwable => -1.0 }
       // blocking: cleanup must FINISH outside the clock, not drift into
       // the next query's timed window as async block-removal work
-      finally {
-        graft.operators.Dedup.releaseCaches(blocking = true)
-        // belt-and-braces: drop ANY block a query left persisted
-        // (localCheckpoints, ML-internal caches) so no query's storage
-        // leaks into the next one's memory budget
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-      }
+      finally Harness.release(spark, blocking = true)
     }
     // per-REP barrier: one rep's garbage (LSH mining allocates heavily)
     // can land a multi-second GC pause inside the NEXT rep's clock —
@@ -206,7 +255,7 @@ object Bench {
     // and settle briefly OUTSIDE the clock before every measurement.
     def rep(n: String): Double = {
       System.gc()
-      if (settleMs > 0) Thread.sleep(settleMs.min(150))
+      Thread.sleep(150)
       timeOne(n)
     }
     // SPARK_GRAFT_REPS shrinks the per-query repetition budget for
@@ -214,17 +263,15 @@ object Bench {
     // not need best-of-5 to tell sub-linear from quadratic); default 3
     // keeps the committed protocol. Values < 3 also disable the two
     // spaced retries.
-    val nReps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    require(nReps >= 1, s"SPARK_GRAFT_REPS ($nReps) must be >= 1")
+    val nReps = Harness.reps()
     val timed = names.map { n =>
       // inter-query barrier: round 10's driver run showed 24 queries
       // with >3× rep spread (vs 2 in a quiet environment) on identical
-      // code — accumulated heap garbage and cached blocks from query N
-      // billing query N+1. Clear everything, force a full collection,
-      // and give the JVM a settle window OUTSIDE any clock.
-      spark.catalog.clearCache()
+      // code — accumulated heap garbage from query N billing query N+1
+      // (each rep already released its blocks). Force a full
+      // collection and give the JVM a settle window OUTSIDE any clock.
       System.gc()
-      if (settleMs > 0) Thread.sleep(settleMs)
+      Thread.sleep(250)
       val ts = Seq.fill(nReps)(rep(n))
       var best = ts.min
       var extra = Seq.empty[Double]
@@ -268,15 +315,13 @@ object Bench {
     System.err.println(s"[bench] isolate: $n")
     val proc = pb.start()
     // drain stderr concurrently so a chatty child can't deadlock on a
-    // full pipe; keep a bounded tail to surface only on failure (or all
-    // of it under SPARK_GRAFT_CHILD_VERBOSE=1) — a 20-query probe would
-    // otherwise relay thousands of Spark startup INFO lines per child
-    val verbose = sys.env.get("SPARK_GRAFT_CHILD_VERBOSE").contains("1")
+    // full pipe; keep a bounded tail to surface only on failure — a
+    // 20-query probe would otherwise relay thousands of Spark startup
+    // INFO lines per child
     val errTail = new java.util.concurrent.ConcurrentLinkedDeque[String]()
     val errDrain = new Thread(() => {
       val src = scala.io.Source.fromInputStream(proc.getErrorStream)
       try src.getLines().foreach { l =>
-        if (verbose) System.err.println(s"[child:$n] $l")
         errTail.addLast(l)
         while (errTail.size > 50) errTail.removeFirst()
       } finally src.close()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.etl.{EtlConfig, Pipeline}
 
 /** End-to-end ETL pipeline demo (the reference's `python
@@ -25,13 +24,7 @@ object EtlDemo {
       })
     val snapshotDir = positional.lift(1).getOrElse(
       java.nio.file.Files.createTempDirectory("graft-etl-demo").toString + "/snapshot")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     val cfg = EtlConfig.fromEnv(sys.env.toMap.updated("OTX_API_KEY",
       sys.env.getOrElse("OTX_API_KEY", "demo-key")))

@@ -11,12 +11,8 @@ import java.nio.file.{Files, Paths}
 object ExplainDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix, names) = args
-    val qs = names.split(',').map(_.trim).filter(_.nonEmpty)
-    val unknown = qs.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val spark = graft.core.GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
-    graft.core.GraftSession.muteBoundedWindowWarning()
+    val qs = Harness.pick(names, SparkEntry.queries.keySet, "ExplainDump query list")
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     qs.foreach { n =>
       try {
@@ -28,7 +24,7 @@ object ExplainDump {
       } catch {
         case e: Throwable =>
           System.err.println(s"[explain] $n failed: ${e.getMessage}")
-      } finally graft.operators.Dedup.releaseCaches()
+      } finally Harness.release(spark, blocking = false)
     }
     spark.stop()
   }

@@ -226,14 +226,13 @@ object ScaleUp {
       // corpus any query can read. This is the ONLY valid way to build
       // a ×100 text corpus — see scaleDocumentsText's scaladoc.
       // An optional 5th arg restricts the table set (comma list) —
-      // the ×1000 Probe ladder reads only documents+embeddings, and
+      // the ×1000 probe ladder reads only documents+embeddings, and
       // events at ×1000 is 100M rows of pure write cost.
       require(replicas >= 1, s"replicas ($replicas) must be >= 1")
       val only: Set[String] =
         if (args.length > 4) args(4).split(',').map(_.trim).toSet
         else Set("documents", "embeddings", "events", "star")
-      val spark = graft.core.GraftSession.local(
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+      val spark = Harness.session()
       if (only("documents"))
         scaleDocumentsText(spark.read.parquet(s"$src/documents.parquet"), replicas)
           .repartition(32)
@@ -260,8 +259,7 @@ object ScaleUp {
     require(replicas >= 1 && replicas <= 26,
       s"replicas ($replicas) must be in [1, 26] — one Caesar rotation each" +
       s" (use the `text` mode for larger text-tier decades)")
-    val spark = graft.core.GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val spark = Harness.session()
     scaleDocuments(spark.read.parquet(s"$src/documents.parquet"), replicas)
       .repartition(32)
       .write.mode("overwrite").parquet(s"$dst/documents.parquet")

@@ -16,7 +16,7 @@ import graft.streaming.EventStreams
   * a capacity plan actually needs: state size decides whether the
   * 100 TB deployment fits executor memory or needs RocksDB).
   *
-  * Method: the corpus is staged once (untimed) as `nFiles` parquet
+  * Method: the corpus is staged once (untimed) as `NFiles` parquet
   * files; each path streams it via `maxFilesPerTrigger = 2` (so state
   * genuinely carries across micro-batches — a single mega-batch would
   * measure the batch engine, not the streaming path), sinks to `noop`
@@ -32,6 +32,7 @@ import graft.streaming.EventStreams
   * one-line JSON.
   */
 object StreamBench {
+  private val NFiles = 16
 
   private def tmpDir(tag: String): String = {
     val d = java.nio.file.Files.createTempDirectory(s"graft_sb_$tag")
@@ -88,18 +89,18 @@ object StreamBench {
     * runs the untimed startup pass (first scale only — later scales
     * reuse the hot session/codegen, which is exactly the comparable
     * condition a per-scale ladder wants). */
-  private def runScale(spark: SparkSession, sfDir: String, nFiles: Int,
+  private def runScale(spark: SparkSession, sfDir: String,
                        warm: Boolean): Seq[PathResult] = {
     import spark.implicits._
 
-    // ---- staging (untimed): normalized corpus as nFiles parquet files
+    // ---- staging (untimed): normalized corpus as NFiles parquet files
     val evStage = tmpDir("events")
     graft.core.Tables.events(spark, sfDir)
-      .repartition(nFiles).write.mode("overwrite").parquet(evStage)
+      .repartition(NFiles).write.mode("overwrite").parquet(evStage)
     val docStage = tmpDir("docs")
     val docs = graft.core.Tables.documents(spark, sfDir)
     docs.filter(pmod(col("doc_id"), lit(2L)) === 1L)
-      .repartition(nFiles).write.mode("overwrite").parquet(docStage)
+      .repartition(NFiles).write.mode("overwrite").parquet(docStage)
     // history side of the stream-static anti join: the even half's
     // fingerprint store (static, broadcast-eligible at this size;
     // bucketed-on-fp at corpus scale per the operator's scaladoc)
@@ -173,33 +174,19 @@ object StreamBench {
     }.mkString(",\n")
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_OUT", "BENCH_streaming.json")
-    val nFiles = sys.env.getOrElse("SPARK_GRAFT_STREAM_FILES", "16").toInt
+    val sfDir = Harness.sfDir()
+    val outPath = Harness.out().getOrElse("BENCH_streaming.json")
     // the scale ladder (the ×10/×100 decade evidence the batch tiers
-    // already carry): SPARK_GRAFT_STREAM_SCALES="x10=/tmp/sf1,x100=/tmp/sf10"
-    // appends a per-scale section after the base run — same paths, same
-    // protocol, one hot session
-    val scales: Seq[(String, String)] =
-      sys.env.get("SPARK_GRAFT_STREAM_SCALES").toSeq
-        .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
-        .map { kv =>
-          // a bare `x10` (or a stray `=dir`) must fail with the entry
-          // named, not an opaque MatchError from the extractor
-          val parts = kv.split("=", 2)
-          require(parts.length == 2 && parts(0).nonEmpty && parts(1).nonEmpty,
-            s"SPARK_GRAFT_STREAM_SCALES entry '$kv' is malformed — expected label=dir")
-          (parts(0), parts(1))
-        }
-    val spark = graft.core.GraftSession.local(cpus)
-    graft.core.GraftSession.muteBoundedWindowWarning()
+    // already carry): a per-scale section after the base run — same
+    // paths, same protocol, one hot session
+    val scales = Harness.streamScales()
+    val spark = Harness.session()
 
-    val results = runScale(spark, sfDir, nFiles, warm = true)
+    val results = runScale(spark, sfDir, warm = true)
     val total = results.map(_.wall).sum
     val scaleResults = scales.map { case (label, dir) =>
       System.err.println(s"[streambench] scale $label: $dir")
-      (label, dir, runScale(spark, dir, nFiles, warm = false))
+      (label, dir, runScale(spark, dir, warm = false))
     }
     val scalesJson =
       if (scaleResults.isEmpty) ""
@@ -208,7 +195,7 @@ object StreamBench {
       }.mkString("\n  \"scales\":{\n", ",\n", "\n  },")
     val json =
       f"""{"metric":"streaming_throughput","unit":"rows_per_sec","sf":"$sfDir",
-  "method":"staged $nFiles-file parquet stream, maxFilesPerTrigger=2 (8 micro-batches), noop sink, clock start->processAllAvailable, state peaks + per-data-batch duration p50/p99 from StreamingQueryProgress",
+  "method":"staged $NFiles-file parquet stream, maxFilesPerTrigger=2 (8 micro-batches), noop sink, clock start->processAllAvailable, state peaks + per-data-batch duration p50/p99 from StreamingQueryProgress",
   "total_wall_sec":$total%.3f,$scalesJson
   "paths":{
 ${pathsJson(results, "    ")}

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.core.{GraftSession, Layout, Tables}
+import graft.core.{Layout, Tables}
 import graft.operators.{AsOfJoin, Dedup, Similarity, Skew}
 
 /** Executable tour of the library surface — end-to-end smoke of every
@@ -11,7 +11,7 @@ import graft.operators.{AsOfJoin, Dedup, Similarity, Skew}
 object Tour {
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    val spark = Harness.session()
 
     // native functions through the extensions-configured session
     val cos = spark.sql(

@@ -1,28 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    // library session factory: same config the engine ships with
-    val spark = graft.core.GraftSession.local(cpus)
-    graft.core.GraftSession.muteBoundedWindowWarning()
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     // optional subset filter for local iteration (same contract as
     // Bench): dump AND oracle json shrink together so selfcheck stays
     // consistent. The driver never sets this — full board by default.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { o =>
-      val unknown = o -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names not in SparkEntry.queries: ${unknown.toSeq.sorted.mkString(", ")}")
-      System.err.println(
-        s"[verify] SPARK_GRAFT_ONLY active: ${o.size} of ${SparkEntry.queries.size} queries")
-    }
+    val only = Harness.subset(SparkEntry.queries.keySet)
     def keep(name: String): Boolean = only.forall(_.contains(name))
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -30,7 +18,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      finally graft.operators.Dedup.releaseCaches() // per-call caches, no reuse across queries
+      finally Harness.release(spark, blocking = false)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -38,9 +38,9 @@ object GraftSession {
     s
   }
 
-  /** Silence WindowExec's "No Partition Defined" warning — for the
-    * artifact-producing mains (Bench/Verify/Tour) ONLY, not the
-    * library default. Every partition-less window the board plans runs
+  /** Silence WindowExec's "No Partition Defined" warning — for every
+    * main, via `Harness.session`, and the test JVM; not the library
+    * default. Every partition-less window the board plans runs
     * over a BOUNDED table by audited construction (≤|shingleKs|-row
     * planner reports, value spines, bucket summaries, top-k cuts — the
     * x126/x190 two-level pattern; LayoutSpec and PlanSpec guard the

@@ -14,10 +14,18 @@ class PlanSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString
 
   test("q03: both predicates push down to the parquet scan") {
-    val p = plan(Relational.q03FilterPred(spark, sf))
-    assert(p.contains("PushedFilters: [IsNotNull(l_quantity), IsNotNull(l_returnflag), GreaterThan(l_quantity,45.0)"))
-    assert(p.contains("ReadSchema: struct<l_quantity:double,l_returnflag:string>"),
-      "scan must be pruned to exactly the two referenced columns")
+    import org.apache.spark.sql.functions.{col, count, lit}
+    // the same query over an explicit schema: passing one loses
+    // neither pushdown nor pruning (the Tables scaladoc relies on this)
+    val path = s"$sf/lineitem.parquet"
+    val explicit = spark.read.schema(spark.read.parquet(path).schema).parquet(path)
+      .filter(col("l_quantity") > 45.0 && col("l_returnflag") === "R")
+      .agg(count(lit(1)).as("n"))
+    for (p <- Seq(plan(Relational.q03FilterPred(spark, sf)), plan(explicit))) {
+      assert(p.contains("PushedFilters: [IsNotNull(l_quantity), IsNotNull(l_returnflag), GreaterThan(l_quantity,45.0)"))
+      assert(p.contains("ReadSchema: struct<l_quantity:double,l_returnflag:string>"),
+        "scan must be pruned to exactly the two referenced columns")
+    }
   }
 
   test("q06: both dimension joins broadcast — zero shuffles before the agg") {

@@ -80,3 +80,5 @@ for name in sorted(os.listdir(outdir)):
         print(f'ROWS {name}: {n}')
 print(f'\n{ok} ok, {fail} fail, {warn} warn '
       '(warn = passed with a bounded ULP tolerance the driver hash would not grant)')
+# a FAIL or ERR row fails the run, so a multi-scale sweep can gate on it
+sys.exit(1 if fail else 0)
