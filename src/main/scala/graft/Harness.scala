@@ -97,14 +97,15 @@ object Harness {
     spark
   }
 
-  /** Drop everything a query left held: the `Dedup` cache and
-    * checkpoint registry, then ANY persistent RDD (localCheckpoints,
-    * ML-internal caches), then the SQL cache. Call only after the
-    * query's results are materialized: checkpoint blocks are the only
-    * copy of their data. `blocking = true` waits for block removal, so
-    * the cost lands before whatever runs next, not inside its clock. */
+  /** Drop everything a query left held: every persistent RDD
+    * (localCheckpoints, ML-internal caches), then the SQL cache. An
+    * operator's blocks stay readable while the DataFrame it returned
+    * is reachable and until this release, which frees a long-lived
+    * session; call it only after the query's results are materialized:
+    * checkpoint blocks are the only copy of their data. `blocking =
+    * true` waits for block removal, so the cost lands before whatever
+    * runs next, not inside its clock. */
   def release(spark: SparkSession, blocking: Boolean): Unit = {
-    graft.operators.Dedup.releaseCaches(blocking)
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking))
     spark.catalog.clearCache()
   }

@@ -71,7 +71,7 @@ object Tour {
     val sem = graft.operators.Clustering.semanticDedup(
       Tables.embeddings(spark, sf), "vec_id", "embedding", k = 8, iterations = 2)
     println(s"[tour] semantic dedup survivors=${sem.filter(col("keep_id") === col("vec_id")).count()}")
-    Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
 
     // O(delta) aggregate refresh: split state merge == full aggregation
     val orders = Tables.orders(spark, sf)
@@ -93,7 +93,7 @@ object Tour {
 
     // cross-corpus near-dup decontamination (bench = a tiny self-slice)
     println(s"[tour] cross near-dups=${Dedup.crossNearDup(docs, docs.filter(col("doc_id") < 5), minPermille = 900).count()}")
-    Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
 
     // normalized fuzzy-exact dedup
     println(s"[tour] normalized-dedup groups=${Dedup.exactNormalized(docs).count()}")
@@ -123,18 +123,18 @@ object Tour {
     val pr7 = Dedup.minHashLshPairs(docs, shingleK = 2, minPermille = 300)
     println(s"[tour] triangle nodes=${graft.operators.Graph.triangleCounts(pr7).count()}")
     println(s"[tour] graph summary=${graft.operators.Graph.graphSummary(pr7).count()}")
-    Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     println(s"[tour] weighted sample=${graft.operators.Sampling.weightedSample(docs.select(col("doc_id"), col("n_chars")), "doc_id", "n_chars", 20).count()}")
     println(s"[tour] weighted containment pairs=${Dedup.weightedContainmentPairs(docs).count()}")
-    Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     println(s"[tour] feature-hash vectors=${graft.operators.TextAnalysis.featureHash(docs).count()}")
     println(s"[tour] sketch calibration pairs=${Dedup.jaccardEstimateReport(docs, minPermille = 300).count()}")
-    Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     val csplit = graft.operators.Sampling.clusterSplitAssign(docs,
       Dedup.minHashLshPairs(docs, shingleK = 2, minPermille = 300),
       "doc_id", Seq("train" -> 800L, "val" -> 100L, "test" -> 100L))
     println(s"[tour] cluster-split rows=${csplit.count()}")
-    Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
 
     // behavioral analytics over the event log
     val ev = Tables.events(spark, sf)
@@ -195,7 +195,7 @@ object Tour {
         .otherwise(lit("U")).as("op"), col("event_type"))
     println(s"[tour] cdc live keys=${graft.operators.Snapshot.cdcApply(cdcLog, "user_id", "ts_us", "event_id", "op", Seq("event_type")).count()}")
     println(s"[tour] graph local clustering nodes=${graft.operators.Graph.localClustering(pr7).count()}")
-    Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     println(s"[tour] winnowing docs=${graft.operators.TextAnalysis.winnowingFingerprints(docs).count()}")
     println(s"[tour] basket pairs=${graft.operators.Behavior.basketPairs(Tables.lineitem(spark, sf), "l_orderkey", "l_partkey", minCount = 2L).count()}")
     println(s"[tour] rfm segments=${graft.operators.Behavior.rfmSegments(Tables.orders(spark, sf), "o_custkey", "o_orderdate", graft.queries.Relational.cents(col("o_totalprice"))).count()}")
@@ -214,7 +214,7 @@ object Tour {
     // budget, LM retrieval, tail index
     println(s"[tour] lpa communities=${graft.operators.Graph.labelPropagation(pr7).count()}")
     println(s"[tour] 2-core nodes=${graft.operators.Graph.kCore(pr7).count()}")
-    Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     println(s"[tour] centroid eval cells=${graft.operators.Clustering.nearestCentroidEval(Tables.embeddings(spark, sf), "vec_id", "embedding", "label").count()}")
     println(s"[tour] chi-square rows=${graft.operators.Profiling.chiSquare(ev, col("event_type"), (weekday(col("ts").cast("date")) + 1).cast("long")).count()}")
     println(s"[tour] deletion-join pairs=${graft.operators.Linkage.deletionJoin(cust7, probe7, "c_custkey", "c_name").count()}")
@@ -253,7 +253,7 @@ object Tour {
     println(s"[tour] freshness groups=${graft.operators.Profiling.freshnessReport(ev, "event_type", "ts", staleSecs = 3600L).count()}")
     val leakPairs = Dedup.minHashLshPairs(docs, shingleK = 2, minPermille = 300)
     println(s"[tour] split leakage cells=${graft.operators.Sampling.splitLeakageAudit(leakPairs, Seq("train" -> 900L, "val" -> 50L, "test" -> 50L)).count()}")
-    Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     println(s"[tour] skyline points=${graft.operators.Skyline.frontier2d(Tables.orders(spark, sf).select(graft.queries.Relational.cents(col("o_totalprice")).as("x"), datediff(to_date(col("o_orderdate")), to_date(lit("1995-01-01"))).cast("long").as("y")), "x", "y", 100000L).count()}")
     println(s"[tour] emd micro=${graft.operators.Profiling.emd1d(docs, "lang", "n_chars", "en", "fr").select("emd_micro").head().getLong(0)}")
     println(s"[tour] profile diff cols=${graft.operators.Profiling.profileDiff(docs, docs.limit(50), Seq("doc_id", "lang")).count()}")
@@ -268,7 +268,7 @@ object Tour {
     val standing = Dedup.pairsFromState(pstate, minPermille = 300)
     println(s"[tour] pair-state standing pairs=${standing.count()}")
     println(s"[tour] pair-state arrivals=${Dedup.pairsAppend(pstate, halfB, shingleK = 2, minPermille = 300).count()}")
-    Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     val grPairs = graft.operators.Linkage.deletionJoin(
       Tables.customer(spark, sf), Tables.customer(spark, sf)
         .select((col("c_custkey") + 1000000L).as("c_custkey"),
@@ -276,7 +276,7 @@ object Tour {
       "c_custkey", "c_name")
       .select(col("base_id").as("da"), col("probe_id").as("db"))
     println(s"[tour] golden records=${graft.operators.Linkage.goldenRecord(Tables.customer(spark, sf), "c_custkey", grPairs, Seq("c_name", "c_mktsegment")).count()}")
-    Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
 
     // round 14 continuation: decorrelation tier, pipeline ops, layout
     println(s"[tour] Q21 sole-late suppliers=${graft.queries.Relational.soleLateSuppliers(spark, sf).count()}")

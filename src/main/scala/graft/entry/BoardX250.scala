@@ -416,8 +416,8 @@ private[graft] object BoardX250 {
       // cache: its standing-label fixpoint already fills the
       // pairsFromState projection cache sequentially, and the extra
       // cache layer measured as a net loss there.)
-      val baseState = Dedup.registerCache(Dedup.pairState(
-        docs.filter(pmod(col("doc_id"), lit(2L)) === 0L), shingleK = 2))
+      val baseState = Dedup.pairState(
+        docs.filter(pmod(col("doc_id"), lit(2L)) === 0L), shingleK = 2).persist()
       Dedup.pairsFromState(baseState, minPermille = 300)
         .unionByName(Dedup.pairsAppend(baseState,
           docs.filter(pmod(col("doc_id"), lit(2L)) === 1L),

@@ -411,23 +411,25 @@ private[graft] object BoardX300 {
       // each stage boundary is referenced 2-3 times downstream (gated:
       // exact-dedup build + semi join + restore; exd: pair mining +
       // both anti-join sides; surv: restore + pack + the source join) —
-      // materialize each ONCE so a stage never re-executes the whole
-      // upstream chain per reference (uncached, the survivor set alone
-      // re-ran gate→exact→mining→closure three times)
+      // materialize each ONCE, eagerly, so a stage never re-executes
+      // the whole upstream chain per reference (uncached, the survivor
+      // set alone re-ran gate→exact→mining→closure three times; a lazy
+      // persist leaves concurrently-scheduled consumers racing to fill
+      // it)
       val docs = Tables.documents(s, d)
-      val gated = graft.operators.Dedup.materializedStage(docs.join(
+      val gated = docs.join(
         TextAnalysis.qualityGate(docs).filter(col("keep") === 1)
           .select("doc_id"),
-        Seq("doc_id"), "left_semi"))
-      val exd = graft.operators.Dedup.materializedStage(gated.join(
+        Seq("doc_id"), "left_semi").localCheckpoint()
+      val exd = gated.join(
         graft.operators.Dedup.exact(gated).select(col("keep_id").as("doc_id")),
-        Seq("doc_id"), "left_semi"))
+        Seq("doc_id"), "left_semi").localCheckpoint()
       val pairs = graft.operators.Dedup.minHashLshPairs(exd, shingleK = 2,
         numHashes = 16, rowsPerBand = 4, minPermille = 600).select("da", "db")
-      val surv = graft.operators.Dedup.materializedStage(exd.join(
+      val surv = exd.join(
         graft.operators.Dedup.connectedComponentsUnsorted(pairs)
           .filter(col("cluster_id") < col("doc_id")).select("doc_id"),
-        Seq("doc_id"), "left_anti"))
+        Seq("doc_id"), "left_anti").localCheckpoint()
       val restore = graft.operators.Dedup.mixtureRestoreFor(
         gated.select("doc_id", "source"), surv.select("doc_id"))
       TextAnalysis.packSequences(surv, budgetTokens = 2048L, numShards = 8)

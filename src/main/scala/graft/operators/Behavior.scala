@@ -1241,7 +1241,7 @@ object Behavior {
     * row-table discipline): both sides of the pair self-join read it,
     * and its totals feed two more joins — lazily the event-scale
     * distinct would execute three times (the x182 sf1-probe slope).
-    * Blocks register for [[graft.operators.Dedup.releaseCaches]].
+    * The blocks live as long as the returned DataFrame (see [[Dedup]]).
     *
     * @return (item_a, item_b, n_a, n_b, n_ab, cosine_milli) the top-k
     *         by (cosine desc, item_a, item_b). */
@@ -1258,7 +1258,6 @@ object Behavior {
     // distinct for each side — measured 40% slower at sf0.1 and sf1
     val pruned = facts.join(frequent, Seq("__i"), "left_semi")
       .localCheckpoint(true)
-    Dedup.registerCheckpoint(Dedup.checkpointRdd(pruned))
     // totals re-derive from the MATERIALIZED table: the semi-join
     // keeps every row of a surviving item, so per-item counts are
     // unchanged — and the n_a/n_b joins no longer re-run the

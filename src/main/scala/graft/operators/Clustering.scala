@@ -219,7 +219,7 @@ object Clustering {
     // md5-perturbed copies upstream): cache it on BOTH paths so the
     // upstream input materializes exactly once — the fixed-k path
     // used to re-execute it for every consumer.
-    val base = Dedup.registerCache(df.select(col(idCol), col(vecCol)))
+    val base = df.select(col(idCol), col(vecCol)).persist()
     val kk =
       if (k > 0) k
       else {
@@ -238,9 +238,9 @@ object Clustering {
     // also keeps the self-join's constraint inference away from the
     // kmeans lambda expressions (Spark's InferFiltersFromConstraints
     // can fail on a self-joined higher-order-function projection)
-    val withVec = Dedup.registerCache(
-      kmeans(base, idCol, vecCol, kk, iterations)
-        .join(base, Seq(idCol)))
+    val withVec = kmeans(base, idCol, vecCol, kk, iterations)
+      .join(base, Seq(idCol))
+      .persist()
     val a = withVec.select(col("cluster"), col(idCol).as("da"), col(vecCol).as("va"))
     val b = withVec.select(col("cluster"), col(idCol).as("db"), col(vecCol).as("vb"))
     val pairs = a.join(b, Seq("cluster"))

@@ -20,81 +20,22 @@ import org.apache.spark.sql.functions._
   *    verification join.
   *  - SimHash: 60-bit signature per doc; banding into k+1 sub-keys
   *    finds Hamming-≤k pairs without a cross join.
+  *
+  * Materialization: operators `persist()` tables several of their own
+  * stages read and `localCheckpoint()` stage boundaries. An operator's
+  * blocks stay readable while the DataFrame it returned is reachable
+  * (its plan's `LogicalRDD` / `InMemoryRelation` holds them) and until
+  * [[graft.Harness.release]] frees them all — release only after
+  * materializing. Unreachable checkpoint blocks are freed by Spark's
+  * ContextCleaner; persisted tables stay in the session's cache manager
+  * until that release.
   */
 object Dedup {
-
-  /** Caches created by the dedup operators. The shingle/token tables
-    * feed several internal stages of one query, so they cannot be
-    * unpersisted inline (the returned DataFrame is lazy and still reads
-    * them); instead every cache is registered here and long-lived
-    * sessions release them once results are materialized. */
-  private val liveCaches = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-
-  private[graft] def registerCache(df: DataFrame): DataFrame = {
-    val c = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    liveCaches.add(c)
-    c
-  }
-
-  /** Eagerly materialize a pipeline STAGE BOUNDARY via localCheckpoint
-    * and register its blocks for [[releaseCaches]] — for multi-stage
-    * pipelines whose stages are each referenced more than once
-    * downstream (the x335 corpus-build chain, the x291 refresh's
-    * shared base state). The upstream plan executes exactly ONCE,
-    * right here; a lazy persist instead leaves concurrently-scheduled
-    * downstream stages racing to fill it redundantly (the
-    * [[Graph]] materialize discipline), and no cache at all
-    * re-executes the whole upstream chain per reference. */
-  private[graft] def materializedStage(df: DataFrame): DataFrame = {
-    val m = df.localCheckpoint(eager = true)
-    registerCheckpoint(checkpointRdd(m))
-    m
-  }
-
-  /** Caches currently held (visible for tests / monitoring). */
-  def liveCacheCount: Int = liveCaches.size()
-
-  /** `localCheckpoint` blocks that back RETURNED results (currently:
-    * the final round of [[connectedComponents]]). Unlike [[liveCaches]]
-    * these are NOT recomputable — a local checkpoint truncates lineage,
-    * so the blocks must outlive every read of the result. They are
-    * registered here and released by [[releaseCaches]], which callers
-    * invoke only after materializing (collect/write) what they need. */
-  private val liveCheckpoints =
-    new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]()
-
-  /** Checkpoint block sets currently held (tests / monitoring). */
-  def liveCheckpointCount: Int = liveCheckpoints.size()
-
-  /** Register a checkpoint RDD for release by [[releaseCaches]] —
-    * shared hygiene for operators outside this file that truncate
-    * lineage the same way (currently [[Graph.pageRank]]'s periodic
-    * checkpoints). */
-  private[operators] def registerCheckpoint(rdd: org.apache.spark.rdd.RDD[_]): Unit =
-    liveCheckpoints.add(rdd)
 
   /** RDD ids the most recent [[connectedComponents]] call checkpointed,
     * in round order (test hook: proves every round but the last was
     * unpersisted before the operator returned). */
   @volatile private[graft] var lastFixpointCheckpointIds: Seq[Int] = Nil
-
-  /** Unpersist every cache and checkpoint the dedup operators have
-    * created and return how many were released. Call after
-    * materializing results. For plain caches, calling mid-query is
-    * safe — Spark just recomputes the stages that would have hit the
-    * cache; checkpoint blocks however are the ONLY copy of their data
-    * (lineage is truncated), so release them strictly after the last
-    * read. `blocking = true` waits for block removal — use it when the
-    * caller needs cleanup cost fenced off from whatever runs next
-    * (e.g. between timed benchmark queries). */
-  def releaseCaches(blocking: Boolean = false): Int = {
-    var n = 0
-    var c = liveCaches.poll()
-    while (c != null) { c.unpersist(blocking); n += 1; c = liveCaches.poll() }
-    var r = liveCheckpoints.poll()
-    while (r != null) { r.unpersist(blocking); n += 1; r = liveCheckpoints.poll() }
-    n
-  }
 
   /** The materialized RDD behind an eager `localCheckpoint()`ed
     * DataFrame — its logical plan is a `LogicalRDD` over the
@@ -317,7 +258,7 @@ object Dedup {
     // consumer. A LAZY persist suffices (no extra materialization
     // job): the fixpoint's first round fills it before the report's
     // pair aggregation reads it back.
-    val p = registerCache(pairs)
+    val p = pairs.persist()
     val labels = connectedComponentsUnsorted(p)
     val sizes = labels.groupBy("cluster_id").agg(count(lit(1)).as("size"))
     val pc = p
@@ -587,7 +528,6 @@ object Dedup {
       .select(md5(col("text")).as("fp"), col("doc_id"),
         col(sourceCol).as("src"))
       .localCheckpoint(true)
-    registerCheckpoint(checkpointRdd(d))
     val origin = d.groupBy("fp")
       .agg(expr("min_by(src, doc_id)").as("src_from"))
     d.join(origin, Seq("fp"))
@@ -773,7 +713,7 @@ object Dedup {
     * before the caller's persist: the cached scan then ALREADY
     * satisfies every iteration's join-on-src distribution, so the
     * per-round joins shuffle only the (tiny) label/rank table, never
-    * the edge set. Callers persist (and register/release) the result
+    * the edge set. Callers persist or checkpoint the result
     * themselves — its storage lifetime is theirs. */
   private[operators] def symmetrizedEdges(pairs: DataFrame): DataFrame =
     pairs
@@ -898,7 +838,7 @@ object Dedup {
     * what the cache holds). */
   private def shingleRows(docs: DataFrame, k: Int): DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession)
-    registerCache(shingleArrays(docs, k))
+    shingleArrays(docs, k).persist()
       .select(col("doc_id"), size(col("shs")).cast("long").as("sz"),
         explode(col("shs")).as("sh"))
   }
@@ -924,7 +864,7 @@ object Dedup {
   def jaccardPairs(docs: DataFrame, minPermille: Long = 0): DataFrame = {
     // feeds sizes + both join sides — materialize once (same rationale
     // and cache policy as the minHashLsh shingle table)
-    val t = registerCache(distinctTokens(docs))
+    val t = distinctTokens(docs).persist()
     val sizes = t.groupBy("doc_id").agg(count(lit(1)).as("sz"))
     val a = t.select(col("doc_id").as("da"), col("tok"))
     val b = t.select(col("doc_id").as("db"), col("tok"))
@@ -1017,10 +957,11 @@ object Dedup {
     // ONE shingle pass feeds both the signature table and the exact
     // ground-truth sweep (the docs-based sweep re-shingled the corpus
     // into a second identical cache)
-    val sh = registerCache(shingleArrays(docs, shingleK))
-    val sigs = registerCache(sh
+    val sh = shingleArrays(docs, shingleK).persist()
+    val sigs = sh
       .select(col("doc_id"),
-        call_function("minhash_sigs", col("shs"), lit(numHashes)).as("sig")))
+        call_function("minhash_sigs", col("shs"), lit(numHashes)).as("sig"))
+      .persist()
     val perPair = jaccardSweepFromArrays(sh, minPermille)
       .join(sigs.select(col("doc_id").as("da"), col("sig").as("sa")), Seq("da"))
       .join(sigs.select(col("doc_id").as("db"), col("sig").as("sb")), Seq("db"))
@@ -1073,7 +1014,7 @@ object Dedup {
     // ONE shingle pass feeds both the banding side and the exact
     // ground-truth sweep below (the docs-based sweep re-shingled the
     // corpus into a second identical cache)
-    val sh = registerCache(shingleArrays(docs, shingleK))
+    val sh = shingleArrays(docs, shingleK).persist()
     val banded = bandedSignatures(sh, numHashes, rowsPerBand)
       .select(col("doc_id"), col("band"), col("bucket"))
     val collide = banded.select(col("doc_id").as("da"), col("band"),
@@ -1083,10 +1024,8 @@ object Dedup {
       .filter(col("da") < col("db"))
       .groupBy("da", "db").agg(min("band").as("__mb"))
       .localCheckpoint(true)
-    registerCheckpoint(checkpointRdd(collide))
     val exact = jaccardSweepFromArrays(sh, minPermille).select("da", "db")
       .localCheckpoint(true)
-    registerCheckpoint(checkpointRdd(exact))
     val candHist = collide.groupBy("__mb").agg(count(lit(1)).as("__nc"))
     val exactHist = exact.join(collide, Seq("da", "db"), "left")
       .groupBy("__mb").agg(count(lit(1)).as("__nf"))
@@ -1138,7 +1077,6 @@ object Dedup {
       s"thresholds ($thresholds) must be non-empty, sorted, distinct, in [1, 999]")
     val sweep = jaccardSweep(docs, shingleK, thresholds.head)
       .localCheckpoint(true)
-    registerCheckpoint(checkpointRdd(sweep))
     val pairH = sweep.groupBy("jac_permille").agg(count(lit(1)).as("__np"))
     val docH = sweep
       .select(explode(array(col("da"), col("db"))).as("doc_id"),
@@ -1208,8 +1146,8 @@ object Dedup {
     // the scan+shingle pipeline three times. (At scale this is the
     // standard design anyway: persist the signature/shingle tables,
     // they are reused across dedup runs.) Callers running many dedup
-    // passes in one long-lived session call [[releaseCaches]] between
-    // corpora so disk-spilled blocks don't outlive their query.
+    // passes in one long-lived session call [[graft.Harness.release]]
+    // between corpora so disk-spilled blocks don't outlive their query.
     // seeded minhash via a UNIVERSAL HASH FAMILY over the (already
     // md5-derived, uniform) shingle int: h_i = (a_i·h + b_i) mod 2³¹−1.
     // One md5 per TOKEN total (ShingleHashes); each family member costs
@@ -1217,7 +1155,7 @@ object Dedup {
     // is trivially portable, so the DuckDB oracle replays it exactly.
     // All intermediates < 2^62 (ANSI-safe).
     graft.functions.GraftFunctions.register(docs.sparkSession)
-    val sh = registerCache(shingleArrays(docs, shingleK))
+    val sh = shingleArrays(docs, shingleK).persist()
     minedPairs(sh, numHashes, rowsPerBand, minPermille)
   }
 
@@ -1417,7 +1355,7 @@ object Dedup {
       s"numHashes ($numHashes) must be a positive multiple of rowsPerBand " +
         s"($rowsPerBand) — otherwise bands are empty or hashes are discarded")
     graft.functions.GraftFunctions.register(state.sparkSession)
-    minedPairs(registerCache(state.select("doc_id", "shs")),
+    minedPairs(state.select("doc_id", "shs").persist(),
       numHashes, rowsPerBand, minPermille)
   }
 
@@ -1447,9 +1385,9 @@ object Dedup {
     // production appends mine from the PERSISTED state table
     // (writePairState/appendPairState), never re-shingling in memory
     val deltaState = pairState(deltaDocs, shingleK)
-    val full = registerCache(
-      mergePairStates(baseState, deltaState).select("doc_id", "shs"))
-    val deltaSh = registerCache(deltaState.select("doc_id", "shs"))
+    val full = mergePairStates(baseState, deltaState).select("doc_id", "shs")
+      .persist()
+    val deltaSh = deltaState.select("doc_id", "shs").persist()
     val all = bandedSignatures(full, numHashes, rowsPerBand)
     val delta = bandedSignatures(deltaSh, numHashes, rowsPerBand)
     val cand = all
@@ -1515,7 +1453,7 @@ object Dedup {
   def jaccardSweep(docs: DataFrame, shingleK: Int = 2,
                    minPermille: Long = 200): DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession)
-    jaccardSweepFromArrays(registerCache(shingleArrays(docs, shingleK)),
+    jaccardSweepFromArrays(shingleArrays(docs, shingleK).persist(),
       minPermille)
   }
 
@@ -1913,7 +1851,7 @@ object Dedup {
     val wtot0 = wr
       .withColumn("tw", sum("wt").over(Window.partitionBy("doc_id")))
       .filter(col("tw") > 0)
-    val wtot = if (cache) registerCache(wtot0) else wtot0
+    val wtot = if (cache) wtot0.persist() else wtot0
     val prefix = wtot
       .withColumn("cumx", coalesce(
         sum("wt").over(wDoc.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
@@ -2021,12 +1959,12 @@ object Dedup {
     require(maxDf >= 2, s"maxDf ($maxDf) must be >= 2 — below that no gram " +
       "can appear in two documents and the result is empty")
     graft.functions.GraftFunctions.register(docs.sparkSession)
-    val grams = registerCache(
-      docs.select(col("doc_id"), split(col("text"), " ").as("toks"))
-        .filter(size(col("toks")) >= gramK)
-        .select(col("doc_id"),
-          posexplode(call_function("gram_hashes", col("toks"), lit(gramK))))
-        .withColumnRenamed("pos", "i").withColumnRenamed("col", "h"))
+    val grams = docs.select(col("doc_id"), split(col("text"), " ").as("toks"))
+      .filter(size(col("toks")) >= gramK)
+      .select(col("doc_id"),
+        posexplode(call_function("gram_hashes", col("toks"), lit(gramK))))
+      .withColumnRenamed("pos", "i").withColumnRenamed("col", "h")
+      .persist()
     // df-prune: distinct-doc counts per gram are vocabulary-bounded
     val rare = grams.select("h", "doc_id").distinct()
       .groupBy("h").agg(count(lit(1)).as("df"))
@@ -2212,8 +2150,8 @@ object Dedup {
       s"numHashes ($numHashes) must be a positive multiple of rowsPerBand " +
         s"($rowsPerBand) — otherwise bands are empty or hashes are discarded")
     graft.functions.GraftFunctions.register(corpus.sparkSession)
-    val cSh = registerCache(shingleArrays(corpus, shingleK))
-    val bSh = registerCache(shingleArrays(bench, shingleK))
+    val cSh = shingleArrays(corpus, shingleK).persist()
+    val bSh = shingleArrays(bench, shingleK).persist()
     val cBand = bandedSignatures(cSh, numHashes, rowsPerBand)
     val bBand = bandedSignatures(bSh, numHashes, rowsPerBand)
       .select(col("doc_id").as("bench_id"), col("sz").as("bsz"),
@@ -2255,7 +2193,7 @@ object Dedup {
     * round k−1's blocks can never be read again and are unpersisted
     * immediately; the edge cache is released on exit; only the FINAL
     * round's blocks survive the call — they back the returned
-    * DataFrame and are registered for [[releaseCaches]]. On a real
+    * DataFrame and live as long as it does. On a real
     * cluster swap in reliable `checkpoint` if executor loss during the
     * fixpoint must be recoverable. Fails loudly if maxIter rounds do
     * not converge rather than returning partial labels.
@@ -2343,7 +2281,7 @@ object Dedup {
         // form ran a separate materialization job, then counted)
         val round = jumped.localCheckpoint(eager = false)
         val roundRdd = checkpointRdd(round)
-        // registered before the convergence count: if anything between
+        // recorded before the convergence count: if anything between
         // here and the end-of-round swap throws, the failure path must
         // free THIS round's just-checkpointed blocks too, not only the
         // previous round's
@@ -2374,9 +2312,8 @@ object Dedup {
       edges.unpersist(blocking = false)
       lastFixpointCheckpointIds = ckIds.result()
     }
-    // the final round's blocks back the returned DataFrame — hold them
-    // until the caller materializes and calls releaseCaches()
-    liveCheckpoints.add(currentRdd)
+    // the final round's blocks back the returned DataFrame: its plan
+    // holds currentRdd, so they live as long as the result does
     current.select(col("node").as("doc_id"), col("label").as("cluster_id"))
   }
 

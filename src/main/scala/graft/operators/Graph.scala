@@ -14,8 +14,9 @@ import org.apache.spark.sql.functions._
 object Graph {
 
   /** EAGERLY materialize a plan as concrete spill-safe blocks
-    * (MEMORY_AND_DISK) with truncated lineage, returning the
-    * checkpointed frame plus its block-backing RDD handle. The
+    * (MEMORY_AND_DISK) with truncated lineage; [[Dedup.checkpointRdd]]
+    * is the handle that frees a superseded round inline. The blocks
+    * live as long as the returned frame (see [[Dedup]]). The
     * iterative operators' round discipline — the same one
     * [[Dedup.connectedComponents]] uses: each round becomes ONE small
     * concrete table, the previous round's blocks are freed inline by
@@ -27,21 +28,7 @@ object Graph {
     * scheduler-dependent timing, measured on the sf0.1 board as 3–5×
     * rep-to-rep spread on x55/x153/x162 (5.2–15.1 s for x162 in a
     * quiet 4-query JVM); the eager form pinned all three flat. */
-  private def materialize(df: DataFrame): (DataFrame, org.apache.spark.rdd.RDD[_]) = {
-    val m = df.localCheckpoint(eager = true)
-    (m, Dedup.checkpointRdd(m))
-  }
-
-  /** The eagerly-materialized symmetrized edge set of a pair graph,
-    * REGISTERED for [[Dedup.releaseCaches]] — every round's plan reads
-    * it, and the returned (lazy) result reads it transitively, so its
-    * blocks must outlive the caller's action. Executes the upstream
-    * pairs plan exactly once, right here. */
-  private def materializedEdges(pairs: DataFrame): DataFrame = {
-    val (sym, symRdd) = materialize(Dedup.symmetrizedEdges(pairs))
-    Dedup.registerCheckpoint(symRdd)
-    sym
-  }
+  private def materialize(df: DataFrame): DataFrame = df.localCheckpoint()
 
   /** PageRank over the undirected graph given as (da, db) pairs, run
     * for a FIXED number of power iterations (deterministic — no
@@ -65,9 +52,8 @@ object Graph {
     * previous rank checkpoint's blocks are freed inline — storage
     * stays O(1) in the iteration count and the plan since the last
     * checkpoint holds at most `checkpointEvery` joins. The edge
-    * blocks and the final rank checkpoint back the returned plan, so
-    * they register in the operator cache registry and are freed by
-    * [[Dedup.releaseCaches]] after the caller materializes.
+    * blocks and the final rank checkpoint back the returned plan and
+    * live as long as it does.
     *
     * @return (doc_id, pr_micros) — rank in integer micros, ordered. */
   def pageRank(pairs: DataFrame, iterations: Int = 10,
@@ -77,15 +63,14 @@ object Graph {
     require(checkpointEvery >= 1,
       s"checkpointEvery ($checkpointEvery) must be >= 1")
     require(damping > 0 && damping < 1, s"damping ($damping) must be in (0, 1)")
-    val sym = materializedEdges(pairs)
+    val sym = materialize(Dedup.symmetrizedEdges(pairs))
     val deg = sym.groupBy("src").agg(count(lit(1)).as("deg"))
     // the degree-attached edge table is referenced by EVERY round's
     // join, and the edge-side map stage of round i+1 has no dependency
     // on round i — the scheduler can submit several concurrently, and
     // a lazy cache would let them recompute the join redundantly
     // before any fills it (see materialize); concrete blocks instead
-    val (edges, edgesRdd) = materialize(sym.join(deg, Seq("src")))
-    Dedup.registerCheckpoint(edgesRdd)
+    val edges = materialize(sym.join(deg, Seq("src")))
     val n = deg.count() // over the concrete edge table — cheap
     require(n > 0, "pageRank needs a non-empty pair graph")
     val tele = lit(1.0 - damping) / lit(n)
@@ -98,17 +83,14 @@ object Graph {
         .agg(sum(col("r") / col("deg")).as("m"))
         .select(col("dst").as("node"), (tele + lit(damping) * col("m")).as("r"))
       if (i % checkpointEvery == 0 && i < iterations) {
-        val (m, rdd) = materialize(ranks)
+        val m = materialize(ranks)
         // the previous rank checkpoint fed only the rounds up to this
         // one, which are now baked into the fresh blocks — free it
         prevCkpt.foreach(_.unpersist(blocking = false))
-        prevCkpt = Some(rdd)
+        prevCkpt = Some(Dedup.checkpointRdd(m))
         ranks = m
       }
     }
-    // the final checkpoint (if any) backs the returned plan — keep it
-    // until the caller materializes and releases
-    prevCkpt.foreach(Dedup.registerCheckpoint)
     ranks
       .select(col("node").as("doc_id"),
         floor(col("r") * 1000000 + 0.5).cast("long").as("pr_micros"))
@@ -138,7 +120,7 @@ object Graph {
     * rounds the label table is EAGERLY checkpointed (one small action
     * over |V| rows) and the previous label checkpoint freed inline —
     * O(1) storage in the round count; edge blocks and the final
-    * checkpoint register for [[Dedup.releaseCaches]]. The eager edge
+    * checkpoint live as long as the returned plan. The eager edge
     * materialization matters even without intermediate checkpoints:
     * every round's join references the edge plan, and a LAZY cache
     * can be computed redundantly by concurrently-scheduled stages
@@ -151,7 +133,7 @@ object Graph {
       s"iterations ($iterations) must be in [1, 100]")
     require(checkpointEvery >= 1,
       s"checkpointEvery ($checkpointEvery) must be >= 1")
-    val sym = materializedEdges(pairs)
+    val sym = materialize(Dedup.symmetrizedEdges(pairs))
     var labels = sym.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("lbl"))
     var prevCkpt: Option[org.apache.spark.rdd.RDD[_]] = None
@@ -164,13 +146,12 @@ object Graph {
         .agg(max(struct(col("c").as("c"), (-col("lbl")).as("nl"))).as("m"))
         .select(col("src").as("node"), (-col("m.nl")).as("lbl"))
       if (i % checkpointEvery == 0 && i < iterations) {
-        val (m, rdd) = materialize(labels)
+        val m = materialize(labels)
         prevCkpt.foreach(_.unpersist(blocking = false))
-        prevCkpt = Some(rdd)
+        prevCkpt = Some(Dedup.checkpointRdd(m))
         labels = m
       }
     }
-    prevCkpt.foreach(Dedup.registerCheckpoint)
     labels
       .select(col("node").as("doc_id"), col("lbl").cast("long").as("community"))
       .orderBy("doc_id")
@@ -179,13 +160,9 @@ object Graph {
   /** Canonical low→high edge list from a (da, db) pair table:
     * least/greatest orientation + distinct, so self-pairs are
     * impossible by construction upstream and duplicate orientations
-    * collapse. Shared by [[triangleCounts]] and [[graphSummary]]. */
-  private def canonicalEdges(pairs: DataFrame): DataFrame =
-    pairs.select(least(col("da"), col("db")).as("a"),
-        greatest(col("da"), col("db")).as("b"))
-      .distinct()
-
-  /** [[canonicalEdges]], EAGERLY materialized — the triangle family
+    * collapse. Shared by [[triangleCounts]] and [[graphSummary]].
+    *
+    * Callers EAGERLY [[materialize]] it — the triangle family
     * references the edge plan many times (degree union ×2, the
     * orientation's two joins, the wedge join's three sides), and the
     * upstream `pairs` plan is often the whole MinHash-LSH mining
@@ -193,34 +170,23 @@ object Graph {
     * to end (measured at sf0.1: x100 15.6 s → ~1.5 s and x101
     * 10.1 s → ~2 s once the edge list and oriented list were cached),
     * and even a LAZY cache leaves the references racing to compute it
-    * concurrently before any fills it (x146's 12.8 s rep outlier —
-    * see [[materialize]]). Blocks register for
-    * [[Dedup.releaseCaches]] after the caller materializes. */
-  private def cachedCanonicalEdges(pairs: DataFrame): DataFrame = {
-    val (e, rdd) = materialize(canonicalEdges(pairs))
-    Dedup.registerCheckpoint(rdd)
-    e
-  }
+    * concurrently before any fills it (x146's 12.8 s rep outlier). */
+  private def canonicalEdges(pairs: DataFrame): DataFrame =
+    pairs.select(least(col("da"), col("db")).as("a"),
+        greatest(col("da"), col("db")).as("b"))
+      .distinct()
 
   /** Per-endpoint degree of the canonical edge list — (doc_id, deg),
     * one map-side-combined aggregation over 2m endpoint rows. Computed
     * ONCE per operator from the cached edge list and reused by both
     * the degree orientation and any summary aggregates, so degree
-    * costs one Exchange regardless of how many consumers read it. */
+    * costs one Exchange regardless of how many consumers read it.
+    * Operators whose plans read it from several independent stages
+    * ([[graphSummary]], [[localClustering]]) [[materialize]] it. */
   private def endpointDegrees(e: DataFrame): DataFrame =
     e.select(col("a").as("doc_id"))
       .unionByName(e.select(col("b").as("doc_id")))
       .groupBy("doc_id").agg(count(lit(1)).as("deg"))
-
-  /** [[endpointDegrees]] as a concrete table, for the operators whose
-    * plans read the degree table from several independent stages
-    * ([[graphSummary]], [[localClustering]]); registered for
-    * [[Dedup.releaseCaches]]. */
-  private def materializedDegrees(e: DataFrame): DataFrame = {
-    val (deg, rdd) = materialize(endpointDegrees(e))
-    Dedup.registerCheckpoint(rdd)
-    deg
-  }
 
   /** Per-node TRIANGLE counts over the undirected pair graph — the
     * local-density signal: a near-dup pair inside a triangle is
@@ -245,7 +211,7 @@ object Graph {
     *
     * @return (doc_id, n_triangles) for nodes in ≥ 1 triangle, ordered. */
   def triangleCounts(pairs: DataFrame): DataFrame = {
-    val e = cachedCanonicalEdges(pairs)
+    val e = materialize(canonicalEdges(pairs))
     val tri = triangles(e, endpointDegrees(e))
     tri.select(explode(array(col("a"), col("b"), col("c"))).as("doc_id"))
       .groupBy("doc_id").agg(count(lit(1)).as("n_triangles"))
@@ -301,8 +267,7 @@ object Graph {
     * pass the operator's shared [[endpointDegrees]] table so degree
     * is one Exchange for the whole operator. */
   private def triangles(e: DataFrame, deg: DataFrame): DataFrame = {
-    val (o, oRdd) = materialize(orientEdges(e, byDegree = true, degOpt = Some(deg)))
-    Dedup.registerCheckpoint(oRdd)
+    val o = materialize(orientEdges(e, byDegree = true, degOpt = Some(deg)))
     val ab = o.select(col("lo").as("a"), col("hi").as("b"))
     val bc = o.select(col("lo").as("b"), col("hi").as("c"))
     val ac = o.select(col("lo").as("ca"), col("hi").as("cc"))
@@ -337,28 +302,25 @@ object Graph {
     * rep spread on this very operator). The previous round's blocks
     * are freed inline — O(1) storage in the round count; the initial
     * edge materialization runs the (possibly whole-LSH-pipeline)
-    * pairs plan exactly once, and the final round's blocks register
-    * for [[Dedup.releaseCaches]] because the returned plan reads
-    * them.
+    * pairs plan exactly once, and the final round's blocks live as
+    * long as the returned plan that reads them.
     *
     * @return (doc_id, core_deg) for surviving nodes, ordered. */
   def kCore(pairs: DataFrame, k: Int = 2, rounds: Int = 4): DataFrame = {
     require(k >= 1 && k <= 1000000, s"k ($k) must be in [1, 1e6]")
     require(rounds >= 1 && rounds <= 100,
       s"rounds ($rounds) must be in [1, 100]")
-    var (live, liveRdd) = materialize(Dedup.symmetrizedEdges(pairs))
+    var live = materialize(Dedup.symmetrizedEdges(pairs))
     for (_ <- 1 to rounds) {
       val keep = live.groupBy("src").agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
-      val (next, nextRdd) = materialize(live
+      val next = materialize(live
         .join(keep.select("src"), Seq("src"), "left_semi")
         .join(keep.select(col("src").as("dst")), Seq("dst"), "left_semi"))
       // round i's blocks fed only round i+1's build, now concrete
-      liveRdd.unpersist(blocking = false)
+      Dedup.checkpointRdd(live).unpersist(blocking = false)
       live = next
-      liveRdd = nextRdd
     }
-    Dedup.registerCheckpoint(liveRdd)
     live.groupBy(col("src").as("doc_id"))
       .agg(count(lit(1)).as("core_deg"))
       .orderBy("doc_id")
@@ -376,7 +338,7 @@ object Graph {
   def degreeHistogram(pairs: DataFrame): DataFrame = {
     // cached: the endpoint union reads the edge plan twice, and the
     // pairs plan behind it can be the whole LSH mining pipeline
-    val e = cachedCanonicalEdges(pairs)
+    val e = materialize(canonicalEdges(pairs))
     endpointDegrees(e)
       .groupBy("deg").agg(count(lit(1)).as("n_nodes"))
       .orderBy("deg")
@@ -402,7 +364,7 @@ object Graph {
     // eagerly materialized: referenced by both self-join sides, the
     // anti-join, and the node axis — four reads of the (possibly
     // LSH-mined) pair plan, racing if merely lazily cached
-    val sym = materializedEdges(pairs)
+    val sym = materialize(Dedup.symmetrizedEdges(pairs))
     val hops = sym.select(col("src"), col("dst").as("mid"))
       .join(sym.select(col("src").as("mid"), col("dst")), Seq("mid"))
       .filter(col("src") =!= col("dst"))
@@ -435,10 +397,10 @@ object Graph {
     * @return (n_nodes, n_edges, n_wedges, n_triangles, gcc_milli),
     *         gcc_milli NULL on a wedge-free graph. */
   def graphSummary(pairs: DataFrame): DataFrame = {
-    val e = cachedCanonicalEdges(pairs)
+    val e = materialize(canonicalEdges(pairs))
     // one concrete degree table (read by the summary aggregate AND
     // the orientation's two joins) serves the whole operator
-    val deg = materializedDegrees(e)
+    val deg = materialize(endpointDegrees(e))
     val nodesEdges = deg.agg(count(lit(1)).as("n_nodes"),
       expr("sum(deg) div 2").as("n_edges"),
       sum(expr("deg * (deg - 1) div 2")).as("n_wedges"))
@@ -468,8 +430,8 @@ object Graph {
     *
     * @return (doc_id, deg, n_triangles, lcc_milli) ordered by doc_id. */
   def localClustering(pairs: DataFrame): DataFrame = {
-    val e = cachedCanonicalEdges(pairs)
-    val deg = materializedDegrees(e)
+    val e = materialize(canonicalEdges(pairs))
+    val deg = materialize(endpointDegrees(e))
     val tri = triangles(e, deg)
       .select(explode(array(col("a"), col("b"), col("c"))).as("doc_id"))
       .groupBy("doc_id").agg(count(lit(1)).as("__t"))
@@ -502,10 +464,9 @@ object Graph {
   def ancestors(edges: DataFrame, maxDepth: Int): DataFrame = {
     require(maxDepth >= 1, s"maxDepth ($maxDepth) must be >= 1")
     val e = edges.select(col("child"), col("parent"))
-    var (frontier, fRdd) = materialize(
+    var frontier = materialize(
       e.select(col("child").as("node"), col("parent").as("ancestor"),
         lit(1L).as("depth")))
-    Dedup.registerCheckpoint(fRdd)
     var acc = frontier
     var d = 2
     var exhausted = frontier.isEmpty
@@ -515,8 +476,7 @@ object Graph {
           col("parent").as("__nx")), Seq("ancestor"))
         .select(col("node"), col("__nx").as("ancestor"),
           lit(d.toLong).as("depth"))
-      val (m, mRdd) = materialize(next)
-      Dedup.registerCheckpoint(mRdd)
+      val m = materialize(next)
       frontier = m
       exhausted = m.isEmpty
       if (!exhausted) acc = acc.unionByName(m)

@@ -264,15 +264,15 @@ object Similarity {
     val sl = emb.filter(pmod(col(idCol), lit(sliceMod)) === 0L
         && col(vecCol).isNotNull)
       .select(col(idCol).as("__id"), col(vecCol).as("__v"))
-    val scored = Dedup.registerCache(
-      sl.select(col("__id").as("da"), col("__v").as("va"))
-        .repartition(col("da"))
-        .crossJoin(broadcast(sl.select(col("__id").as("db"),
-          col("__v").as("vb"))))
-        .filter(col("da") < col("db"))
-        .select(col("da"), col("db"),
-          floor(call_function("cosine_f32", col("va"), col("vb")) * 1000
-            + 0.5).cast("long").as("__cp")))
+    val scored = sl.select(col("__id").as("da"), col("__v").as("va"))
+      .repartition(col("da"))
+      .crossJoin(broadcast(sl.select(col("__id").as("db"),
+        col("__v").as("vb"))))
+      .filter(col("da") < col("db"))
+      .select(col("da"), col("db"),
+        floor(call_function("cosine_f32", col("va"), col("vb")) * 1000
+          + 0.5).cast("long").as("__cp"))
+      .persist()
     val pairH = scored.groupBy("__cp").agg(count(lit(1)).as("__np"))
     val vecH = scored
       .select(explode(array(col("da"), col("db"))).as("__id"), col("__cp"))
@@ -499,10 +499,10 @@ object Similarity {
     * result eagerly materialized (the Graph-family discipline: both
     * join sides read it, and lazily the scoring plan would execute
     * twice), then a semi-join of the a < b orientation against the
-    * reversed a > b orientation. Blocks register for
-    * [[Dedup.releaseCaches]]. This exact form is the ORACLE ANCHOR;
-    * at 100 TB run [[mutualTopKAnn]] — the identical mutuality tail
-    * over ANN-pooled candidates (the x212 composition).
+    * reversed a > b orientation. The blocks live as long as the
+    * returned DataFrame (see [[Dedup]]). This exact form is the
+    * ORACLE ANCHOR; at 100 TB run [[mutualTopKAnn]] — the identical
+    * mutuality tail over ANN-pooled candidates (the x212 composition).
     *
     * @return (da, db, cos_permille), mutual pairs only, ordered. */
   def mutualTopK(corpus: DataFrame, k: Int,
@@ -523,7 +523,6 @@ object Similarity {
     val t = topk
       .select(col("query_id"), col("neighbor_id"), col("cos_permille"))
       .localCheckpoint(eager = true)
-    Dedup.registerCheckpoint(Dedup.checkpointRdd(t))
     val fwd = t.filter(col("query_id") < col("neighbor_id"))
       .select(col("query_id").as("da"), col("neighbor_id").as("db"),
         col("cos_permille"))
@@ -638,7 +637,6 @@ object Similarity {
         idCol = idCol, vecCol = vecCol)
         .select(col("query_id"), col("neighbor_id"), col("cos_permille"))
         .localCheckpoint(eager = true)
-      Dedup.registerCheckpoint(Dedup.checkpointRdd(r1))
       // reverse-direction evidence: top-k for the retrieved non-sampled
       // vectors only (sampled ones already carry their list in r1)
       val probes2 = corpus.join(
@@ -826,10 +824,11 @@ object Similarity {
     *         [1000, 1000·dim], NULL on an empty corpus. */
   def effectiveDim(emb: DataFrame, idCol: String = "vec_id",
                    vecCol: String = "embedding"): DataFrame = {
-    val q = Dedup.registerCache(emb.filter(col(vecCol).isNotNull)
+    val q = emb.filter(col(vecCol).isNotNull)
       .select(col(idCol).as("__id"), posexplode(col(vecCol)))
       .select(col("__id"), col("pos"),
-        floor(col("col").cast("double") * 1e6 + 0.5).cast("long").as("q")))
+        floor(col("col").cast("double") * 1e6 + 0.5).cast("long").as("q"))
+      .persist()
     val gram = q.select(col("__id"), col("pos").as("d"), col("q").as("qa"))
       .join(q.select(col("__id"), col("pos").as("e"), col("q").as("qb")),
         Seq("__id"))
@@ -859,10 +858,11 @@ object Similarity {
   def gramState(emb: DataFrame, idCol: String = "vec_id",
                 vecCol: String = "embedding"): DataFrame = {
     val nn = emb.filter(col(vecCol).isNotNull)
-    val q = Dedup.registerCache(nn
+    val q = nn
       .select(col(idCol).as("__id"), posexplode(col(vecCol)))
       .select(col("__id"), col("pos"),
-        floor(col("col").cast("double") * 1e6 + 0.5).cast("long").as("q")))
+        floor(col("col").cast("double") * 1e6 + 0.5).cast("long").as("q"))
+      .persist()
     q.select(col("__id"), col("pos").as("d"), col("q").as("qa"))
       .join(q.select(col("__id"), col("pos").as("e"), col("q").as("qb")),
         Seq("__id"))
@@ -903,7 +903,6 @@ object Similarity {
         floor(col("col").cast("double") * 1e6 + 0.5).cast("long").as("q"))
       .groupBy("label", "pos").agg(sum("q").as("s"))
       .localCheckpoint(true)
-    Dedup.registerCheckpoint(Dedup.checkpointRdd(per))
     def toVec(df: DataFrame, keys: Seq[String]): DataFrame =
       df.groupBy(keys.map(col): _*)
         .agg(sort_array(collect_list(struct(col("pos"), col("s")))).as("__ps"))
@@ -963,7 +962,6 @@ object Similarity {
         floor(col("col").cast("double") * 1e6 + 0.5).cast("long").as("q"))
       .groupBy("batch", "pos").agg(sum("q").as("s"))
       .localCheckpoint(true)
-    Dedup.registerCheckpoint(Dedup.checkpointRdd(per))
     val bv = per.groupBy("batch")
       .agg(sort_array(collect_list(struct(col("pos"), col("s")))).as("__ps"))
       .withColumn("__v", transform(col("__ps"), x =>
@@ -1062,7 +1060,6 @@ object Similarity {
         x.getField("s").cast("double")))
       .drop("__ps")
       .localCheckpoint(true)
-    Dedup.registerCheckpoint(Dedup.checkpointRdd(lv))
     val nv = labeled.groupBy(col(labelCol).cast("long").as("label"))
       .agg(count(lit(1)).as("n"))
     val a = lv.join(nv, Seq("label"))

@@ -503,10 +503,8 @@ object TextAnalysis {
         " 1-row argmax per merge, and a real 10k-rule run would batch them")
     val spark = docs.sparkSession
     import spark.implicits._
-    // plain persist, unpersisted inline: the RESULT is driver-held
-    // merge rows, so nothing lazy reads this cache after return (the
-    // registerCache queue exists for caches a returned plan still
-    // references — not this shape)
+    // unpersisted inline: the RESULT is driver-held merge rows, so
+    // nothing lazy reads this cache after return
     val vocab = docs.filter(col(textCol).isNotNull)
       .select(explode(split(col(textCol), " ")).as("word"))
       .filter(length(col("word")) >= 2 && !col("word").contains("|"))
@@ -1766,7 +1764,6 @@ object TextAnalysis {
         explode(split(col("text"), " ")).as("tok"))
       .distinct()
       .localCheckpoint(true)
-    Dedup.registerCheckpoint(Dedup.checkpointRdd(ts))
     val own = ts.groupBy("source").agg(count(lit(1)).as("vocab"))
     ts.select(col("source").as("src_a"), col("tok"))
       .join(ts.select(col("source").as("src_b"), col("tok")), Seq("tok"))
@@ -1856,7 +1853,6 @@ object TextAnalysis {
     val ch = chunksRaw(docs.filter(col("text").isNotNull), chunkTokensN, 0)
       .select(col("chunk_id"), md5(col("chunk_text")).as("__f"))
       .localCheckpoint(true)
-    Dedup.registerCheckpoint(Dedup.checkpointRdd(ch))
     val cnt = ch.groupBy("__f").agg(count(lit(1)).as("__c"))
     ch.join(cnt, Seq("__f"))
       .groupBy("chunk_id")
@@ -1891,7 +1887,6 @@ object TextAnalysis {
         explode(split(col("text"), " ")).as("tok"))
       .groupBy("source", "tok").agg(count(lit(1)).as("__n"))
       .localCheckpoint(true)
-    Dedup.registerCheckpoint(Dedup.checkpointRdd(st))
     val tot = st.groupBy("tok").agg(sum("__n").as("__t"))
     st.join(tot, Seq("tok"))
       .groupBy("source")
@@ -1936,7 +1931,6 @@ object TextAnalysis {
         explode(split(col("text"), " ")).as("tok"))
       .groupBy("source", "tok").agg(count(lit(1)).as("__c"))
       .localCheckpoint(true)
-    Dedup.registerCheckpoint(Dedup.checkpointRdd(st))
     val ns = st.groupBy("source").agg(sum("__c").as("__ns"))
     val ct = st.groupBy("tok").agg(sum("__c").as("__ct"))
     val total = ns.agg(sum("__ns").as("__n"))
@@ -2024,7 +2018,6 @@ object TextAnalysis {
       .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
       .groupBy("doc_id", "tok").agg(count(lit(1)).as("__c"))
       .localCheckpoint(true)
-    Dedup.registerCheckpoint(Dedup.checkpointRdd(dt))
     val ct = dt.groupBy("tok").agg(sum("__c").as("__ct"))
     val total = ct.agg(sum("__ct").as("__n"))
     dt.join(ct, Seq("tok"))
@@ -2191,7 +2184,6 @@ object TextAnalysis {
       .select(col("source"), col("b.u").as("u"), col("b.v").as("v"))
       .groupBy("source", "u", "v").agg(count(lit(1)).as("__c"))
       .localCheckpoint(true)
-    Dedup.registerCheckpoint(Dedup.checkpointRdd(bi))
     val pu = bi.groupBy("source", "u").agg(sum("__c").as("__cu"))
     bi.join(pu, Seq("source", "u"))
       .select(col("source"), col("__c"),

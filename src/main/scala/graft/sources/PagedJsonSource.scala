@@ -78,9 +78,6 @@ object PagedJsonSource {
       .sortBy(_._2)
   }
 
-  /** Page files in fetch order (legacy shape of [[pages]]). */
-  def pageFiles(dir: String): Seq[java.io.File] = pages(dir).map(_._1)
-
   /** Envelope extraction (R7/R8, etl_connector.py:102-117): `results`,
     * else `pulses` (empty array counts as absent, like Python `or`),
     * else the first array-valued member, else the payload itself when

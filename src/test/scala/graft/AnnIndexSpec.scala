@@ -233,7 +233,7 @@ class AnnIndexSpec extends SparkSpec {
         assert(c.probe().nonEmpty)
         assert(c.probe() === c.fresh(),
           "a recovered-then-compacted state must answer like a fresh build")
-      } finally Dedup.releaseCaches()
+      } finally Harness.release(spark, blocking = false)
     }
 
   test("deleteFromIndex: tombstoned IVF at nprobe=nlist ≡ brute force over the survivors") {

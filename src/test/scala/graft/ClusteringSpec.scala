@@ -235,7 +235,7 @@ class ClusteringSpec extends SparkSpec {
       "the chain collapses transitively to the minimum id")
     assert(out(4L) === 4L, "a same-cluster distinct vector survives")
     assert(out(10L) === 10L && out(11L) === 10L)
-    graft.operators.Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
   }
 
   test("semanticDedup: dedup happens independently per k-means cell") {
@@ -251,7 +251,7 @@ class ClusteringSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(out(1L) === 1L && out(2L) === 1L)
     assert(out(3L) === 3L && out(4L) === 3L)
-    graft.operators.Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
   }
 
   test("semanticDedup: k ≤ 0 auto-sizes k = ⌊√n⌋ (floor 16, clamp n) — " +
@@ -260,7 +260,7 @@ class ClusteringSpec extends SparkSpec {
       val out = Clustering.semanticDedup(df, "vec_id", "embedding",
         k = k, iterations = 2, minPermille = 900L)
         .collect().map(r => (r.getLong(0), r.get(1), r.getLong(2))).toSeq
-      graft.operators.Dedup.releaseCaches()
+      Harness.release(spark, blocking = false)
       out
     }
     // 320 deterministic vectors (the x329 corpus size): √320 → 17

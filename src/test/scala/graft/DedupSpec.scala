@@ -127,22 +127,11 @@ class DedupSpec extends SparkSpec with SlowSuite {
     // final round's blocks (backing `out`) may still be held
     assert(ids.init.forall(id => !persisted.contains(id)),
       s"intermediate fixpoint rounds leaked blocks: ${ids.init.filter(persisted.contains)}")
-    assert(Dedup.liveCheckpointCount >= 1)
-    Dedup.releaseCaches(blocking = true)
+    assert(persisted.contains(ids.last), "the final round's blocks back `out`")
+    Harness.release(spark, blocking = true)
     val after = sc.getPersistentRDDs.keySet
     assert(ids.forall(id => !after.contains(id)),
-      s"fixpoint blocks survived releaseCaches: ${ids.filter(after.contains)}")
-    assert(Dedup.liveCheckpointCount === 0)
-  }
-
-  test("releaseCaches unpersists every dedup-created cache") {
-    // parallel suites may register dedup caches of their own, so the
-    // assertions are on deltas, not on a global count of zero
-    Dedup.releaseCaches() // drain strays from earlier tests
-    Dedup.minHashLsh(corpus, shingleK = 2, minPermille = 500).count()
-    Dedup.jaccardPairs(corpus).count()
-    assert(Dedup.liveCacheCount >= 2)
-    assert(Dedup.releaseCaches() >= 2) // ours were in the ledger and got unpersisted
+      s"fixpoint blocks survived release: ${ids.filter(after.contains)}")
   }
 
   test("docs shorter than the shingle size don't crash minhash (regression)") {
@@ -288,10 +277,10 @@ class DedupSpec extends SparkSpec with SlowSuite {
     for (t <- Seq(300L, 700L, 950L)) {
       val plain = Dedup.containmentPairs(docs, shingleK = 2, minPermille = t)
         .collect().map(_.toSeq).toSeq
-      Dedup.releaseCaches()
+      Harness.release(spark, blocking = false)
       val pref = Dedup.containmentPairsPrefix(docs, shingleK = 2, minPermille = t)
         .collect().map(_.toSeq).toSeq
-      Dedup.releaseCaches()
+      Harness.release(spark, blocking = false)
       assert(pref === plain, s"threshold $t")
     }
   }
@@ -320,7 +309,7 @@ class DedupSpec extends SparkSpec with SlowSuite {
       1L -> "a b c", 2L -> "a b", 3L -> "a").toDF("doc_id", "text")
     val plan = Dedup.prefixFilterPlan(docs, shingleKs = Seq(1), minPermille = 700)
       .collect().map(_.toSeq).toSeq
-    Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     // per doc prefix lengths: sz=3 → 3-3+1=1 row (rarest: c, df 1);
     // sz=2 → 2-2+1=1 (rarest: b, df 2); sz=1 → 1-1+1=1 (a, df 3)
     // prefix_rows = 3, prefix_mass = 1+2+3 = 6
@@ -336,7 +325,7 @@ class DedupSpec extends SparkSpec with SlowSuite {
         graft.core.Tables.documents(spark, "/root/testdata/sf0.1"))
       .select("shingle_k", "recommended")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     assert(real(4L) === 1L,
       s"planner no longer recommends k=4 ($real) — re-tune x74's shingleK " +
         "and its oracle together")
@@ -494,7 +483,7 @@ class DedupSpec extends SparkSpec with SlowSuite {
     ).toDF("doc_id", "text")
     val weighted = Dedup.weightedContainmentPairs(docs, shingleK = 3, minPermille = 300)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     // (1,2) share 'zeta omega kappa' (df=2, high weight) on top of the
     // boilerplate (df=4, weight 0): they pass; (3,4) share ONLY df=4
     // shingles: weighted overlap 0, filtered
@@ -504,7 +493,7 @@ class DedupSpec extends SparkSpec with SlowSuite {
     // excluded from division, empty output
     val same = Seq(1L -> boiler, 2L -> boiler, 3L -> boiler).toDF("doc_id", "text")
     assert(Dedup.weightedContainmentPairs(same, 3, 1).count() === 0L)
-    Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
   }
 
   test("weighted prefix-filtered containment is bit-identical to the unfiltered operator") {
@@ -525,17 +514,17 @@ class DedupSpec extends SparkSpec with SlowSuite {
     for (t <- Seq(1L, 300L, 500L, 950L, 1000L)) {
       val plain = Dedup.weightedContainmentPairs(docs, shingleK = 3, minPermille = t)
         .collect().map(_.toSeq).toSeq
-      Dedup.releaseCaches()
+      Harness.release(spark, blocking = false)
       val pref = Dedup.weightedContainmentPairsPrefix(docs, shingleK = 3, minPermille = t)
         .collect().map(_.toSeq).toSeq
-      Dedup.releaseCaches()
+      Harness.release(spark, blocking = false)
       assert(pref === plain, s"threshold $t")
     }
     // the quote pair must actually be present (the test corpus isn't
     // vacuously empty) and boilerplate-only pairs absent
     val at300 = Dedup.weightedContainmentPairsPrefix(docs, 3, 300)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     // (20,21) are identical docs — in THIS corpus the boilerplate has
     // df=6 < N=8 so its weight is positive and they score 1000
     assert(at300.contains((10L, 11L)) && at300.contains((1L, 2L))
@@ -670,7 +659,7 @@ class DedupSpec extends SparkSpec with SlowSuite {
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> ((r.getLong(2), r.getLong(3), r.getLong(4))))
       .toMap
-    Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     val (jac12, est12, err12) = out((1L, 2L))
     assert(jac12 === 1000L && est12 === 1000L && err12 === 0L)
     out.values.foreach { case (jac, est, err) =>
@@ -734,7 +723,7 @@ class DedupSpec extends SparkSpec with SlowSuite {
       .toDF("doc_id", "text")
     val out = Dedup.bandRecallCurve(docs, shingleK = 3, minPermille = 200)
       .as[(Long, Long, Long, Long, Long)].collect().toSeq
-    graft.operators.Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     assert(out.map(_._1) === Seq(1L, 2L, 3L, 4L))
     out.foreach { case (_, nc, nt, nf, rp) =>
       assert(nt === 1L && nf === 1L && rp === 1000000L && nc >= 1L)
@@ -757,7 +746,7 @@ class DedupSpec extends SparkSpec with SlowSuite {
       .toDF("doc_id", "text")
     val out = Dedup.minhashErrorCurve(docs, shingleK = 2, minPermille = 500)
       .as[(Long, Long, Long, Long)].collect().toSeq
-    graft.operators.Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     assert(out === Seq((4L, 1L, 0L, 0L), (8L, 1L, 0L, 0L), (16L, 1L, 0L, 0L)))
     intercept[IllegalArgumentException] {
       Dedup.minhashErrorCurve(docs, numHashes = 2)
@@ -768,7 +757,7 @@ class DedupSpec extends SparkSpec with SlowSuite {
     val docs = Seq((1L, "a b c"), (2L, "x y z")).toDF("doc_id", "text")
     val out = Dedup.minhashErrorCurve(docs, shingleK = 2, minPermille = 500)
       .collect()
-    graft.operators.Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     assert(out.length === 3)
     out.foreach { r =>
       assert(r.getLong(1) === 0L && r.isNullAt(2) && r.isNullAt(3))
@@ -784,7 +773,7 @@ class DedupSpec extends SparkSpec with SlowSuite {
     val out = Dedup.dedupThresholdCurve(docs, shingleK = 2,
         thresholds = Seq(500L, 900L))
       .as[(Long, Long, Long)].collect().toSeq
-    graft.operators.Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     assert(out === Seq((500L, 3L, 3L), (900L, 1L, 2L)))
     intercept[IllegalArgumentException] {
       Dedup.dedupThresholdCurve(docs, thresholds = Seq(900L, 500L))
@@ -801,7 +790,7 @@ class DedupSpec extends SparkSpec with SlowSuite {
       .toDF("doc_id", "text", "source")
     val out = Dedup.nearDupSourceMatrix(docs, minPermille = 500)
       .as[(String, String, Long)].collect().toSeq
-    graft.operators.Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     assert(out === Seq(("A", "B", 1L), ("B", "B", 1L)))
   }
 
@@ -856,7 +845,7 @@ class DedupSpec extends SparkSpec with SlowSuite {
       .toDF("doc_id", "score")
     val out = Dedup.clusterCapSurvivors(pairs, scores, m = 2)
       .as[(Long, Long, Long, Long)].collect().toSeq
-    graft.operators.Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     // cluster 1 = {1,2,3}: 9@2 then 9@3 (id tie-break), 5@1 dropped;
     // cluster 7 = {7,8}: both fit under the cap
     assert(out === Seq(
@@ -879,7 +868,7 @@ class DedupSpec extends SparkSpec with SlowSuite {
     ).toDF("doc_id", "source", "text")
     val out = Dedup.syndicationMatrix(docs)
       .as[(String, String, Long, Long)].collect().toSeq
-    graft.operators.Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     assert(out === Seq(("A", "B", 2L, 1L), ("B", "C", 1L, 1L)))
   }
 
@@ -907,7 +896,7 @@ class DedupSpec extends SparkSpec with SlowSuite {
     // arrival rows all involve a delta doc, and never duplicate standing
     assert(arrived.forall(p => p._1 % 2 == 1 || p._2 % 2 == 1))
     assert(standing.intersect(arrived).isEmpty)
-    Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
   }
 
   test("persisted pairState table: append signs with the pinned shingleK; mining from the table ≡ one-shot") {
@@ -931,7 +920,7 @@ class DedupSpec extends SparkSpec with SlowSuite {
       }
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $tbl")
-      Dedup.releaseCaches()
+      Harness.release(spark, blocking = false)
     }
   }
 
@@ -967,7 +956,7 @@ class DedupSpec extends SparkSpec with SlowSuite {
     } finally {
       for (t <- Seq(tbl, tbl + "_tombs"))
         spark.sql(s"DROP TABLE IF EXISTS $t")
-      Dedup.releaseCaches()
+      Harness.release(spark, blocking = false)
     }
   }
 
@@ -998,7 +987,7 @@ class DedupSpec extends SparkSpec with SlowSuite {
     } finally {
       for (t <- Seq(tbl, tbl + "_tombs"))
         spark.sql(s"DROP TABLE IF EXISTS $t")
-      Dedup.releaseCaches()
+      Harness.release(spark, blocking = false)
     }
   }
 
@@ -1016,6 +1005,6 @@ class DedupSpec extends SparkSpec with SlowSuite {
     assert(refreshed === oneShot)
     assert(refreshed.toMap === Map(1L -> 1L, 2L -> 1L, 5L -> 1L, 6L -> 1L,
       8L -> 8L, 9L -> 8L))
-    Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
   }
 }

@@ -7,6 +7,8 @@ class GraphSpec extends SparkSpec {
 
   private def pairs(es: (Long, Long)*) = es.toDF("da", "db")
 
+  private def persistedIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
   /** Local replay of the exact iteration the operator runs. */
   private def reference(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] = {
     val sym = (edges ++ edges.map(e => (e._2, e._1))).distinct
@@ -24,7 +26,7 @@ class GraphSpec extends SparkSpec {
   test("pageRank: path-graph center ranks highest; matches local replay") {
     val out = Graph.pageRank(pairs((1L, 2L), (2L, 3L)), iterations = 10)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     val ref = reference(Seq((1L, 2L), (2L, 3L)), 10)
     assert(out === ref)
     assert(out(2L) > out(1L) && out(1L) === out(3L))
@@ -34,7 +36,7 @@ class GraphSpec extends SparkSpec {
     val star = pairs((1L, 2L), (1L, 3L), (1L, 4L), (1L, 5L))
     val out = Graph.pageRank(star, iterations = 10)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     assert(out(1L) > out(2L))
     assert(out(2L) === out(5L))
     val total = out.values.sum
@@ -46,12 +48,13 @@ class GraphSpec extends SparkSpec {
     val p = pairs((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L), (4L, 5L))
     val a = Graph.pageRank(p, iterations = 10).collect().toSeq
     val b = Graph.pageRank(p.repartition(7), iterations = 10).collect().toSeq
-    Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     assert(a === b)
   }
 
   test("pageRank: 50 iterations stay plan-shallow via checkpoints; blocks released") {
     val p = pairs((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L))
+    val before = persistedIds
     val ranked = Graph.pageRank(p, iterations = 50)
     // lineage truncation is visible BEFORE execution: the plan since
     // the last checkpoint holds at most checkpointEvery rank joins —
@@ -63,21 +66,40 @@ class GraphSpec extends SparkSpec {
     val out = ranked.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // intermediate checkpoints are freed INLINE as each round bakes
     // them into the next; only the edge blocks and the final rank
-    // checkpoint (which back the returned plan) stay registered
-    assert(Dedup.liveCheckpointCount >= 1 && Dedup.liveCheckpointCount <= 3,
-      s"only result-backing checkpoints should register, got ${Dedup.liveCheckpointCount}")
-    Dedup.releaseCaches()
-    assert(Dedup.liveCheckpointCount === 0, "release must free every checkpoint")
+    // checkpoint (which back the returned plan) stay held
+    val held = persistedIds -- before
+    assert(held.size >= 1 && held.size <= 3,
+      s"only result-backing checkpoints should stay held, got ${held.size}")
+    Harness.release(spark, blocking = false)
+    assert((persistedIds intersect held).isEmpty, "release must free every checkpoint")
     assert(out === reference(Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L)), 50))
     // rank mass still conserved after 50 rounds
     assert(math.abs(out.values.sum - 1000000L) <= out.size)
+  }
+
+  test("results keep their checkpoint blocks alive through GC") {
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L), (4L, 5L), (6L, 7L))
+    val ranked = Graph.pageRank(pairs(edges: _*), iterations = 6, checkpointEvery = 2)
+    val labels = Dedup.connectedComponents(pairs(edges: _*))
+    // only the two results reach their blocks now; let the
+    // ContextCleaner free everything else the operators checkpointed
+    val deadline = System.nanoTime() + 2000000000L
+    for (_ <- 1 to 5 if System.nanoTime() < deadline) {
+      System.gc()
+      Thread.sleep(200)
+    }
+    assert(ranked.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===
+      reference(edges, 6))
+    assert(labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===
+      ((1L to 5L).map(_ -> 1L) ++ Seq(6L -> 6L, 7L -> 6L)).toMap)
+    Harness.release(spark, blocking = false)
   }
 
   test("pageRank: checkpoint interval does not change the numbers") {
     val p = pairs((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L), (4L, 5L))
     val a = Graph.pageRank(p, iterations = 12, checkpointEvery = 3).collect().toSeq
     val b = Graph.pageRank(p, iterations = 12, checkpointEvery = 100).collect().toSeq
-    Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     assert(a === b)
   }
 
@@ -236,35 +258,43 @@ class GraphSpec extends SparkSpec {
     // compute the shared plan before the cache filled (x146's 12.8 s
     // rep outlier), so the shared tables are now EAGER localCheckpoints
     // — the plan's leaf references to the pair input must all be
-    // concrete LogicalRDD leaves, registered until release.
+    // concrete LogicalRDD leaves, held until release.
     import org.apache.spark.sql.execution.LogicalRDD
     def concreteLeaves(df: org.apache.spark.sql.DataFrame): Int =
       df.queryExecution.optimizedPlan.collect { case r: LogicalRDD => r }.size
+    // the checkpoints a result's plan reads: the ContextCleaner may free
+    // any other block of the operator, but never these
+    def readIds(df: org.apache.spark.sql.DataFrame): Set[Int] =
+      df.queryExecution.optimizedPlan.collect { case r: LogicalRDD => r.rdd.id }.toSet
     val g = pairs((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L))
-    Dedup.releaseCaches() // drain leftovers from earlier tests in the suite
+    Harness.release(spark, blocking = false) // drain leftovers from earlier tests in the suite
 
     // wedge join: ab/bc/ac all read the MATERIALIZED oriented list
-    assert(concreteLeaves(Graph.triangleCounts(g)) >= 3,
+    val tri = Graph.triangleCounts(g)
+    assert(concreteLeaves(tri) >= 3,
       "triangleCounts must read the materialized oriented edges on every join side")
-    assert(Dedup.liveCheckpointCount >= 2, "edge + oriented blocks must register")
-    Dedup.releaseCaches()
+    assert(readIds(tri).subsetOf(persistedIds), "the oriented blocks must be held")
+    Harness.release(spark, blocking = false)
 
-    assert(concreteLeaves(Graph.graphSummary(g)) >= 4,
+    val summary = Graph.graphSummary(g)
+    assert(concreteLeaves(summary) >= 4,
       "graphSummary must read materialized degree + oriented edges everywhere")
-    Dedup.releaseCaches()
+    assert(readIds(summary).size >= 2 && readIds(summary).subsetOf(persistedIds),
+      "degree + oriented blocks must be held")
+    Harness.release(spark, blocking = false)
 
     assert(concreteLeaves(Graph.localClustering(g)) >= 4,
       "localClustering must read materialized degree + oriented edges everywhere")
-    Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
 
     assert(concreteLeaves(Graph.degreeHistogram(g)) >= 2,
       "degreeHistogram's endpoint union must read the materialized edge list twice")
-    Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
 
     assert(concreteLeaves(Graph.twoHopCounts(g)) >= 4,
       "twoHopCounts must read the materialized symmetrized edges on all four sides")
-    Dedup.releaseCaches()
-    assert(Dedup.liveCheckpointCount === 0, "release must drain the registry")
+    Harness.release(spark, blocking = false)
+    assert(persistedIds.isEmpty, "release must free every checkpoint")
   }
 
   test("kCore: a pure chain peels to nothing at k = 2") {
@@ -278,14 +308,14 @@ class GraphSpec extends SparkSpec {
       .toDF("child", "parent")
     val out = Graph.ancestors(edges, maxDepth = 3)
       .as[(Long, Long, Long)].collect().toSeq
-    graft.operators.Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     assert(out === Seq(
       (1L, 0L, 1L),
       (10L, 1L, 1L), (10L, 0L, 2L),
       (100L, 10L, 1L), (100L, 1L, 2L), (100L, 0L, 3L)))
     val shallow = Graph.ancestors(edges, maxDepth = 1)
       .as[(Long, Long, Long)].collect().toSeq
-    graft.operators.Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     assert(shallow.forall(_._3 === 1L) && shallow.size === 3)
     intercept[IllegalArgumentException] { Graph.ancestors(edges, 0) }
   }

@@ -37,21 +37,25 @@ class HarnessSpec extends SparkSpec {
     assert(Bench.probes.keySet.intersect(SparkEntry.queries.keySet).isEmpty)
   }
 
-  test("release drops the dedup registry, every persistent RDD and the SQL cache") {
+  test("release drops operator caches and checkpoints, persistent RDDs and the SQL cache") {
     import spark.implicits._
-    Dedup.registerCache(spark.range(100).toDF()).count()
-    Dedup.connectedComponents((1L until 8L).map(i => (i, i + 1)).toDF("da", "db")).collect()
-    // what a query can hold outside the registry: a plain Dataset
-    // cache and a persisted RDD (as a localCheckpoint or ML cache is)
-    spark.range(10).toDF("id").cache().count()
-    spark.sparkContext.parallelize(1 to 3).persist().count()
     val cacheManager =
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
-    assert(Dedup.liveCacheCount > 0 && Dedup.liveCheckpointCount > 0)
-    assert(spark.sparkContext.getPersistentRDDs.nonEmpty && !cacheManager.isEmpty)
+    Harness.release(spark, blocking = true) // leftovers of earlier suites
+    assert(cacheManager.isEmpty)
+    // an operator-created cache: minHashLsh persists its shingle table
+    val docs = Seq(1L -> "a b c d e", 2L -> "a b c d f", 3L -> "x y z")
+      .toDF("doc_id", "text")
+    Dedup.minHashLsh(docs, shingleK = 2, minPermille = 500).count()
+    assert(!cacheManager.isEmpty, "minHashLsh should hold its shingle table")
+    // an operator-created checkpoint: connectedComponents' final round
+    val labels = Dedup.connectedComponents((1L until 8L).map(i => (i, i + 1)).toDF("da", "db"))
+    assert(labels.collect().length === 8)
+    assert(spark.sparkContext.getPersistentRDDs.contains(Dedup.lastFixpointCheckpointIds.last))
+    // a plain Dataset cache and a persisted RDD (as an ML cache is)
+    spark.range(10).toDF("id").cache().count()
+    spark.sparkContext.parallelize(1 to 3).persist().count()
     Harness.release(spark, blocking = true)
-    assert(Dedup.liveCacheCount === 0)
-    assert(Dedup.liveCheckpointCount === 0)
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
     assert(cacheManager.isEmpty)
   }

@@ -150,7 +150,7 @@ class LinkageSpec extends SparkSpec {
     val pairs = Seq((1L, 10L), (2L, 10L)).toDF("da", "db")
     val out = Linkage.goldenRecord(recs, "id", pairs, Seq("name", "city"))
       .as[(Long, Long, String, String)].collect().toSeq
-    graft.operators.Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     assert(out === Seq((1L, 3L, "ann", "x"), (3L, 1L, "bob", "z")))
   }
 }

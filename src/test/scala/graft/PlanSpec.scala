@@ -146,13 +146,13 @@ class PlanSpec extends SparkSpec {
     val p = plan(SparkEntry.queries("x73_semantic_dedup")(spark, sf))
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoop"),
       s"the pairwise pass must be bounded by the k-means cells:\n$p")
-    graft.operators.Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
   }
   test("x74: prefix-filtered containment never goes quadratic") {
     val p = plan(SparkEntry.queries("x74_containment_prefix")(spark, sf))
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoop"),
       s"candidates come from the prefix equi-join:\n$p")
-    graft.operators.Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
   }
 
   test("x108: bloom prune is a scan-side predicate below the anti-join") {

@@ -145,10 +145,10 @@ class PropertySpec extends SparkSpec with SlowSuite {
         .toDF("doc_id", "text")
       val plain = graft.operators.Dedup.containmentPairs(docs, 2, t)
         .collect().map(_.toSeq).toSeq
-      graft.operators.Dedup.releaseCaches()
+      Harness.release(spark, blocking = false)
       val pref = graft.operators.Dedup.containmentPairsPrefix(docs, 2, t)
         .collect().map(_.toSeq).toSeq
-      graft.operators.Dedup.releaseCaches()
+      Harness.release(spark, blocking = false)
       pref == plain
     }, n = 6)
   }

@@ -244,14 +244,13 @@ class SamplingSpec extends SparkSpec {
     assert(out.length === 3)
   }
   test("clusterSplitAssign: dup families never straddle a split; singletons follow splitAssign") {
-    import graft.operators.Dedup
     val docs = (1L to 60L).map(i => Tuple1(i)).toDF("doc_id")
     // clusters {1,2,3} and {10,11}; the rest are singletons
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("da", "db")
     val out = Sampling.clusterSplitAssign(docs, pairs, "doc_id",
       Seq("train" -> 800L, "val" -> 100L, "test" -> 100L))
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getString(2)))).toMap
-    Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     assert(out.size === 60)
     // family atomicity
     assert(out(1L) === out(2L) && out(2L) === out(3L))
@@ -346,7 +345,7 @@ class SamplingSpec extends SparkSpec {
       .as[(Long, String)].collect().toMap
     val plan = Sampling.splitRepairPlan(pairs, splits)
       .as[(Long, Long, String, String)].collect().toSeq
-    graft.operators.Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     // brute-force expectation: per chain {i, i+20, i+40}, majority
     // split with (count DESC, train<val<test) tie-break; movers only
     val order = Map("train" -> 0, "val" -> 1, "test" -> 2)

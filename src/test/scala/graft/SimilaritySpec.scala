@@ -99,13 +99,13 @@ class SimilaritySpec extends SparkSpec {
     ).toDF("vec_id", "embedding")
     val k1 = Similarity.mutualTopK(v, k = 1).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    graft.operators.Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     assert(k1 === Seq((1L, 2L)))
     // k=2: every vector's list holds both others -> all three mutual,
     // and the carried score is the symmetric cosine
     val k2 = Similarity.mutualTopK(v, k = 2).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    graft.operators.Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     assert(k2.map(p => (p._1, p._2)) === Seq((1L, 2L), (1L, 3L), (2L, 3L)))
     assert(k2.head._3 === 1000L, "cos(A,B) rounds to 1000 permille")
   }
@@ -116,13 +116,13 @@ class SimilaritySpec extends SparkSpec {
     }.toDF("vec_id", "embedding")
     val exact = Similarity.mutualTopK(corpus, k = 3).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    graft.operators.Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     // nprobe = nlist: the pool IS the corpus, so the ANN composition
     // must reproduce the brute anchor row for row (scores included —
     // both paths run the same native kernel)
     val full = Similarity.mutualTopKAnn(corpus, k = 3, nlist = 4, nprobe = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    graft.operators.Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     assert(full === exact)
     // partial probe: pair RECALL is governed by nprobe (a pooled list
     // can even promote a globally-lower neighbor when the higher ones
@@ -141,7 +141,7 @@ class SimilaritySpec extends SparkSpec {
     }
     val part = Similarity.mutualTopKAnn(corpus, k = 3, nlist = 4, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    graft.operators.Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     assert(part.nonEmpty)
     part.foreach { case (da, db, p) =>
       assert(p === cosPermille(vecs(da), vecs(db)),
@@ -158,11 +158,11 @@ class SimilaritySpec extends SparkSpec {
       val full = Similarity.mutualTopKAnn(corpus, k = 3, nlist = 4,
           nprobe = nprobe).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-      graft.operators.Dedup.releaseCaches()
+      Harness.release(spark, blocking = false)
       val sampled = Similarity.mutualTopKAnnSampled(corpus, k = 3,
           everyN = 4, nlist = 4, nprobe = nprobe).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-      graft.operators.Dedup.releaseCaches()
+      Harness.release(spark, blocking = false)
       // every pair the sampled audit reports is decided by the same
       // two top-k lists the full operator uses — so it must be
       // EXACTLY the full output filtered to pairs touching the sample
@@ -174,11 +174,11 @@ class SimilaritySpec extends SparkSpec {
     val all = Similarity.mutualTopKAnnSampled(corpus, k = 3, everyN = 1,
         nlist = 4, nprobe = 4).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    graft.operators.Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     val fullExact = Similarity.mutualTopKAnn(corpus, k = 3, nlist = 4,
         nprobe = 4).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    graft.operators.Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     assert(all === fullExact)
   }
 
@@ -214,7 +214,7 @@ class SimilaritySpec extends SparkSpec {
     ).toDF("vec_id", "embedding", "label")
     val out = Similarity.labelCentroids(emb)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    graft.operators.Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     // global sum vector = (2e6, 1e6); cos(label0=(2e6,0), g) =
     // 2/√5·... = 0.894 → 894‰; cos(label1=(0,1e6), g) = 1/√5 → 447‰
     assert(out.toSeq === Seq(
@@ -437,7 +437,7 @@ class SimilaritySpec extends SparkSpec {
     val out = Similarity.embeddingDrift(emb, batchSize = 2).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         if (r.isNullAt(3)) -1L else r.getLong(3)))
-    graft.operators.Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     assert(out === Array(
       (0L, 2L, 707L, -1L),
       (1L, 2L, 707L, 0L),
@@ -475,7 +475,7 @@ class SimilaritySpec extends SparkSpec {
     ).toDF("vec_id", "embedding", "label")
     val out = Similarity.labelConfusionGeometry(emb)
       .as[(Long, Long, Long, Long, Long)].collect().toSeq
-    graft.operators.Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     assert(out === Seq(
       (0L, 1L, 2L, 1L, 0L),     // orthogonal centroids
       (0L, 2L, 2L, 1L, 707L),   // 45°
@@ -512,7 +512,7 @@ class SimilaritySpec extends SparkSpec {
       .as[(Long, Long, Long)].collect().toSeq
     val b = Similarity.effectiveDim(col1)
       .as[(Long, Long, Long)].collect().toSeq
-    graft.operators.Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     assert(a === Seq((2L, 2L, 2000L)))
     assert(b === Seq((2L, 2L, 1000L)))
   }
@@ -526,7 +526,7 @@ class SimilaritySpec extends SparkSpec {
     val out = Similarity.cosineThresholdCurve(emb, sliceMod = 1L,
         thresholds = Seq(600L, 900L))
       .as[(Long, Long, Long)].collect().toSeq
-    graft.operators.Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     assert(out === Seq((600L, 4L, 4L), (900L, 1L, 2L)))
     intercept[IllegalArgumentException] {
       Similarity.cosineThresholdCurve(emb, thresholds = Seq(900L, 600L))
@@ -559,7 +559,7 @@ class SimilaritySpec extends SparkSpec {
         Similarity.gramState(emb.filter(col("vec_id") % 2 === 0)),
         Similarity.gramState(emb.filter(col("vec_id") % 2 === 1))))
       .as[(Long, Long, Long)].collect().toSeq
-    graft.operators.Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     assert(merged === oneShot)
     assert(oneShot.head._1 === 4L && oneShot.head._2 === 2L)
   }

@@ -621,7 +621,7 @@ class TextAnalysisSpec extends SparkSpec {
     val out = TextAnalysis.sourceVocabOverlap(docs)
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5)))
-    graft.operators.Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     // |A∩B| = 2, |A∪B| = 4 → 500‰; C pairs with nobody (no shared row)
     assert(out.toSeq === Seq(("A", "B", 3L, 3L, 2L, 500L)))
   }
@@ -659,7 +659,7 @@ class TextAnalysisSpec extends SparkSpec {
       .toDF("source", "text")
     val byId = TextAnalysis.sourceKlReport(docs).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-    graft.operators.Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     // A: x term 2·(693147−1098612−1386294+2197225) = 810932,
     //    y term (0−1098612−693147+2197225) = 405466 → 1216398 div 3
     assert(byId("A") === ((3L, 2L, 405466L)))
@@ -693,7 +693,7 @@ class TextAnalysisSpec extends SparkSpec {
       .toDF("source", "text")
     val out = TextAnalysis.hapaxShareReport(docs)
       .as[(String, Long, Long, Long)].collect().toSeq
-    graft.operators.Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     assert(out === Seq(("A", 2L, 1L, 500000L), ("B", 3L, 1L, 333333L)))
   }
 
@@ -706,7 +706,7 @@ class TextAnalysisSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val out = TextAnalysis.docTypicality(docs)
       .as[(Long, Long, Long)].collect().toSeq
-    graft.operators.Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     assert(out === Seq(
       (1L, 3L, 877030L),    // 2631090 div 3
       (2L, 2L, 1060132L)))  // 2120264 div 2 — rarer mix, higher surprisal
@@ -784,7 +784,7 @@ class TextAnalysisSpec extends SparkSpec {
       .toDF("source", "text")
     val out = TextAnalysis.bigramEntropyReport(docs)
       .as[(String, Long, Long, Long)].collect().toSeq
-    graft.operators.Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     assert(out === Seq(
       ("A", 4L, 2L, 0L),
       ("B", 3L, 3L, 462098L)))  // 2·693147 div 3
@@ -800,7 +800,7 @@ class TextAnalysisSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val out = TextAnalysis.chunkDupProfile(docs, chunkTokensN = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    graft.operators.Dedup.releaseCaches()
+    Harness.release(spark, blocking = false)
     assert(out.toSeq === Seq(
       (0L, 3L, 2L, 666666L), // "hdr txt" ×2 dup, "solo" unique
       (1L, 2L, 0L, 0L)))
