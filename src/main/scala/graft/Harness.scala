@@ -94,6 +94,7 @@ object Harness {
   def session(): SparkSession = {
     val spark = GraftSession.local(cores())
     GraftSession.muteBoundedWindowWarning()
+    GraftSession.muteReleaseWarning()
     spark
   }
 

@@ -3,14 +3,13 @@ package graft.core
 import java.io.File
 import java.nio.file.{Files, LinkOption, Path, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.SparkSession
-
-/** The one way persisted state is replaced: directory generations for the
-  * snapshot sinks, a park-promote-drop swap for catalog tables.
+/** The one way a persisted directory state (the snapshot sinks) is
+  * replaced: directory generations behind one symbolic link. Catalog
+  * index tables have their own life cycle in [[IndexTable]].
   *
-  * DIRECTORIES. `<live>` is a symbolic link to the live generation, a
-  * directory `g<N>` in the store `<live>.commit/` beside it. A writer
-  * builds generation N+1 in a fresh store directory, publishes it with one
+  * `<live>` is a symbolic link to the live generation, a directory
+  * `g<N>` in the store `<live>.commit/` beside it. A writer builds
+  * generation N+1 in a fresh store directory, publishes it with one
   * atomic rename of a new link over `<live>` (the single-pointer commit of
   * Delta Lake, on the local filesystem), then deletes everything in the
   * store the live link no longer reaches. A reader that follows `<live>` —
@@ -30,13 +29,7 @@ import org.apache.spark.sql.SparkSession
   * store and is published. Between those two renames `<live>` is absent, so
   * a reader fails on the missing path instead of seeing partial data, and
   * the next writer, finding the store holding generation 0 alone, publishes
-  * it.
-  *
-  * TABLES. The catalog has no multi-statement transaction, so
-  * [[swapTable]] is not atomic; its contract is "loud and retriable": every
-  * crash point leaves the data under some name, a reader fails
-  * table-not-found rather than reading a half-swapped state, and
-  * [[recoverTable]] at the next compact restores the parked copy. */
+  * it. */
 object Commit {
 
   /** The store holding the generations of the state published at `live`. */
@@ -135,29 +128,4 @@ object Commit {
 
   private def generations(st: Path): Seq[Int] = children(st)
     .map(_.getFileName.toString).collect { case s"g$n" if n.nonEmpty && n.forall(_.isDigit) => n.toInt }
-
-  /** Finish a table swap a crash interrupted after the park: the live name
-    * gone, `<table>_old` holding the data. Call before reading `table`. */
-  def recoverTable(spark: SparkSession, table: String): Unit = {
-    val parked = table + "_old"
-    if (!spark.catalog.tableExists(table) && spark.catalog.tableExists(parked))
-      spark.sql(s"ALTER TABLE $parked RENAME TO $table")
-  }
-
-  /** The staging name [[swapTable]] promotes, cleared of any leftover. */
-  def stageTable(spark: SparkSession, table: String): String = {
-    Layout.dropManagedTable(spark, table + "_compact")
-    table + "_compact"
-  }
-
-  /** Replace `table` by its fully written [[stageTable]]: recover, park the
-    * live table as `<table>_old`, promote the stage, drop the parked copy. */
-  def swapTable(spark: SparkSession, table: String): Unit = {
-    recoverTable(spark, table)
-    val parked = table + "_old"
-    Layout.dropManagedTable(spark, parked)
-    spark.sql(s"ALTER TABLE $table RENAME TO $parked")
-    spark.sql(s"ALTER TABLE ${table}_compact RENAME TO $table")
-    Layout.dropManagedTable(spark, parked)
-  }
 }

@@ -57,4 +57,18 @@ object GraftSession {
         "org.apache.spark.sql.execution.window.WindowExec").foreach(l =>
       org.apache.logging.log4j.core.config.Configurator.setLevel(
         l, org.apache.logging.log4j.Level.ERROR))
+
+  /** Silence the WARN `RDD.unpersist` logs for each local checkpoint
+    * `Harness.release` frees ("RDD <n> was locally checkpointed, its
+    * lineage has been truncated and cannot be recomputed after
+    * unpersisting") — for every main and the test JVM, not the library
+    * default. They release only after the results are materialized, so
+    * the line is noise there, one per checkpoint: most of a Verify run's
+    * output. Spark logs it under the concrete RDD class; every checkpoint
+    * here is a `Dataset.localCheckpoint`, a MapPartitionsRDD (the one
+    * logger that printed it in Verify runs); every other WARN of that
+    * logger is muted with it. */
+  def muteReleaseWarning(): Unit =
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.rdd.MapPartitionsRDD", org.apache.logging.log4j.Level.ERROR)
 }

@@ -37,21 +37,6 @@ object Layout {
     Fs.deleteRecursively(new java.io.File(warehouse, rel))
   }
 
-  /** True when `batchIds` (a single long id column named `keyCol`)
-    * intersects the tombstone side table `t`. The append paths of the
-    * persisted indexes call this to catch the retire→re-append trap:
-    * an id appended while still tombstoned would have its NEW rows
-    * subtracted by every probe alongside the old ones, and the next
-    * compact would permanently drop both generations. One O(batch)
-    * semi-join against the broadcast tombstone list (tiny by the
-    * broadcast-budget contract); false when the table is absent. */
-  def overlapsTombstones(spark: SparkSession, t: String,
-                         batchIds: DataFrame, keyCol: String): Boolean =
-    spark.catalog.tableExists(t) && !batchIds
-      .join(org.apache.spark.sql.functions.broadcast(
-        spark.table(t).distinct()), Seq(keyCol), "left_semi")
-      .isEmpty
-
   /** Write `df` as a bucketed+sorted managed table. Spark's bucket
     * layout requires the table catalog (`saveAsTable`); readers then
     * get `HashPartitioning(bucketCols, n)` from the scan for free. */

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.IndexTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -33,22 +34,6 @@ object AnnIndex {
   private val PlanesProp = "graft.lsh.numPlanes"
   private val TablesProp = "graft.lsh.numTables"
   private val NlistProp = "graft.ivf.nlist"
-  private val BucketsProp = "graft.lsh.buckets"
-  private val IvfBucketsProp = "graft.ivf.buckets"
-
-  private def setProps(spark: SparkSession, table: String, kv: (String, String)*): Unit =
-    spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES (" +
-      kv.map { case (k, v) => s"'$k'='$v'" }.mkString(", ") + ")")
-
-  private def getProp(spark: SparkSession, table: String, key: String): Int = {
-    // catalog lookup only — no job, no scan
-    val rows = spark.sql(s"SHOW TBLPROPERTIES $table").collect()
-    rows.find(_.getString(0) == key).map(_.getString(1).toInt).getOrElse(
-      throw new IllegalArgumentException(
-        s"$table has no '$key' property — was it built by AnnIndex?"))
-  }
-
-  private def tombsTable(table: String) = table + "_tombs"
 
   /** TOMBSTONE delete from a persisted index (LSH signature table or
     * IVF assignment table) — the third leg of index maintenance after
@@ -63,66 +48,18 @@ object AnnIndex {
     * tombstones ≡ a probe of a fresh index built without the deleted
     * rows (AnnIndexSpec). */
   def deleteFromIndex(spark: SparkSession, table: String, ids: DataFrame,
-                      idCol: String = "vec_id"): Unit = {
-    // resolve the delete key explicitly — silently taking columns.head
-    // of a multi-column frame would tombstone the wrong values
-    val keyCol =
-      if (ids.columns.contains(idCol)) idCol
-      else {
-        require(ids.columns.length == 1,
-          s"ids has no '$idCol' column and is not single-column " +
-          s"(${ids.columns.mkString(", ")}) — pass idCol explicitly")
-        ids.columns.head
-      }
-    val rows = ids.select(col(keyCol).cast("long")
-      .as("neighbor_id")).distinct()
-    val t = tombsTable(table)
-    if (spark.catalog.tableExists(t))
-      rows.write.mode(org.apache.spark.sql.SaveMode.Append)
-        .format("parquet").saveAsTable(t)
-    else rows.write.format("parquet").saveAsTable(t)
-  }
+                      idCol: String = "vec_id"): Unit =
+    IndexTable.delete(spark, table, ids, idCol, "neighbor_id")
 
-  private def minusTombstones(spark: SparkSession, table: String,
-                              idx: DataFrame): DataFrame = {
-    val t = tombsTable(table)
-    if (spark.catalog.tableExists(t))
-      idx.join(broadcast(spark.table(t).distinct()), Seq("neighbor_id"),
-        "left_anti")
-    else idx
-  }
-
-  /** Fold tombstones into the LSH index: staged rewrite (write the
-    * kept rows to a side table through the SAME bucketed writer, swap
-    * by `Commit.swapTable`, drop the tombstones) — the probe-visible result is
-    * unchanged (spec-pinned), the broadcast list resets to empty.
-    * No-op without tombstones. */
+  /** Fold tombstones into the LSH index ([[IndexTable.compact]]): the
+    * probe-visible result is unchanged (spec-pinned), the broadcast
+    * list resets to empty. No-op without tombstones. */
   def compactLshIndex(spark: SparkSession, table: String): Unit =
-    compactIndex(spark, table, Seq("sig"), BucketsProp,
-      PlanesProp, TablesProp)
+    IndexTable.compact(spark, table)
 
   /** [[compactLshIndex]] for the IVF assignment table. */
   def compactIvfIndex(spark: SparkSession, assignTable: String): Unit =
-    compactIndex(spark, assignTable, Seq("cell"), IvfBucketsProp, NlistProp)
-
-  private def compactIndex(spark: SparkSession, table: String,
-                           bucketCols: Seq[String], bucketsProp: String,
-                           carryProps: String*): Unit = {
-    // a prior compact may have died mid-swap with the live name parked
-    // aside — repair that first or the property read below throws
-    graft.core.Commit.recoverTable(spark, table)
-    val t = tombsTable(table)
-    if (!spark.catalog.tableExists(t)) return
-    val buckets = getProp(spark, table, bucketsProp)
-    val props = (bucketsProp +: carryProps).map(p =>
-      p -> getProp(spark, table, p).toString)
-    val kept = minusTombstones(spark, table, spark.table(table))
-    val stage = graft.core.Commit.stageTable(spark, table)
-    graft.core.Layout.writeBucketed(kept, stage, buckets, bucketCols)
-    setProps(spark, stage, props: _*)
-    graft.core.Commit.swapTable(spark, table)
-    graft.core.Layout.dropManagedTable(spark, t)
-  }
+    IndexTable.compact(spark, assignTable)
 
   /** Build the LSH index: one row per (table, vector) with the
     * vector's signature in that table's plane family, bucketed by
@@ -132,23 +69,26 @@ object AnnIndex {
                     numTables: Int = 2, buckets: Int = 8,
                     idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     require(numTables >= 1, s"numTables ($numTables) must be >= 1")
-    val spark = corpus.sparkSession
-    graft.functions.GraftFunctions.register(spark)
-    val c = corpus.select(col(idCol).as("neighbor_id"),
-      col(vecCol).cast("array<float>").as("cv"))
-    // all numTables signatures come from ONE projection over ONE corpus
-    // scan: posexplode over the array of per-table signature expressions
-    // (pos = table id, matching the t*numPlanes plane-family offset).
-    // The per-table unionByName spelling read the corpus numTables
-    // times before the write.
-    val signed = c.select(col("neighbor_id"), col("cv"),
+    IndexTable.build(buckets, PlanesProp -> numPlanes, TablesProp -> numTables)(
+      (table, signed(corpus, numPlanes, numTables, idCol, vecCol), Seq("sig")))
+  }
+
+  /** (tbl, neighbor_id, cv, sig) rows of `vectors` in each of the
+    * `numTables` plane families. All signatures come from ONE projection
+    * over ONE scan: posexplode over the array of per-table signature
+    * expressions (pos = table id, matching the t*numPlanes plane-family
+    * offset); a per-table unionByName spelling reads the input
+    * numTables times. */
+  private def signed(vectors: DataFrame, numPlanes: Int, numTables: Int,
+                     idCol: String, vecCol: String): DataFrame = {
+    graft.functions.GraftFunctions.register(vectors.sparkSession)
+    vectors.select(col(idCol).as("neighbor_id"),
+        col(vecCol).cast("array<float>").as("cv"))
+      .select(col("neighbor_id"), col("cv"),
         posexplode(array((0 until numTables).map(t =>
           call_function("lsh_sig", col("cv"), lit(numPlanes), lit(t * numPlanes))): _*))
           .as(Seq("tbl", "sig")))
       .select(col("tbl"), col("neighbor_id"), col("cv"), col("sig"))
-    graft.core.Layout.writeBucketed(signed, table, buckets, Seq("sig"))
-    setProps(spark, table, PlanesProp -> numPlanes.toString,
-      TablesProp -> numTables.toString, BucketsProp -> buckets.toString)
   }
 
   /** INCREMENTAL maintenance of a [[buildLshIndex]] table: sign a new
@@ -163,33 +103,15 @@ object AnnIndex {
     * across batches (an id re-appended shadows nothing — both rows
     * surface; the top-k tie-break keeps results deterministic
     * regardless); ids retired via [[deleteFromIndex]] are safe to
-    * re-append — the overlap guard below folds the tombstones first
+    * re-append — [[IndexTable.append]] folds the tombstones first
     * (one index rewrite) so the old rows can't hide the new ones. */
   def appendToLshIndex(batch: DataFrame, table: String,
                        idCol: String = "vec_id",
                        vecCol: String = "embedding"): Unit = {
     val spark = batch.sparkSession
-    graft.functions.GraftFunctions.register(spark)
-    // retire→re-append: a batch id still tombstoned would have its new
-    // rows subtracted alongside the old — fold the tombstones first
-    if (graft.core.Layout.overlapsTombstones(spark, tombsTable(table),
-        batch.select(col(idCol).cast("long").as("neighbor_id")), "neighbor_id"))
-      compactLshIndex(spark, table)
-    val numPlanes = getProp(spark, table, PlanesProp)
-    val numTables = getProp(spark, table, TablesProp)
-    val buckets = getProp(spark, table, BucketsProp)
-    val c = batch.select(col(idCol).as("neighbor_id"),
-      col(vecCol).cast("array<float>").as("cv"))
-    val signed = c.select(col("neighbor_id"), col("cv"),
-        posexplode(array((0 until numTables).map(t =>
-          call_function("lsh_sig", col("cv"), lit(numPlanes), lit(t * numPlanes))): _*))
-          .as(Seq("tbl", "sig")))
-      .select(col("tbl"), col("neighbor_id"), col("cv"), col("sig"))
-    // append through the SAME bucketed writer (bucket count pinned at
-    // build): new per-bucket files land beside the old ones and the
-    // scan's HashPartitioning guarantee survives the append
-    graft.core.Layout.writeBucketed(signed, table, buckets, Seq("sig"),
-      org.apache.spark.sql.SaveMode.Append)
+    IndexTable.append(batch.select(col(idCol)), table)(Seq(signed(batch,
+      IndexTable.param(spark, table, PlanesProp),
+      IndexTable.param(spark, table, TablesProp), idCol, vecCol)))
   }
 
   /** INCREMENTAL maintenance of a [[buildIvfIndex]] assignment table:
@@ -207,25 +129,18 @@ object AnnIndex {
                        centersTable: String,
                        idCol: String = "vec_id",
                        vecCol: String = "embedding"): Unit = {
-    val spark = batch.sparkSession
-    // same retire→re-append guard as the LSH append path
-    if (graft.core.Layout.overlapsTombstones(spark, tombsTable(assignTable),
-        batch.select(col(idCol).cast("long").as("neighbor_id")), "neighbor_id"))
-      compactIvfIndex(spark, assignTable)
-    val buckets = getProp(spark, assignTable, IvfBucketsProp)
-    val centers = spark.table(centersTable)
+    val centers = batch.sparkSession.table(centersTable)
     val c = batch.select(col(idCol).as("neighbor_id"),
       Similarity.asDouble(col(vecCol)).as("cv"))
     // nearest existing centroid via the bounded-aggregate probe helper
     // at nprobe = 1 — same (cdist ASC, cell ASC) selection the old
     // rank window applied, without sorting |batch|·nlist rows
-    val assigned = Similarity.nearestCells(
-        c.select(col("neighbor_id").as("query_id"), col("cv").as("qv")),
-        centers, nprobe = 1)
-      .select(col("query_id").as("neighbor_id"), col("qv").as("cv"),
-        col("cell"))
-    graft.core.Layout.writeBucketed(assigned, assignTable, buckets, Seq("cell"),
-      org.apache.spark.sql.SaveMode.Append)
+    IndexTable.append(batch.select(col(idCol)), assignTable)(Seq(
+      Similarity.nearestCells(
+          c.select(col("neighbor_id").as("query_id"), col("cv").as("qv")),
+          centers, nprobe = 1)
+        .select(col("query_id").as("neighbor_id"), col("qv").as("cv"),
+          col("cell"))))
   }
 
   /** Probe a prebuilt LSH index: [[Similarity.lshTopK]] semantics, but
@@ -237,12 +152,12 @@ object AnnIndex {
                       k: Int, multiProbe: Int = 2,
                       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    val numPlanes = getProp(spark, table, PlanesProp)
-    val numTables = getProp(spark, table, TablesProp)
+    val numPlanes = IndexTable.param(spark, table, PlanesProp)
+    val numTables = IndexTable.param(spark, table, TablesProp)
     require(multiProbe >= 0 && multiProbe <= numPlanes,
       s"multiProbe ($multiProbe) must be in [0, numPlanes=$numPlanes]")
     val masks = Similarity.probeMasks(numPlanes, multiProbe)
-    val idx = minusTombstones(spark, table, spark.table(table))
+    val idx = IndexTable.live(spark, table, spark.table(table))
     val q = queries.select(col(idCol).as("query_id"),
       col(vecCol).cast("array<float>").as("qv"))
     val scored = (0 until numTables).map { t =>
@@ -289,9 +204,7 @@ object AnnIndex {
     val model = new KMeans().setK(nlist).setSeed(42L).setMaxIter(5)
       .setFeaturesCol("feat").setPredictionCol("cell").fit(fitInput)
     val assigned = model.transform(c).select("neighbor_id", "cv", "cell")
-    graft.core.Layout.writeBucketed(assigned, assignTable, buckets, Seq("cell"))
-    setProps(spark, assignTable, NlistProp -> nlist.toString,
-      IvfBucketsProp -> buckets.toString)
+    IndexTable.build(buckets, NlistProp -> nlist)((assignTable, assigned, Seq("cell")))
     import spark.implicits._
     val centers = model.clusterCenters.zipWithIndex
       .map { case (v, i) => (i, v.toArray) }.toSeq.toDF("cell", "center")
@@ -305,7 +218,7 @@ object AnnIndex {
   def ivfTopKPrebuilt(spark: SparkSession, queries: DataFrame, assignTable: String,
                       centersTable: String, k: Int, nprobe: Int = 3,
                       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val nlist = getProp(spark, assignTable, NlistProp)
+    val nlist = IndexTable.param(spark, assignTable, NlistProp)
     require(nprobe >= 1 && nprobe <= nlist,
       s"nprobe ($nprobe) must be in [1, nlist=$nlist]")
     val centers = spark.table(centersTable)
@@ -314,7 +227,7 @@ object AnnIndex {
     // bounded-aggregate coarse probe (Similarity.nearestCells): the
     // rank-window spelling shuffled |Q|·nlist distance rows per call
     val probed = Similarity.nearestCells(q, centers, nprobe)
-    val scored = minusTombstones(spark, assignTable, spark.table(assignTable))
+    val scored = IndexTable.live(spark, assignTable, spark.table(assignTable))
       .join(broadcast(probed), Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),

@@ -1236,7 +1236,6 @@ object Dedup {
     a.unionByName(b)
 
   private val ShingleKProp = "graft.pairstate.shingleK"
-  private val StateBucketsProp = "graft.pairstate.buckets"
 
   /** Persist a [[pairState]] as a catalog table, bucketed on doc_id
     * (the [[AnnIndex]] discipline): shingleK travels in TABLE
@@ -1246,13 +1245,9 @@ object Dedup {
     * on the state side. One corpus scan, one write-side shuffle,
     * never again. */
   def writePairState(docs: DataFrame, table: String, shingleK: Int = 2,
-                     buckets: Int = 8): Unit = {
-    val spark = docs.sparkSession
-    graft.core.Layout.writeBucketed(pairState(docs, shingleK), table,
-      buckets, Seq("doc_id"))
-    spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES (" +
-      s"'$ShingleKProp'='$shingleK', '$StateBucketsProp'='$buckets')")
-  }
+                     buckets: Int = 8): Unit =
+    graft.core.IndexTable.build(buckets, ShingleKProp -> shingleK)(
+      (table, pairState(docs, shingleK), Seq("doc_id")))
 
   /** INCREMENTAL maintenance of a [[writePairState]] table: fingerprint
     * a new batch with the table's OWN pinned shingleK (read from the
@@ -1267,19 +1262,10 @@ object Dedup {
     * consumer and the next compact drops both generations); such an
     * append pays one state rewrite, tombstone-disjoint batches stay
     * O(batch). */
-  def appendPairState(deltaDocs: DataFrame, table: String): Unit = {
-    val spark = deltaDocs.sparkSession
-    if (graft.core.Layout.overlapsTombstones(spark, table + "_tombs",
-        deltaDocs.select(col("doc_id").cast("long").as("doc_id")), "doc_id"))
-      compactPairState(spark, table)
-    def prop(key: String): Int = spark.sql(s"SHOW TBLPROPERTIES $table")
-      .collect().find(_.getString(0) == key).map(_.getString(1).toInt)
-      .getOrElse(throw new IllegalArgumentException(
-        s"$table has no '$key' property — was it built by writePairState?"))
-    graft.core.Layout.writeBucketed(pairState(deltaDocs, prop(ShingleKProp)),
-      table, prop(StateBucketsProp), Seq("doc_id"),
-      org.apache.spark.sql.SaveMode.Append)
-  }
+  def appendPairState(deltaDocs: DataFrame, table: String): Unit =
+    graft.core.IndexTable.append(deltaDocs.select(col("doc_id")), table)(Seq(
+      pairState(deltaDocs,
+        graft.core.IndexTable.param(deltaDocs.sparkSession, table, ShingleKProp))))
 
   /** TOMBSTONE retirement from a [[writePairState]] table — the
     * `AnnIndex.deleteFromIndex` discipline on the mining state:
@@ -1290,58 +1276,21 @@ object Dedup {
     * state rewrite. Spec-proven: mining the tombstoned state ≡ mining
     * a state rebuilt without the retired docs. */
   def deleteFromPairState(spark: org.apache.spark.sql.SparkSession, table: String,
-                          ids: DataFrame, idCol: String = "doc_id"): Unit = {
-    val keyCol =
-      if (ids.columns.contains(idCol)) idCol
-      else {
-        require(ids.columns.length == 1,
-          s"ids has no '$idCol' column and is not single-column " +
-          s"(${ids.columns.mkString(", ")}) — pass idCol explicitly")
-        ids.columns.head
-      }
-    val rows = ids.select(col(keyCol).cast("long").as("doc_id")).distinct()
-    val t = table + "_tombs"
-    if (spark.catalog.tableExists(t))
-      rows.write.mode(org.apache.spark.sql.SaveMode.Append)
-        .format("parquet").saveAsTable(t)
-    else rows.write.format("parquet").saveAsTable(t)
-  }
+                          ids: DataFrame, idCol: String = "doc_id"): Unit =
+    graft.core.IndexTable.delete(spark, table, ids, idCol, "doc_id")
 
   /** THE read gate for a persisted pair state: the table minus its
     * tombstones. Every consumer ([[pairsFromState]], [[pairsAppend]]'s
     * base, survivor picks, audits) goes through here so a retired doc
     * can never leak back into a mining pass. */
-  def readPairState(spark: org.apache.spark.sql.SparkSession, table: String): DataFrame = {
-    val t = table + "_tombs"
-    if (spark.catalog.tableExists(t))
-      spark.table(table).join(broadcast(spark.table(t).distinct()),
-        Seq("doc_id"), "left_anti")
-    else spark.table(table)
-  }
+  def readPairState(spark: org.apache.spark.sql.SparkSession, table: String): DataFrame =
+    graft.core.IndexTable.live(spark, table, spark.table(table))
 
-  /** Fold the tombstones into the state table: staged bucketed rewrite
-    * + `Commit.swapTable` (not crash-atomic, but the state always
-    * survives under some name), properties carried, tombstone table
-    * dropped. [[readPairState]] results are unchanged (spec-pinned).
-    * No-op without tombstones. */
-  def compactPairState(spark: org.apache.spark.sql.SparkSession, table: String): Unit = {
-    // repair a mid-swap crash from a prior compact before reading props
-    graft.core.Commit.recoverTable(spark, table)
-    val t = table + "_tombs"
-    if (!spark.catalog.tableExists(t)) return
-    def prop(key: String): Int = spark.sql(s"SHOW TBLPROPERTIES $table")
-      .collect().find(_.getString(0) == key).map(_.getString(1).toInt)
-      .getOrElse(throw new IllegalArgumentException(
-        s"$table has no '$key' property — was it built by writePairState?"))
-    val (k, buckets) = (prop(ShingleKProp), prop(StateBucketsProp))
-    val kept = readPairState(spark, table)
-    val stage = graft.core.Commit.stageTable(spark, table)
-    graft.core.Layout.writeBucketed(kept, stage, buckets, Seq("doc_id"))
-    spark.sql(s"ALTER TABLE $stage SET TBLPROPERTIES (" +
-      s"'$ShingleKProp'='$k', '$StateBucketsProp'='$buckets')")
-    graft.core.Commit.swapTable(spark, table)
-    graft.core.Layout.dropManagedTable(spark, t)
-  }
+  /** Fold the tombstones into the state table
+    * ([[graft.core.IndexTable.compact]]). [[readPairState]] results are
+    * unchanged (spec-pinned). No-op without tombstones. */
+  def compactPairState(spark: org.apache.spark.sql.SparkSession, table: String): Unit =
+    graft.core.IndexTable.compact(spark, table)
 
   /** Mine verified near-dup pairs from a [[pairState]] table —
     * identical output to [[minHashLshPairs]] over the documents the

@@ -197,48 +197,25 @@ object Retrieval {
     * inverted index once, query it many times" shape every search
     * engine ships, and the lexical sibling of
     * `AnnIndex.buildLshIndex`/`buildIvfIndex`. One corpus scan per
-    * table. k1/b/terms are query-time parameters; the only pinned
-    * table property is the bucket count, which [[appendToLexIndex]]
-    * and [[compactLexIndex]] must reuse so the bucketed-scan
+    * table. k1/b/terms are query-time parameters, so nothing is pinned
+    * but the bucket spec, which [[appendToLexIndex]] and
+    * [[compactLexIndex]] reuse from the catalog so the bucketed-scan
     * HashPartitioning guarantee survives index maintenance. */
   def buildLexIndex(docs: DataFrame, postingsTable: String,
-                    lengthsTable: String, buckets: Int = 8): Unit = {
-    val spark = docs.sparkSession
-    val lengths = docs.select(col("doc_id"),
-      TextAnalysis.tokenCountCol(col("text")).as("dl"))
-    graft.core.Layout.writeBucketed(lengths, lengthsTable, buckets,
-      Seq("doc_id"))
-    val postings = docs
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-      .groupBy("tok", "doc_id").agg(count(lit(1)).as("tf"))
-    graft.core.Layout.writeBucketed(postings, postingsTable, buckets,
-      Seq("tok"))
-    setLexBuckets(spark, postingsTable, buckets)
-    setLexBuckets(spark, lengthsTable, buckets)
-  }
+                    lengthsTable: String, buckets: Int = 8): Unit =
+    graft.core.IndexTable.build(buckets)(
+      (postingsTable, lexPostings(docs), Seq("tok")),
+      (lengthsTable, lexLengths(docs), Seq("doc_id")))
 
-  private val LexBucketsProp = "graft.lex.buckets"
+  private def lexPostings(docs: DataFrame): DataFrame = docs
+    .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
+    .groupBy("tok", "doc_id").agg(count(lit(1)).as("tf"))
 
-  private def setLexBuckets(spark: org.apache.spark.sql.SparkSession,
-                            table: String, buckets: Int): Unit =
-    spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES " +
-      s"('$LexBucketsProp'='$buckets')")
-
-  private def getLexBuckets(spark: org.apache.spark.sql.SparkSession,
-                            table: String): Int = {
-    // catalog lookup only — no job, no scan
-    val rows = spark.sql(s"SHOW TBLPROPERTIES $table").collect()
-    rows.find(_.getString(0) == LexBucketsProp)
-      .map(_.getString(1).toInt)
-      .getOrElse(throw new IllegalArgumentException(
-        s"$table has no '$LexBucketsProp' property — was it built by " +
-        "buildLexIndex?"))
-  }
-
-  private def lexTombsTable(postingsTable: String) = postingsTable + "_tombs"
+  private def lexLengths(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), TextAnalysis.tokenCountCol(col("text")).as("dl"))
 
   /** O(batch) index maintenance, ingest side: tokenize ONLY the new
-    * docs and append through the same bucketed writers (bucket count
+    * docs and append through the same bucketed writers (bucket spec
     * read from the catalog, so the bucket-pruned probe shape survives
     * the append). Batches must carry doc_ids not already LIVE in the
     * index — an id re-appended while live would double its postings;
@@ -250,23 +227,9 @@ object Retrieval {
     * such an append pays one index rewrite; tombstone-disjoint batches
     * stay O(batch). */
   def appendToLexIndex(docs: DataFrame, postingsTable: String,
-                       lengthsTable: String): Unit = {
-    val spark = docs.sparkSession
-    if (graft.core.Layout.overlapsTombstones(spark,
-        lexTombsTable(postingsTable),
-        docs.select(col("doc_id").cast("long").as("doc_id")), "doc_id"))
-      compactLexIndex(spark, postingsTable, lengthsTable)
-    val buckets = getLexBuckets(spark, postingsTable)
-    val lengths = docs.select(col("doc_id"),
-      TextAnalysis.tokenCountCol(col("text")).as("dl"))
-    graft.core.Layout.writeBucketed(lengths, lengthsTable, buckets,
-      Seq("doc_id"), org.apache.spark.sql.SaveMode.Append)
-    val postings = docs
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-      .groupBy("tok", "doc_id").agg(count(lit(1)).as("tf"))
-    graft.core.Layout.writeBucketed(postings, postingsTable, buckets,
-      Seq("tok"), org.apache.spark.sql.SaveMode.Append)
-  }
+                       lengthsTable: String): Unit =
+    graft.core.IndexTable.append(docs.select(col("doc_id")),
+      postingsTable, lengthsTable)(Seq(lexPostings(docs), lexLengths(docs)))
 
   /** TOMBSTONE delete from the persisted lexical index — the
     * `AnnIndex.deleteFromIndex` discipline on the BM25 side: retired
@@ -280,58 +243,15 @@ object Retrieval {
     * idf shift and all. */
   def deleteFromLexIndex(spark: org.apache.spark.sql.SparkSession,
                          postingsTable: String, ids: DataFrame,
-                         idCol: String = "doc_id"): Unit = {
-    val keyCol =
-      if (ids.columns.contains(idCol)) idCol
-      else {
-        require(ids.columns.length == 1,
-          s"ids has no '$idCol' column and is not single-column " +
-          s"(${ids.columns.mkString(", ")}) — pass idCol explicitly")
-        ids.columns.head
-      }
-    val rows = ids.select(col(keyCol).cast("long").as("doc_id")).distinct()
-    val t = lexTombsTable(postingsTable)
-    if (spark.catalog.tableExists(t))
-      rows.write.mode(org.apache.spark.sql.SaveMode.Append)
-        .format("parquet").saveAsTable(t)
-    else rows.write.format("parquet").saveAsTable(t)
-  }
+                         idCol: String = "doc_id"): Unit =
+    graft.core.IndexTable.delete(spark, postingsTable, ids, idCol, "doc_id")
 
-  private def minusLexTombstones(spark: org.apache.spark.sql.SparkSession,
-                                 postingsTable: String,
-                                 df: DataFrame): DataFrame = {
-    val t = lexTombsTable(postingsTable)
-    if (spark.catalog.tableExists(t))
-      df.join(broadcast(spark.table(t).distinct()), Seq("doc_id"),
-        "left_anti")
-    else df
-  }
-
-  /** Fold the tombstones into both index tables: staged rewrite of
-    * the kept rows through the SAME bucketed writers, then
-    * `Commit.swapTable` (not crash-atomic, but the data always survives
-    * under some name and a failed swap is loud + retriable), then drop
-    * the tombstone table. Probe-visible results are unchanged
-    * (RetrievalSpec-pinned). No-op without tombstones. */
+  /** Fold the tombstones into both index tables
+    * ([[graft.core.IndexTable.compact]]). Probe-visible results are
+    * unchanged (RetrievalSpec-pinned). No-op without tombstones. */
   def compactLexIndex(spark: org.apache.spark.sql.SparkSession,
-                      postingsTable: String, lengthsTable: String): Unit = {
-    // repair a mid-swap crash from a prior compact (either table) first
-    graft.core.Commit.recoverTable(spark, postingsTable)
-    graft.core.Commit.recoverTable(spark, lengthsTable)
-    val t = lexTombsTable(postingsTable)
-    if (!spark.catalog.tableExists(t)) return
-    val buckets = getLexBuckets(spark, postingsTable)
-    def rewrite(table: String, bucketCols: Seq[String]): Unit = {
-      val kept = minusLexTombstones(spark, postingsTable, spark.table(table))
-      val stage = graft.core.Commit.stageTable(spark, table)
-      graft.core.Layout.writeBucketed(kept, stage, buckets, bucketCols)
-      setLexBuckets(spark, stage, buckets)
-      graft.core.Commit.swapTable(spark, table)
-    }
-    rewrite(postingsTable, Seq("tok"))
-    rewrite(lengthsTable, Seq("doc_id"))
-    graft.core.Layout.dropManagedTable(spark, t)
-  }
+                      postingsTable: String, lengthsTable: String): Unit =
+    graft.core.IndexTable.compact(spark, postingsTable, lengthsTable)
 
   /** BM25 top-k over the persisted index: identical output to
     * [[bm25TopK]] (RetrievalSpec asserts row-for-row equality), but
@@ -351,9 +271,9 @@ object Retrieval {
     // tombstones subtract from BOTH legs: tf (df shrinks per term) and
     // dl (N and avgdl shrink) — scoreBm25 derives every corpus stat
     // from these inputs, so the tombstoned probe ≡ a rebuilt index
-    val tf = minusLexTombstones(spark, postingsTable,
+    val tf = graft.core.IndexTable.live(spark, postingsTable,
       spark.table(postingsTable).filter(col("tok").isin(termSet: _*)))
-    val dl = minusLexTombstones(spark, postingsTable, spark.table(lengthsTable))
+    val dl = graft.core.IndexTable.live(spark, postingsTable, spark.table(lengthsTable))
     scoreBm25(tf, dl, k, k1, b)
   }
 

@@ -185,18 +185,27 @@ class AnnIndexSpec extends SparkSpec {
                                      probe: () => Set[Seq[Any]],
                                      fresh: () => Set[Seq[Any]])
 
-  private def parkedCompactors = {
+  private def lexDocs = {
     import spark.implicits._
-    val lexDocs = Seq((1L, "cat dog cat"), (2L, "cat fish"), (3L, "dog dog dog dog"),
+    Seq((1L, "cat dog cat"), (2L, "cat fish"), (3L, "dog dog dog dog"),
       (4L, "bird")).toDF("doc_id", "text")
+  }
+
+  private def stateDocs = {
+    import spark.implicits._
     val text = "spark makes big data small again with catalyst and tungsten " +
       "columnar execution whole stage codegen adaptive query execution"
-    val stateDocs = Seq(1L -> text, 2L -> text, 3L -> (text + " extra tail tokens"),
+    Seq(1L -> text, 2L -> text, 3L -> (text + " extra tail tokens"),
       4L -> "completely different text about cooking pasta with tomatoes and basil")
       .toDF("doc_id", "text")
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
-    Seq(
-      ParkedCompactor("BM25 lex index", Seq("lex_rec", "lex_rec_len"), "lex_rec",
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+
+  private def parkedCompactors = {
+    import spark.implicits._
+    def lex(name: String, parked: String) =
+      ParkedCompactor(name, Seq("lex_rec", "lex_rec_len"), parked,
         () => {
           Retrieval.buildLexIndex(lexDocs, "lex_rec", "lex_rec_len", buckets = 4)
           Retrieval.deleteFromLexIndex(spark, "lex_rec", Seq(2L).toDF("doc_id"))
@@ -205,7 +214,10 @@ class AnnIndexSpec extends SparkSpec {
         () => rows(Retrieval.bm25TopKPrebuilt(spark, "lex_rec", "lex_rec_len",
           Seq("cat", "fish"), k = 10)),
         () => rows(Retrieval.bm25TopK(lexDocs.filter(col("doc_id") =!= 2L),
-          Seq("cat", "fish"), k = 10))),
+          Seq("cat", "fish"), k = 10)))
+    Seq(
+      lex("BM25 lex index", "lex_rec"),
+      lex("BM25 lex lengths", "lex_rec_len"),
       ParkedCompactor("pair state", Seq("ps_rec"), "ps_rec",
         () => {
           Dedup.writePairState(stateDocs, "ps_rec", shingleK = 2, buckets = 2)
@@ -218,7 +230,7 @@ class AnnIndexSpec extends SparkSpec {
           shingleK = 2, minPermille = 300))))
   }
 
-  for (name <- Seq("BM25 lex index", "pair state"))
+  for (name <- Seq("BM25 lex index", "BM25 lex lengths", "pair state"))
     test(s"compact recovers a crash parked mid-swap: $name") {
       val c = parkedCompactors.find(_.name == name).get
       c.tables.flatMap(t => Seq(t, t + "_old", t + "_compact", t + "_tombs"))
@@ -251,4 +263,57 @@ class AnnIndexSpec extends SparkSpec {
     assert(pre.collect().toSeq === brute.collect().toSeq,
       "deleted index at nprobe=nlist must equal brute force over the survivors")
   }
+
+  /** One persisted index family: the tables of an index named `t`, a
+    * build of `t` from a frame, a tombstone delete and a probe. */
+  private case class IndexFamily(name: String, tables: String => Seq[String],
+                                 input: () => org.apache.spark.sql.DataFrame,
+                                 deleted: () => org.apache.spark.sql.DataFrame,
+                                 build: (org.apache.spark.sql.DataFrame, String) => Unit,
+                                 delete: (String, org.apache.spark.sql.DataFrame) => Unit,
+                                 probe: String => Set[Seq[Any]])
+
+  private def indexFamilies = {
+    import spark.implicits._
+    def emb = Tables.embeddings(spark, sf)
+    Seq(
+      IndexFamily("LSH", t => Seq(t), () => emb,
+        () => emb.filter(col("vec_id") % 7 === 3).select("vec_id"),
+        (df, t) => AnnIndex.buildLshIndex(df, t, numPlanes = 8, numTables = 2, buckets = 4),
+        (t, ids) => AnnIndex.deleteFromIndex(spark, t, ids),
+        t => rows(AnnIndex.lshTopKPrebuilt(spark, queriesDf, t, k = 5, multiProbe = 2))),
+      IndexFamily("IVF", t => Seq(t, t + "_c"), () => emb,
+        () => emb.filter(col("vec_id") % 5 === 1).select("vec_id"),
+        (df, t) => AnnIndex.buildIvfIndex(df, t, t + "_c", nlist = 8,
+          maxFitRows = 10000, buckets = 4),
+        (t, ids) => AnnIndex.deleteFromIndex(spark, t, ids),
+        t => rows(AnnIndex.ivfTopKPrebuilt(spark, queriesDf, t, t + "_c", k = 5, nprobe = 8))),
+      IndexFamily("BM25 lex index", t => Seq(t, t + "_len"), () => lexDocs,
+        () => Seq(2L).toDF("doc_id"),
+        (df, t) => Retrieval.buildLexIndex(df, t, t + "_len", buckets = 4),
+        (t, ids) => Retrieval.deleteFromLexIndex(spark, t, ids),
+        t => rows(Retrieval.bm25TopKPrebuilt(spark, t, t + "_len", Seq("cat", "fish"), k = 10))),
+      IndexFamily("pair state", t => Seq(t), () => stateDocs,
+        () => Seq(2L).toDF("doc_id"),
+        (df, t) => Dedup.writePairState(df, t, shingleK = 2, buckets = 2),
+        (t, ids) => Dedup.deleteFromPairState(spark, t, ids),
+        t => rows(Dedup.pairsFromState(Dedup.readPairState(spark, t), minPermille = 300))))
+  }
+
+  for (name <- Seq("LSH", "IVF", "BM25 lex index", "pair state"))
+    test(s"rebuilding an index under a used name drops its old tombstones: $name") {
+      val f = indexFamilies.find(_.name == name).get
+      val (t, ref) = ("rebuilt_idx", "fresh_idx")
+      (f.tables(t) ++ f.tables(ref)).flatMap(x => Seq(x, x + "_tombs"))
+        .foreach(Layout.dropManagedTable(spark, _))
+      try {
+        f.build(f.input(), ref)
+        f.build(f.input(), t)
+        f.delete(t, f.deleted())
+        assert(f.probe(t) !== f.probe(ref), "the delete must change the probe")
+        f.build(f.input(), t)
+        assert(f.probe(t) === f.probe(ref),
+          "a rebuild from the full input must answer like a fresh build")
+      } finally Harness.release(spark, blocking = false)
+    }
 }

@@ -24,6 +24,7 @@ object TestSession {
     // plan; the bench harness already mutes them — mute the test JVM
     // too so real warnings stay visible in `sbt test` output
     graft.core.GraftSession.muteBoundedWindowWarning()
+    graft.core.GraftSession.muteReleaseWarning()
     s
   }
   val sf0001 = "/root/testdata/sf0.001"
