@@ -3,19 +3,25 @@ package graft.core
 import java.io.File
 import java.nio.file.{Files, LinkOption, Path, Paths, StandardCopyOption}
 
-/** The one way a persisted directory state (the snapshot sinks) is
-  * replaced: directory generations behind one symbolic link. Catalog
-  * index tables have their own life cycle in [[IndexTable]].
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+
+/** The one way persisted state is replaced: directory generations behind
+  * one symbolic link. The snapshot sinks and the persisted indexes
+  * ([[IndexTable]]) all write through [[write]].
   *
   * `<live>` is a symbolic link to the live generation, a directory
   * `g<N>` in the store `<live>.commit/` beside it. A writer builds
   * generation N+1 in a fresh store directory, publishes it with one
   * atomic rename of a new link over `<live>` (the single-pointer commit of
   * Delta Lake, on the local filesystem), then deletes everything in the
-  * store the live link no longer reaches. A reader that follows `<live>` —
-  * `spark.read.parquet(<live>)` does — sees generation N or N+1 in full,
-  * never a mix. A generation may link an entry to a directory of an older
-  * one ([[inherit]]: the bucketed snapshot re-links its untouched buckets);
+  * store the live link no longer reaches. A reader that follows `<live>`
+  * — `spark.read.parquet(<live>)` does — sees generation N or N+1, never
+  * a mix; it is not pinned to one, so a read that lists files before a
+  * flip and reads them after it fails loudly
+  * (`FAILED_READ_FILE.FILE_NOT_EXIST`), and a retry reads N+1 in full. A
+  * generation may link an entry to a directory of an older one
+  * ([[inherit]]: the bucketed snapshot re-links its untouched buckets);
   * such a directory lives as long as the live generation links it.
   *
   * A crash leaves at worst an unpublished generation, a temporary link in
@@ -83,6 +89,16 @@ object Commit {
       if (!Files.exists(dst, LinkOption.NOFOLLOW_LINKS)) Files.createLink(dst, f.toPath)
     }
   }
+
+  /** Write `value` as JSON to the manifest of generation directory `dir`. */
+  def writeManifest(dir: File, value: AnyRef): Unit =
+    json.writeValue(new File(dir, "_MANIFEST.json"), value)
+
+  /** The manifest of `dir` (a generation or a live link) as a `T`, if any. */
+  def readManifest[T](dir: File, as: Class[T]): Option[T] =
+    Some(new File(dir, "_MANIFEST.json")).filter(_.exists()).map(json.readValue(_, as))
+
+  private val json = JsonMapper.builder().addModule(DefaultScalaModule).build()
 
   private def recover(link: Path, st: Path): Unit = {
     if (Files.isDirectory(link, LinkOption.NOFOLLOW_LINKS)) {

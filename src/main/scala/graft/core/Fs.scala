@@ -1,8 +1,6 @@
 package graft.core
 
-/** Local-filesystem helpers shared by the snapshot sink and the
-  * managed-table layout utilities (one recursive delete, not two
-  * drifting private copies). */
+/** Local-filesystem helpers of the commit protocol ([[Commit]]). */
 object Fs {
   /** Delete `f` and, if it is a real directory, everything under it. A
     * symbolic link is removed itself, never followed: a collected

@@ -1,164 +1,183 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.catalog.CatalogTable
-import org.apache.spark.sql.functions.{broadcast, col}
+import java.io.File
 
-/** The one life cycle of a persisted catalog index: the ANN tables
-  * (LSH signatures, IVF assignments), the BM25 lex index (postings and
-  * lengths) and the near-dup pair state all build, append, delete, read
-  * and compact through here.
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col}
+import org.apache.spark.sql.types.StructType
+
+/** The one life cycle of a persisted index — the ANN tables (LSH
+  * signatures; IVF centers and assignments), the BM25 lex index
+  * (postings and lengths), the near-dup pair state: build, append,
+  * delete, read and compact.
   *
-  * An index is a GROUP of bucketed managed tables; the first names the
-  * group. Its parameters (`graft.*` keys) are pinned in each table's
-  * TBLPROPERTIES, so a later append or probe can never disagree with the
-  * build. The bucket count and columns are the catalog's own bucket
-  * spec: Spark refuses a bucketed append that does not match it.
+  * An index is a GROUP of tables published as the [[Commit]] generations
+  * of one link, `<warehouse>/<group>.index`. A generation holds a
+  * directory of parquet files per table (bucketed and sorted on its bucket
+  * columns, if any), an optional `_tombs/` and a `_MANIFEST.json` pinning
+  * the bucket count, each table's bucket columns and schema, the id column
+  * and the `graft.*` parameters. Every write publishes one generation with
+  * one link flip: crashes and readers get [[Commit]]'s contract. Tables
+  * are read through catalog entries ([[read]]), external bucketed tables
+  * at `<link>/<table>` (the scan keeps its HashPartitioning), made from
+  * the manifest after each publish and whenever one is missing, so a new
+  * process opens an index another process built.
   *
-  * Deletes are TOMBSTONES: the ids land in one small side table
-  * `<first>_tombs` (a single long column named after the group's key),
-  * and [[live]] subtracts it with a broadcast anti-join, so a delete is
-  * O(|ids|) and never rewrites the index. [[compact]] folds the
-  * tombstones in; [[append]] folds them first when the batch re-adds a
-  * tombstoned id. A (re)build drops them: they name ids of the index
-  * the build replaces.
-  *
-  * CRASH CONTRACT. The catalog has no multi-statement transaction, so a
-  * compaction's swap is not atomic; its contract is "loud and
-  * retriable": the live table is parked as `<table>_old`, the stage
-  * `<table>_compact` is promoted, then the parked copy is dropped. Every
-  * crash point leaves the data under some name, a reader fails
-  * table-not-found rather than reading a half-swapped state, and the
-  * next [[compact]] restores the parked copy before it reads anything.
-  * The tombstones are dropped last, after every table of the group is
-  * swapped, so a retry folds them again. */
+  * Deletes are TOMBSTONES: ids land in `_tombs/` and [[read]] subtracts
+  * them with a broadcast anti-join from every table carrying the id
+  * column, so a delete is O(|ids|) and never rewrites the index.
+  * [[compact]] folds them in; [[append]] folds them first when the batch
+  * re-adds a tombstoned id. A (re)build has none. */
 object IndexTable {
 
-  /** (Re)build an index group: each `(table, rows, bucketCols)` is
-    * written bucketed and sorted on `bucketCols` into `buckets` buckets
-    * with `params` pinned, then the group's tombstones are dropped. */
-  def build(buckets: Int, params: (String, Int)*)(tables: (String, DataFrame, Seq[String])*): Unit = {
-    val spark = tables.head._2.sparkSession
-    tables.foreach { case (table, rows, bucketCols) =>
-      Layout.writeBucketed(rows, table, buckets, bucketCols)
-      setParams(spark, table, params.map { case (k, v) => k -> v.toString })
+  /** A group's manifest; `key` is the id column deletes name. */
+  private[graft] case class Manifest(buckets: Int, key: String, tables: Seq[Table],
+                                     params: Map[String, Int])
+
+  /** One table of a group: no bucket columns means plain parquet files. */
+  private[graft] case class Table(name: String, bucketColumns: Seq[String], schema: String)
+
+  private val Tombs = "_tombs"
+
+  /** (Re)build `group`: each `(table, rows, bucketCols)` is written in
+    * order, bucketed and sorted on `bucketCols` into `buckets` buckets,
+    * with `params` pinned; `key` is the id column of the rows. */
+  def build(group: String, key: String, buckets: Int, params: (String, Int)*)(
+      tables: (String, DataFrame, Seq[String])*): Unit =
+    commit(tables.head._2.sparkSession, group) { gen =>
+      Manifest(buckets, key, tables.map { case (table, rows, cols) => writeTable(rows, gen,
+        Table(table, cols, StructType(rows.schema.map(_.copy(nullable = true))).toDDL), buckets)
+      }, params.toMap)
     }
-    Layout.dropManagedTable(spark, tombs(tables.head._1))
-  }
 
-  /** The pinned parameter `key` of `table`: a catalog lookup, no job. */
-  def param(spark: SparkSession, table: String, key: String): Int =
-    metadata(spark, table).properties.get(key).map(_.toInt).getOrElse(
-      throw new IllegalArgumentException(
-        s"$table has no '$key' property — was it built as a graft index?"))
+  /** The pinned parameter `key` of `group`: a manifest read, no job. */
+  def param(spark: SparkSession, group: String, key: String): Int =
+    manifest(spark, group).params.getOrElse(key, throw new IllegalArgumentException(
+      s"index $group has no '$key' parameter — was it built as a graft index?"))
 
-  /** O(batch) append to every table of a group, through each table's
-    * own bucket spec so the scan's HashPartitioning survives. `ids` (one
-    * column) are the batch's keys: when one is still tombstoned, the
-    * group is compacted first — otherwise its tombstone would subtract
-    * the new rows too, and the next compact would drop both generations.
-    * `rows` is evaluated after that fold, one frame per table in order. */
-  def append(ids: DataFrame, tables: String*)(rows: => Seq[DataFrame]): Unit = {
+  /** O(batch) append: each `(table, rows)` is written with the table's
+    * bucket spec beside hard links to its live files; other tables are
+    * linked in unchanged. When a key of `ids` (one column) is still
+    * tombstoned, the group is compacted first — else the tombstone would
+    * hide the new rows too. `rows` is evaluated after that fold. */
+  def append(group: String, ids: DataFrame)(rows: => Seq[(String, DataFrame)]): Unit = {
     val spark = ids.sparkSession
-    if (overlapsTombstones(spark, tables.head, ids)) compact(spark, tables: _*)
-    tables.zip(rows).foreach { case (table, df) =>
-      val spec = bucketSpec(metadata(spark, table))
-      Layout.writeBucketed(df, table, spec.numBuckets, spec.bucketColumnNames,
-        SaveMode.Append)
-    }
-  }
-
-  /** Tombstone the ids of `ids` in the group named by `first`: column
-    * `idCol`, or the only column; stored as long column `key`. */
-  def delete(spark: SparkSession, first: String, ids: DataFrame, idCol: String,
-             key: String): Unit = {
-    // resolve the delete key explicitly — silently taking columns.head
-    // of a multi-column frame would tombstone the wrong values
-    val keyCol =
-      if (ids.columns.contains(idCol)) idCol
-      else {
-        require(ids.columns.length == 1,
-          s"ids has no '$idCol' column and is not single-column " +
-          s"(${ids.columns.mkString(", ")}) — pass idCol explicitly")
-        ids.columns.head
+    val m = manifest(spark, group)
+    // one O(batch) semi-join against the broadcast tombstone list
+    if (tombstones(spark, group, m.key).exists(dead => !ids
+        .select(col(ids.columns.head).cast("long").as(m.key))
+        .join(broadcast(dead), Seq(m.key), "left_semi").isEmpty))
+      compact(spark, group)
+    val live = link(spark, group)
+    commit(spark, group) { gen =>
+      val batch = rows
+      m.tables.foreach { t =>
+        batch.find(_._1.equalsIgnoreCase(t.name)) match {
+          case Some((_, df)) =>
+            writeTable(df, gen, t, m.buckets)
+            Commit.linkFiles(new File(live, t.name), new File(gen, t.name))
+          case None => Commit.inherit(live.getPath, gen, t.name)
+        }
       }
-    ids.select(col(keyCol).cast("long").as(key)).distinct()
-      .write.mode(SaveMode.Append).format("parquet").saveAsTable(tombs(first))
-  }
-
-  /** `df`, read from a table of the group named by `first`, without the
-    * rows of tombstoned ids. */
-  def live(spark: SparkSession, first: String, df: DataFrame): DataFrame = {
-    val t = tombs(first)
-    if (spark.catalog.tableExists(t)) {
-      val dead = spark.table(t)
-      df.join(broadcast(dead.distinct()), Seq(dead.columns.head), "left_anti")
-    } else df
-  }
-
-  /** Fold the group's tombstones into its tables: each is rewritten
-    * without them into a stage with the same bucket spec and `graft.*`
-    * properties and swapped in, then the tombstones are dropped.
-    * Reads through [[live]] are unchanged. No-op without tombstones. */
-  def compact(spark: SparkSession, tables: String*): Unit = {
-    tables.foreach(recover(spark, _))
-    val t = tombs(tables.head)
-    if (!spark.catalog.tableExists(t)) return
-    tables.foreach { table =>
-      val meta = metadata(spark, table)
-      val spec = bucketSpec(meta)
-      val stage = table + "_compact"
-      Layout.dropManagedTable(spark, stage)
-      Layout.writeBucketed(live(spark, tables.head, spark.table(table)), stage,
-        spec.numBuckets, spec.bucketColumnNames)
-      setParams(spark, stage, meta.properties.filter(_._1.startsWith("graft.")).toSeq)
-      swap(spark, table)
-    }
-    Layout.dropManagedTable(spark, t)
-  }
-
-  private def tombs(first: String) = first + "_tombs"
-
-  private def metadata(spark: SparkSession, table: String): CatalogTable =
-    spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table))
-
-  private def bucketSpec(meta: CatalogTable) = meta.bucketSpec.getOrElse(
-    throw new IllegalArgumentException(s"${meta.identifier} is not a bucketed index table"))
-
-  private def setParams(spark: SparkSession, table: String, kv: Seq[(String, String)]): Unit =
-    if (kv.nonEmpty)
-      spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES (" +
-        kv.map { case (k, v) => s"'$k'='$v'" }.mkString(", ") + ")")
-
-  /** True when a batch id is tombstoned: one O(batch) semi-join against
-    * the broadcast tombstone list (tiny by the broadcast-budget
-    * contract); false when there are no tombstones. */
-  private def overlapsTombstones(spark: SparkSession, first: String, ids: DataFrame): Boolean = {
-    val t = tombs(first)
-    spark.catalog.tableExists(t) && {
-      val dead = spark.table(t)
-      val key = dead.columns.head
-      !ids.select(col(ids.columns.head).cast("long").as(key))
-        .join(broadcast(dead.distinct()), Seq(key), "left_semi").isEmpty
+      if (new File(live, Tombs).exists()) Commit.inherit(live.getPath, gen, Tombs)
+      m
     }
   }
 
-  /** Finish a swap a crash interrupted after the park: the live name
-    * gone, `<table>_old` holding the data. */
-  private def recover(spark: SparkSession, table: String): Unit = {
-    val parked = table + "_old"
-    if (!spark.catalog.tableExists(table) && spark.catalog.tableExists(parked))
-      spark.sql(s"ALTER TABLE $parked RENAME TO $table")
+  /** Tombstone the ids of `ids` in `group`: column `idCol`, or the only
+    * column. The tables are linked in unchanged. */
+  def delete(spark: SparkSession, group: String, ids: DataFrame, idCol: String): Unit = {
+    // never silently take columns.head of a multi-column frame: it would
+    // tombstone the wrong values
+    require(ids.columns.contains(idCol) || ids.columns.length == 1,
+      s"ids has no '$idCol' column and is not single-column " +
+        s"(${ids.columns.mkString(", ")}) — pass idCol explicitly")
+    val keyCol = if (ids.columns.contains(idCol)) idCol else ids.columns.head
+    val live = link(spark, group)
+    commit(spark, group) { gen =>
+      val m = manifest(spark, group)
+      ids.select(col(keyCol).cast("long").as(m.key)).distinct()
+        .write.parquet(new File(gen, Tombs).getPath)
+      Commit.linkFiles(new File(live, Tombs), new File(gen, Tombs))
+      m.tables.foreach(t => Commit.inherit(live.getPath, gen, t.name))
+      m
+    }
   }
 
-  /** Replace `table` by its fully written `<table>_compact`: park the
-    * live table as `<table>_old`, promote the stage, drop the parked copy. */
-  private def swap(spark: SparkSession, table: String): Unit = {
-    val parked = table + "_old"
-    Layout.dropManagedTable(spark, parked)
-    spark.sql(s"ALTER TABLE $table RENAME TO $parked")
-    spark.sql(s"ALTER TABLE ${table}_compact RENAME TO $table")
-    Layout.dropManagedTable(spark, parked)
+  /** Table `table` of `group` without the rows of tombstoned ids. */
+  def read(spark: SparkSession, group: String, table: String): DataFrame = {
+    val m = manifest(spark, group)
+    require(m.tables.exists(_.name.equalsIgnoreCase(table)), s"index $group has no table $table")
+    if (!spark.catalog.tableExists(table)) attach(spark, group, m)
+    val df = spark.table(table)
+    tombstones(spark, group, m.key).filter(_ => df.columns.contains(m.key))
+      .fold(df)(dead => df.join(broadcast(dead), Seq(m.key), "left_anti"))
   }
+
+  /** Fold the tombstones in: one generation rewriting each table with the
+    * id column without them. [[read]] is unchanged; no-op without any. */
+  def compact(spark: SparkSession, group: String): Unit = {
+    val live = link(spark, group)
+    if (new File(live, Tombs).exists()) commit(spark, group) { gen =>
+      val m = manifest(spark, group)
+      m.tables.foreach { t =>
+        if (StructType.fromDDL(t.schema).fieldNames.contains(m.key))
+          writeTable(read(spark, group, t.name), gen, t, m.buckets)
+        else Commit.inherit(live.getPath, gen, t.name)
+      }
+      m
+    }
+  }
+
+  /** The link `group` is published at. */
+  private[graft] def link(spark: SparkSession, group: String): File =
+    new File(spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"),
+      group.toLowerCase + ".index")
+
+  private def manifest(spark: SparkSession, group: String): Manifest =
+    Commit.readManifest(link(spark, group), classOf[Manifest]).getOrElse(
+      throw new IllegalArgumentException(s"no index $group at ${link(spark, group)}"))
+
+  /** Write the next generation of `group` with the manifest `write`
+    * returns, publish it and make the catalog entries. */
+  private def commit(spark: SparkSession, group: String)(write: File => Manifest): Unit =
+    attach(spark, group, Commit.write(link(spark, group).getPath) { gen =>
+      val m = write(gen)
+      Commit.writeManifest(gen, m)
+      m
+    })
+
+  /** (Re)make each table's catalog entry from `m`: an external table on
+    * the link, so it reads whichever generation is live. */
+  private def attach(spark: SparkSession, group: String, m: Manifest): Unit =
+    m.tables.foreach { t =>
+      spark.sql(s"DROP TABLE IF EXISTS ${t.name}")
+      val cols = t.bucketColumns.map(c => s"`$c`").mkString(", ")
+      val clustered =
+        if (cols.isEmpty) "" else s"CLUSTERED BY ($cols) SORTED BY ($cols) INTO ${m.buckets} BUCKETS"
+      spark.sql(s"CREATE TABLE ${t.name} (${t.schema}) USING parquet $clustered " +
+        s"LOCATION '${new File(link(spark, group), t.name).getAbsolutePath}'")
+    }
+
+  /** `rows`, conformed by name to `t`'s schema, as `t` in generation
+    * `gen`; returns `t`. */
+  private def writeTable(rows: DataFrame, gen: File, t: Table, buckets: Int): Table = {
+    val path = new File(gen, t.name).getPath
+    val df = rows.select(StructType.fromDDL(t.schema).map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
+    if (t.bucketColumns.isEmpty) df.write.parquet(path)
+    else {
+      // Spark writes bucketed files only through the catalog: a staging
+      // entry located in the generation, dropped again (external: the
+      // files stay)
+      val stage = "graft_stage_" + java.util.UUID.randomUUID().toString.replace("-", "")
+      try Layout.writeBucketed(df, stage, path, buckets, t.bucketColumns)
+      finally rows.sparkSession.sql(s"DROP TABLE IF EXISTS $stage")
+    }
+    t
+  }
+
+  /** The distinct tombstoned ids of `group`, if it has any. */
+  private def tombstones(spark: SparkSession, group: String, key: String): Option[DataFrame] =
+    Some(new File(link(spark, group), Tombs)).filter(_.exists())
+      .map(d => spark.read.schema(s"`$key` BIGINT").parquet(d.getPath).distinct())
 }

@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 
 /** Physical data layout for scale: bucketing (shuffle-free co-located
   * joins/aggregations) and partitioned writes (scan-time partition
@@ -18,34 +18,17 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   */
 object Layout {
 
-  /** Drop a managed table AND its leftover warehouse directory — the
-    * in-memory catalog forgets tables across JVMs but the directory
-    * survives, making a later saveAsTable refuse with
-    * LOCATION_ALREADY_EXISTS. */
-  def dropManagedTable(spark: SparkSession, name: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS $name")
-    val warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-      .stripPrefix("file:")
-    // the catalog lowercases unquoted identifiers, and a db-qualified
-    // managed table lives under <db>.db/<table> — mirror both, or the
-    // delete misses the real directory and the next saveAsTable still
-    // fails with LOCATION_ALREADY_EXISTS
-    val rel = name.toLowerCase.split('.') match {
-      case Array(db, tbl) => s"$db.db/$tbl"
-      case _ => name.toLowerCase
-    }
-    Fs.deleteRecursively(new java.io.File(warehouse, rel))
-  }
-
-  /** Write `df` as a bucketed+sorted managed table. Spark's bucket
-    * layout requires the table catalog (`saveAsTable`); readers then
-    * get `HashPartitioning(bucketCols, n)` from the scan for free. */
-  def writeBucketed(df: DataFrame, table: String, buckets: Int,
-                    bucketCols: Seq[String], mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.write.mode(mode)
+  /** Write `df` bucketed+sorted into directory `path`, as the external
+    * table `table`. Spark writes a bucket layout only through the table
+    * catalog (`saveAsTable`); readers then get `HashPartitioning(bucketCols,
+    * n)` from the scan for free. */
+  def writeBucketed(df: DataFrame, table: String, path: String, buckets: Int,
+                    bucketCols: Seq[String]): Unit =
+    df.write
       .bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)
       .sortBy(bucketCols.head, bucketCols.tail: _*)
       .format("parquet")
+      .option("path", path)
       .saveAsTable(table)
 
   /** Directory-partitioned parquet write: one directory per distinct

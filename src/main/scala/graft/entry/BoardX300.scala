@@ -258,8 +258,6 @@ private[graft] object BoardX300 {
     // IDENTICAL to the on-the-fly form, certified by the SAME oracle
     // text (one spelling, two rows — the x312 one-generator rule)
     "x328_bm25_prebuilt" -> { (s, d) =>
-      for (t <- Seq("board_lex_post", "board_lex_len"))
-        graft.core.Layout.dropManagedTable(s, t)
       graft.operators.Retrieval.buildLexIndex(Tables.documents(s, d),
         "board_lex_post", "board_lex_len", buckets = 8)
       graft.operators.Retrieval.bm25TopKPrebuilt(s, "board_lex_post",

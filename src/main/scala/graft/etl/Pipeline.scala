@@ -125,9 +125,11 @@ object Pipeline {
     * a link to the live generation; a call writes a new generation
     * beside it and publishes it with one atomic link flip. A reader of
     * `snapshotDir` sees the snapshot from before the call or after it,
-    * never a mix; a crash at any point leaves the earlier snapshot live,
-    * and the next call deletes what the crash left and produces what a
-    * crash-free run would. Single writer.
+    * never a mix: a read that lists the files before the flip and reads
+    * them after it fails loudly (`FAILED_READ_FILE.FILE_NOT_EXIST`), and a
+    * retry reads the new snapshot. A crash at any point leaves the
+    * earlier snapshot live, and the next call deletes what the crash left
+    * and produces what a crash-free run would. Single writer.
     *
     * Scale: the snapshot rewrite is the no-Delta fallback; the merge
     * itself is one hash shuffle on the key. On a real deployment this
@@ -173,19 +175,6 @@ object Pipeline {
     * them). One tiny JSON file in every generation. */
   private case class SnapshotManifest(numBuckets: Int, key: String)
 
-  private def readManifest(snapshotDir: String): Option[SnapshotManifest] = {
-    val f = new File(snapshotDir, "_MANIFEST.json")
-    if (!f.exists()) None
-    else {
-      // two int/string fields — a regex parse keeps the format honest
-      // without a JSON dependency in the hot path
-      val s = Files.readString(f.toPath)
-      val nb = """"numBuckets"\s*:\s*(\d+)""".r.findFirstMatchIn(s).map(_.group(1).toInt)
-      val k = """"key"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(s).map(_.group(1))
-      for (n <- nb; kk <- k) yield SnapshotManifest(n, kk)
-    }
-  }
-
   /** The `bucket=<p>` entries of `dir`, sorted by p. */
   private def buckets(dir: File): Array[Int] =
     Option(dir.list()).getOrElse(Array.empty[String])
@@ -215,8 +204,7 @@ object Pipeline {
       if (p < 0) Commit.linkFiles(bucketDir(snapshotDir, p), bucketDir(gen.getPath, p))
       else Commit.inherit(snapshotDir, gen, s"bucket=$p")
     }
-    Files.writeString(new File(gen, "_MANIFEST.json").toPath,
-      s"""{"numBuckets": ${m.numBuckets}, "key": "${m.key}"}""")
+    Commit.writeManifest(gen, m)
   }
 
   /** Incremental key-upsert: O(touched keys), not O(snapshot).
@@ -243,7 +231,7 @@ object Pipeline {
                         maxRecordsPerFile: Int = 0): Unit = {
     require(numBuckets >= 1, s"numBuckets ($numBuckets) must be >= 1")
     Commit.write(snapshotDir) { gen =>
-      val manifest = readManifest(snapshotDir) match {
+      val manifest = Commit.readManifest(new File(snapshotDir), classOf[SnapshotManifest]) match {
         case Some(m) =>
           require(m.key == key && m.numBuckets == numBuckets,
             s"snapshot $snapshotDir was created with (numBuckets=${m.numBuckets}, " +
@@ -349,9 +337,10 @@ object Pipeline {
     require(ids.columns.length == 1,
       s"ids must be a one-column frame, got ${ids.columns.toSeq}")
     Commit.write(snapshotDir) { gen =>
-      val manifest = readManifest(snapshotDir).getOrElse(throw new IllegalArgumentException(
-        s"$snapshotDir has no manifest — purgeApply operates only on " +
-          "upsertIncremental snapshots (the bucket layout IS the pruning index)"))
+      val manifest = Commit.readManifest(new File(snapshotDir), classOf[SnapshotManifest]).getOrElse(
+        throw new IllegalArgumentException(
+          s"$snapshotDir has no manifest — purgeApply operates only on " +
+            "upsertIncremental snapshots (the bucket layout IS the pruning index)"))
       val keyType = spark.read.parquet(snapshotDir).schema(manifest.key).dataType
       // persisted: the bucket plan and the anti-join must see the SAME id
       // set (the upsertIncremental nondeterminism discipline)

@@ -16,13 +16,13 @@ import org.apache.spark.sql.functions._
   * the one every vector store applies: persist the assignment table,
   * amortize the scan.
   *
-  * Here the artifact is a BUCKETED managed table ([[graft.core.Layout
-  * .writeBucketed]]) keyed by the probe-join column (`sig` for LSH,
-  * `cell` for IVF), so the probe join reads co-located buckets with
-  * ZERO Exchange on the corpus side — the shuffle is paid once at
-  * build time, amortized over every query (LayoutSpec-proven shape).
-  * Index parameters (planes/tables, nlist) travel in TABLE PROPERTIES:
-  * the query side reads them from the catalog, so probe and build can
+  * Here the artifact is a persisted index group ([[IndexTable]]): a
+  * BUCKETED table keyed by the probe-join column (`sig` for LSH, `cell`
+  * for IVF), so the probe join reads co-located buckets with ZERO
+  * Exchange on the corpus side — the shuffle is paid once at build time,
+  * amortized over every query (LayoutSpec-proven shape). Index
+  * parameters (planes/tables, nlist) are pinned in the group's manifest
+  * and the query side reads them from there, so probe and build can
   * never silently disagree on the plane family.
   *
   * Results are IDENTICAL to the on-the-fly operators (same signature
@@ -37,9 +37,9 @@ object AnnIndex {
 
   /** TOMBSTONE delete from a persisted index (LSH signature table or
     * IVF assignment table) — the third leg of index maintenance after
-    * build and O(batch) append: deleted ids land in a tiny side table
-    * and BOTH prebuilt probes subtract it (broadcast anti-join on the
-    * id) before scoring, so a delete costs O(|ids|) now and O(1) per
+    * build and O(batch) append: deleted ids land in a tiny tombstone
+    * list and BOTH prebuilt probes subtract it (broadcast anti-join on
+    * the id) before scoring, so a delete costs O(|ids|) now and O(1) per
     * candidate at probe time — never an index rewrite on the deletion
     * path. [[compactLshIndex]]/[[compactIvfIndex]] fold the tombstones
     * into the index when the list outgrows its broadcast budget; the
@@ -49,7 +49,7 @@ object AnnIndex {
     * rows (AnnIndexSpec). */
   def deleteFromIndex(spark: SparkSession, table: String, ids: DataFrame,
                       idCol: String = "vec_id"): Unit =
-    IndexTable.delete(spark, table, ids, idCol, "neighbor_id")
+    IndexTable.delete(spark, table, ids, idCol)
 
   /** Fold tombstones into the LSH index ([[IndexTable.compact]]): the
     * probe-visible result is unchanged (spec-pinned), the broadcast
@@ -57,7 +57,7 @@ object AnnIndex {
   def compactLshIndex(spark: SparkSession, table: String): Unit =
     IndexTable.compact(spark, table)
 
-  /** [[compactLshIndex]] for the IVF assignment table. */
+  /** [[compactLshIndex]] for the IVF index (named by its assignments). */
   def compactIvfIndex(spark: SparkSession, assignTable: String): Unit =
     IndexTable.compact(spark, assignTable)
 
@@ -69,7 +69,8 @@ object AnnIndex {
                     numTables: Int = 2, buckets: Int = 8,
                     idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     require(numTables >= 1, s"numTables ($numTables) must be >= 1")
-    IndexTable.build(buckets, PlanesProp -> numPlanes, TablesProp -> numTables)(
+    IndexTable.build(table, "neighbor_id", buckets, PlanesProp -> numPlanes,
+        TablesProp -> numTables)(
       (table, signed(corpus, numPlanes, numTables, idCol, vecCol), Seq("sig")))
   }
 
@@ -92,9 +93,9 @@ object AnnIndex {
   }
 
   /** INCREMENTAL maintenance of a [[buildLshIndex]] table: sign a new
-    * batch with the index's OWN pinned parameters (read from table
-    * properties — a caller-supplied numPlanes could silently corrupt
-    * the index with incompatible signatures) and APPEND. Cost is
+    * batch with the index's OWN pinned parameters (read from its
+    * manifest — a caller-supplied numPlanes could silently corrupt the
+    * index with incompatible signatures) and APPEND. Cost is
     * O(batch): the corpus is never re-signed, and bucketed appends add
     * per-bucket files without touching existing ones — the standard
     * "index the delta" shape every ingest pipeline needs, paired with
@@ -109,7 +110,7 @@ object AnnIndex {
                        idCol: String = "vec_id",
                        vecCol: String = "embedding"): Unit = {
     val spark = batch.sparkSession
-    IndexTable.append(batch.select(col(idCol)), table)(Seq(signed(batch,
+    IndexTable.append(table, batch.select(col(idCol)))(Seq(table -> signed(batch,
       IndexTable.param(spark, table, PlanesProp),
       IndexTable.param(spark, table, TablesProp), idCol, vecCol)))
   }
@@ -129,16 +130,15 @@ object AnnIndex {
                        centersTable: String,
                        idCol: String = "vec_id",
                        vecCol: String = "embedding"): Unit = {
-    val centers = batch.sparkSession.table(centersTable)
     val c = batch.select(col(idCol).as("neighbor_id"),
       Similarity.asDouble(col(vecCol)).as("cv"))
     // nearest existing centroid via the bounded-aggregate probe helper
     // at nprobe = 1 — same (cdist ASC, cell ASC) selection the old
     // rank window applied, without sorting |batch|·nlist rows
-    IndexTable.append(batch.select(col(idCol)), assignTable)(Seq(
+    IndexTable.append(assignTable, batch.select(col(idCol)))(Seq(assignTable ->
       Similarity.nearestCells(
           c.select(col("neighbor_id").as("query_id"), col("cv").as("qv")),
-          centers, nprobe = 1)
+          IndexTable.read(batch.sparkSession, assignTable, centersTable), nprobe = 1)
         .select(col("query_id").as("neighbor_id"), col("qv").as("cv"),
           col("cell"))))
   }
@@ -147,7 +147,7 @@ object AnnIndex {
     * the corpus-side signatures come from the bucketed index table —
     * no corpus scan-and-sign per call, no Exchange on the index side
     * (the query side is broadcast). Plane parameters come from the
-    * table properties, so they always match the build. */
+    * index manifest, so they always match the build. */
   def lshTopKPrebuilt(spark: SparkSession, queries: DataFrame, table: String,
                       k: Int, multiProbe: Int = 2,
                       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
@@ -157,7 +157,7 @@ object AnnIndex {
     require(multiProbe >= 0 && multiProbe <= numPlanes,
       s"multiProbe ($multiProbe) must be in [0, numPlanes=$numPlanes]")
     val masks = Similarity.probeMasks(numPlanes, multiProbe)
-    val idx = IndexTable.live(spark, table, spark.table(table))
+    val idx = IndexTable.read(spark, table, table)
     val q = queries.select(col(idCol).as("query_id"),
       col(vecCol).cast("array<float>").as("qv"))
     val scored = (0 until numTables).map { t =>
@@ -177,8 +177,8 @@ object AnnIndex {
 
   /** Build the IVF index: fit the coarse quantizer exactly like
     * [[Similarity.ivfTopK]] (same bounded deterministic fit, same
-    * seed), then persist BOTH artifacts — the full cell-assignment
-    * table bucketed by `cell`, and the tiny centroid table. */
+    * seed), then persist BOTH artifacts — the tiny centroid table and the
+    * `cell`-bucketed assignments — as one index group named by `assignTable`. */
   def buildIvfIndex(corpus: DataFrame, assignTable: String, centersTable: String,
                     nlist: Int = 16, maxFitRows: Int = 100000,
                     fitFraction: Double = 1.0, buckets: Int = 8,
@@ -204,11 +204,11 @@ object AnnIndex {
     val model = new KMeans().setK(nlist).setSeed(42L).setMaxIter(5)
       .setFeaturesCol("feat").setPredictionCol("cell").fit(fitInput)
     val assigned = model.transform(c).select("neighbor_id", "cv", "cell")
-    IndexTable.build(buckets, NlistProp -> nlist)((assignTable, assigned, Seq("cell")))
     import spark.implicits._
     val centers = model.clusterCenters.zipWithIndex
       .map { case (v, i) => (i, v.toArray) }.toSeq.toDF("cell", "center")
-    centers.write.mode("overwrite").format("parquet").saveAsTable(centersTable)
+    IndexTable.build(assignTable, "neighbor_id", buckets, NlistProp -> nlist)(
+      (centersTable, centers, Nil), (assignTable, assigned, Seq("cell")))
   }
 
   /** Probe a prebuilt IVF index: rank the persisted centroids per
@@ -221,13 +221,13 @@ object AnnIndex {
     val nlist = IndexTable.param(spark, assignTable, NlistProp)
     require(nprobe >= 1 && nprobe <= nlist,
       s"nprobe ($nprobe) must be in [1, nlist=$nlist]")
-    val centers = spark.table(centersTable)
+    val centers = IndexTable.read(spark, assignTable, centersTable)
     val q = queries.select(col(idCol).as("query_id"),
       Similarity.asDouble(col(vecCol)).as("qv"))
     // bounded-aggregate coarse probe (Similarity.nearestCells): the
     // rank-window spelling shuffled |Q|·nlist distance rows per call
     val probed = Similarity.nearestCells(q, centers, nprobe)
-    val scored = IndexTable.live(spark, assignTable, spark.table(assignTable))
+    val scored = IndexTable.read(spark, assignTable, assignTable)
       .join(broadcast(probed), Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),

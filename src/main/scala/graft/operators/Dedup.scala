@@ -1237,39 +1237,35 @@ object Dedup {
 
   private val ShingleKProp = "graft.pairstate.shingleK"
 
-  /** Persist a [[pairState]] as a catalog table, bucketed on doc_id
-    * (the [[AnnIndex]] discipline): shingleK travels in TABLE
-    * PROPERTIES so a later append can never silently sign a batch
-    * with an incompatible shingle size, and the bucketing makes every
-    * doc-keyed read (verification joins, survivor picks) Exchange-free
-    * on the state side. One corpus scan, one write-side shuffle,
-    * never again. */
+  /** Persist a [[pairState]] as an index of one table bucketed on doc_id
+    * (the [[AnnIndex]] discipline, [[graft.core.IndexTable]]): shingleK
+    * is pinned in its manifest so a later append can never silently sign
+    * a batch with an incompatible shingle size, and the bucketing makes
+    * every doc-keyed read (verification joins, survivor picks)
+    * Exchange-free on the state side. One corpus scan, one write-side
+    * shuffle, never again. */
   def writePairState(docs: DataFrame, table: String, shingleK: Int = 2,
                      buckets: Int = 8): Unit =
-    graft.core.IndexTable.build(buckets, ShingleKProp -> shingleK)(
+    graft.core.IndexTable.build(table, "doc_id", buckets, ShingleKProp -> shingleK)(
       (table, pairState(docs, shingleK), Seq("doc_id")))
 
   /** INCREMENTAL maintenance of a [[writePairState]] table: fingerprint
     * a new batch with the table's OWN pinned shingleK (read from the
-    * catalog — no job, no scan) and APPEND through the same bucketed
+    * manifest — no job, no scan) and APPEND through the same bucketed
     * writer. Cost is O(batch); the corpus is never re-shingled. Pair
     * with [[pairsAppend]] against `readPairState(spark, t)` as the base
     * state — NOT the raw `spark.table(t)`, which skips the tombstone
     * subtraction and would mine pairs involving retired docs. A batch
-    * id still tombstoned by [[deleteFromPairState]] triggers
-    * [[compactPairState]] FIRST (folding out the old state row —
-    * otherwise the tombstone hides the re-appended row from every
-    * consumer and the next compact drops both generations); such an
-    * append pays one state rewrite, tombstone-disjoint batches stay
-    * O(batch). */
+    * id still tombstoned by [[deleteFromPairState]] is safe:
+    * [[graft.core.IndexTable.append]] compacts first, one state rewrite. */
   def appendPairState(deltaDocs: DataFrame, table: String): Unit =
-    graft.core.IndexTable.append(deltaDocs.select(col("doc_id")), table)(Seq(
-      pairState(deltaDocs,
+    graft.core.IndexTable.append(table, deltaDocs.select(col("doc_id")))(Seq(
+      table -> pairState(deltaDocs,
         graft.core.IndexTable.param(deltaDocs.sparkSession, table, ShingleKProp))))
 
   /** TOMBSTONE retirement from a [[writePairState]] table — the
     * `AnnIndex.deleteFromIndex` discipline on the mining state:
-    * retired doc_ids land in a tiny side table and [[readPairState]]
+    * retired doc_ids land in a tiny tombstone list and [[readPairState]]
     * subtracts them (broadcast anti-join) before any consumer mines,
     * labels or audits — so retiring a doc retires ALL its pairs (a
     * pair needs both members in the state) for O(|ids|) now, never a
@@ -1277,14 +1273,14 @@ object Dedup {
     * a state rebuilt without the retired docs. */
   def deleteFromPairState(spark: org.apache.spark.sql.SparkSession, table: String,
                           ids: DataFrame, idCol: String = "doc_id"): Unit =
-    graft.core.IndexTable.delete(spark, table, ids, idCol, "doc_id")
+    graft.core.IndexTable.delete(spark, table, ids, idCol)
 
   /** THE read gate for a persisted pair state: the table minus its
     * tombstones. Every consumer ([[pairsFromState]], [[pairsAppend]]'s
     * base, survivor picks, audits) goes through here so a retired doc
     * can never leak back into a mining pass. */
   def readPairState(spark: org.apache.spark.sql.SparkSession, table: String): DataFrame =
-    graft.core.IndexTable.live(spark, table, spark.table(table))
+    graft.core.IndexTable.read(spark, table, table)
 
   /** Fold the tombstones into the state table
     * ([[graft.core.IndexTable.compact]]). [[readPairState]] results are

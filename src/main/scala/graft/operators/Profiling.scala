@@ -577,7 +577,8 @@ object Profiling {
     * reported via n_excluded on every row.
     *
     * Scale shape: one map-side-combined groupBy onto ≤9 keys; the
-    * spine join is a broadcast of 9 literal rows.
+    * spine of 9 literal rows keeps every digit through a left join
+    * against that ≤9-row table.
     *
     * @return (digit, n, observed_permille, expected_permille,
     *         dev_permille, n_excluded) ordered by digit. */
@@ -595,7 +596,7 @@ object Profiling {
       .select(substring(col("__v").cast("string"), 1, 1).cast("long")
         .as("digit"))
       .groupBy("digit").agg(count(lit(1)).as("n"))
-    broadcast(expected).join(digits, Seq("digit"), "left")
+    expected.join(digits, Seq("digit"), "left")
       .crossJoin(broadcast(tot))
       .select(col("digit"), coalesce(col("n"), lit(0L)).as("n"),
         col("expected_permille"), col("__n_pos"), col("__n_excl"))

@@ -197,13 +197,14 @@ object Retrieval {
     * inverted index once, query it many times" shape every search
     * engine ships, and the lexical sibling of
     * `AnnIndex.buildLshIndex`/`buildIvfIndex`. One corpus scan per
-    * table. k1/b/terms are query-time parameters, so nothing is pinned
-    * but the bucket spec, which [[appendToLexIndex]] and
-    * [[compactLexIndex]] reuse from the catalog so the bucketed-scan
-    * HashPartitioning guarantee survives index maintenance. */
+    * table, one index group named by `postingsTable`
+    * ([[graft.core.IndexTable]]). k1/b/terms are query-time parameters,
+    * so only the bucket spec is pinned, which [[appendToLexIndex]] and
+    * [[compactLexIndex]] reuse so the bucketed-scan HashPartitioning
+    * guarantee survives index maintenance. */
   def buildLexIndex(docs: DataFrame, postingsTable: String,
                     lengthsTable: String, buckets: Int = 8): Unit =
-    graft.core.IndexTable.build(buckets)(
+    graft.core.IndexTable.build(postingsTable, "doc_id", buckets)(
       (postingsTable, lexPostings(docs), Seq("tok")),
       (lengthsTable, lexLengths(docs), Seq("doc_id")))
 
@@ -216,24 +217,20 @@ object Retrieval {
 
   /** O(batch) index maintenance, ingest side: tokenize ONLY the new
     * docs and append through the same bucketed writers (bucket spec
-    * read from the catalog, so the bucket-pruned probe shape survives
-    * the append). Batches must carry doc_ids not already LIVE in the
-    * index — an id re-appended while live would double its postings;
-    * retire it first with [[deleteFromLexIndex]]. The retire→re-append
-    * workflow is safe: when a batch id is still tombstoned, the append
-    * runs [[compactLexIndex]] FIRST (physically folding out the old
-    * generation — without this, the tombstone would subtract the new
-    * postings too and a later compact would drop both generations), so
-    * such an append pays one index rewrite; tombstone-disjoint batches
-    * stay O(batch). */
+    * read from the index manifest, so the bucket-pruned probe shape
+    * survives the append). Batches must carry doc_ids not already LIVE
+    * in the index — an id re-appended while live would double its
+    * postings; retire it first with [[deleteFromLexIndex]]. A batch id
+    * still tombstoned is safe: [[graft.core.IndexTable.append]] compacts
+    * first, one index rewrite. */
   def appendToLexIndex(docs: DataFrame, postingsTable: String,
                        lengthsTable: String): Unit =
-    graft.core.IndexTable.append(docs.select(col("doc_id")),
-      postingsTable, lengthsTable)(Seq(lexPostings(docs), lexLengths(docs)))
+    graft.core.IndexTable.append(postingsTable, docs.select(col("doc_id")))(Seq(
+      postingsTable -> lexPostings(docs), lengthsTable -> lexLengths(docs)))
 
   /** TOMBSTONE delete from the persisted lexical index — the
     * `AnnIndex.deleteFromIndex` discipline on the BM25 side: retired
-    * doc_ids land in a tiny side table next to the postings table and
+    * doc_ids land in the index group's tiny tombstone list and
     * [[bm25TopKPrebuilt]] subtracts them from BOTH legs (postings and
     * lengths) before scoring, so a delete is O(|ids|) now and O(1)
     * per candidate at probe time — never a postings rewrite. Because
@@ -244,14 +241,14 @@ object Retrieval {
   def deleteFromLexIndex(spark: org.apache.spark.sql.SparkSession,
                          postingsTable: String, ids: DataFrame,
                          idCol: String = "doc_id"): Unit =
-    graft.core.IndexTable.delete(spark, postingsTable, ids, idCol, "doc_id")
+    graft.core.IndexTable.delete(spark, postingsTable, ids, idCol)
 
   /** Fold the tombstones into both index tables
     * ([[graft.core.IndexTable.compact]]). Probe-visible results are
     * unchanged (RetrievalSpec-pinned). No-op without tombstones. */
   def compactLexIndex(spark: org.apache.spark.sql.SparkSession,
                       postingsTable: String, lengthsTable: String): Unit =
-    graft.core.IndexTable.compact(spark, postingsTable, lengthsTable)
+    graft.core.IndexTable.compact(spark, postingsTable)
 
   /** BM25 top-k over the persisted index: identical output to
     * [[bm25TopK]] (RetrievalSpec asserts row-for-row equality), but
@@ -271,9 +268,9 @@ object Retrieval {
     // tombstones subtract from BOTH legs: tf (df shrinks per term) and
     // dl (N and avgdl shrink) — scoreBm25 derives every corpus stat
     // from these inputs, so the tombstoned probe ≡ a rebuilt index
-    val tf = graft.core.IndexTable.live(spark, postingsTable,
-      spark.table(postingsTable).filter(col("tok").isin(termSet: _*)))
-    val dl = graft.core.IndexTable.live(spark, postingsTable, spark.table(lengthsTable))
+    val tf = graft.core.IndexTable.read(spark, postingsTable, postingsTable)
+      .filter(col("tok").isin(termSet: _*))
+    val dl = graft.core.IndexTable.read(spark, postingsTable, lengthsTable)
     scoreBm25(tf, dl, k, k1, b)
   }
 
@@ -405,7 +402,9 @@ object Retrieval {
     val m = a.select(col(idCol).as("__id"), col(rankCol).as("__ra"))
       .join(b.select(col(idCol).as("__id"), col(rankCol).as("__rb")), Seq("__id"))
       .select(greatest(col("__ra"), col("__rb")).as("m"))
-    val ov = broadcast(depths).join(m, col("m") <= col("d"), "left")
+    // inner, so the depth table can be the build side: an unmatched
+    // depth would add (pw·0) div d = 0
+    val ov = m.join(broadcast(depths), col("m") <= col("d"))
       .groupBy("d", "pw").agg(count(col("m")).as("overlap"))
     ov.agg(coalesce(sum(expr("(pw * overlap) div d")), lit(0L)).as("__s"))
       .select(lit(depth.toLong).as("depth"),

@@ -795,10 +795,11 @@ object EventStreams {
     * `<snapshotDir>.quarantine/batch_id=<b>`, overwritten on a replay,
     * and the snapshot generation that applies batch b records b in its
     * `_BATCH_ID` file (skipped by Spark's reader), published by the same
-    * link flip as the rows ([[graft.etl.Pipeline.upsert]]'s crash
-    * contract). A batch whose id the live generation already records is
-    * skipped; one that crashed before its publish re-runs from the
-    * snapshot it started from. Local filesystem only, like the commit.
+    * link flip as the rows ([[graft.etl.Pipeline.upsert]]'s contract:
+    * never a mix; a read spanning the flip fails loudly, a retry reads
+    * the new snapshot). A batch whose id the live generation already
+    * records is skipped; one that crashed before its publish re-runs from
+    * the snapshot it started from. Local filesystem only, like the commit.
     * The micro-batch is cached for its two consumers (upsert +
     * quarantine write): unpersisted, each would re-run the transform
     * and the validation parse over the source. */

@@ -1,7 +1,11 @@
 package graft
 
-import graft.core.{Layout, Tables}
+import java.io.File
+import java.nio.file.Files
+
+import graft.core.{Commit, IndexTable, Tables}
 import graft.operators.{AnnIndex, Dedup, Retrieval, Similarity}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Prebuilt ANN index artifacts: results must equal the on-the-fly
@@ -12,7 +16,6 @@ class AnnIndexSpec extends SparkSpec {
   private def queriesDf = Tables.embeddings(spark, sf).filter(col("vec_id") < 10)
 
   test("lshTopKPrebuilt equals on-the-fly lshTopK; corpus side never shuffles") {
-    Layout.dropManagedTable(spark, "lsh_idx")
     val emb = Tables.embeddings(spark, sf)
     AnnIndex.buildLshIndex(emb, "lsh_idx", numPlanes = 8, numTables = 2, buckets = 4)
     val pre = AnnIndex.lshTopKPrebuilt(spark, queriesDf, "lsh_idx", k = 5, multiProbe = 2)
@@ -32,8 +35,6 @@ class AnnIndexSpec extends SparkSpec {
   }
 
   test("ivfTopKPrebuilt equals on-the-fly ivfTopK; assignment table read in place") {
-    Layout.dropManagedTable(spark, "ivf_assign")
-    Layout.dropManagedTable(spark, "ivf_centers")
     val emb = Tables.embeddings(spark, sf)
     AnnIndex.buildIvfIndex(emb, "ivf_assign", "ivf_centers",
       nlist = 8, maxFitRows = 10000, buckets = 4)
@@ -62,8 +63,6 @@ class AnnIndexSpec extends SparkSpec {
     assert(e2.getMessage.contains("nlist"))
   }
   test("appendToLshIndex: partial build + delta append equals a one-shot build") {
-    Layout.dropManagedTable(spark, "lsh_idx_inc")
-    Layout.dropManagedTable(spark, "lsh_idx_full")
     val emb = Tables.embeddings(spark, sf)
     val (oldHalf, delta) = (emb.filter(col("vec_id") % 2 === 0),
       emb.filter(col("vec_id") % 2 =!= 0))
@@ -81,8 +80,6 @@ class AnnIndexSpec extends SparkSpec {
   }
 
   test("appendToIvfIndex: delta rows assigned to pinned centroids; nprobe=nlist is exact") {
-    Layout.dropManagedTable(spark, "ivf_assign_inc")
-    Layout.dropManagedTable(spark, "ivf_centers_inc")
     val emb = Tables.embeddings(spark, sf)
     val (oldHalf, delta) = (emb.filter(col("vec_id") % 2 === 0),
       emb.filter(col("vec_id") % 2 =!= 0))
@@ -111,8 +108,6 @@ class AnnIndexSpec extends SparkSpec {
 
   test("deleteFromIndex: tombstoned LSH probe ≡ a fresh build without the rows; compact preserves it") {
     import spark.implicits._
-    Seq("lsh_del", "lsh_del_ref", "lsh_del_tombs", "lsh_del_compact")
-      .foreach(Layout.dropManagedTable(spark, _))
     val emb = Tables.embeddings(spark, sf)
     val deleted = emb.filter(col("vec_id") % 7 === 3).select("vec_id")
     AnnIndex.buildLshIndex(emb, "lsh_del", numPlanes = 8, numTables = 2, buckets = 4)
@@ -131,8 +126,8 @@ class AnnIndexSpec extends SparkSpec {
     // compaction folds the tombstones in: same answers, list gone
     val before = spark.table("lsh_del").count()
     AnnIndex.compactLshIndex(spark, "lsh_del")
-    assert(!spark.catalog.tableExists("lsh_del_tombs"),
-      "compaction must drop the tombstone table")
+    assert(!new File(IndexTable.link(spark, "lsh_del"), "_tombs").exists(),
+      "compaction must drop the tombstones")
     assert(spark.table("lsh_del").count() < before,
       "compaction must physically remove the tombstoned rows")
     val after = AnnIndex.lshTopKPrebuilt(spark, queriesDf, "lsh_del", k = 5, multiProbe = 2)
@@ -140,50 +135,25 @@ class AnnIndexSpec extends SparkSpec {
       "compaction must not change a single probe answer")
   }
 
-  test("compact recovers a crash parked mid-swap; re-appending a " +
-    "tombstoned id folds first — probe ≡ fresh build either way") {
-    import spark.implicits._
-    Seq("lsh_rec", "lsh_rec_ref", "lsh_rec_tombs", "lsh_rec_old",
-      "lsh_rec_compact").foreach(Layout.dropManagedTable(spark, _))
+  test("re-appending a tombstoned id folds first — probe ≡ fresh build") {
     val emb = Tables.embeddings(spark, sf)
     val deleted = emb.filter(col("vec_id") % 9 === 2).select("vec_id")
-    AnnIndex.buildLshIndex(emb, "lsh_rec", numPlanes = 8, numTables = 2,
-      buckets = 4)
-    AnnIndex.deleteFromIndex(spark, "lsh_rec", deleted)
-    // simulate the one crash point the r15 comment got wrong: after
-    // the park (live name gone, _old holds the data), before the
-    // promote — a naive compact re-run dies on SHOW TBLPROPERTIES
-    spark.sql("ALTER TABLE lsh_rec RENAME TO lsh_rec_old")
-    AnnIndex.compactLshIndex(spark, "lsh_rec")
-    assert(spark.catalog.tableExists("lsh_rec"))
-    assert(!spark.catalog.tableExists("lsh_rec_old"))
-    assert(!spark.catalog.tableExists("lsh_rec_tombs"))
     AnnIndex.buildLshIndex(emb.join(deleted, Seq("vec_id"), "left_anti"),
       "lsh_rec_ref", numPlanes = 8, numTables = 2, buckets = 4)
     def probe(t: String) =
       AnnIndex.lshTopKPrebuilt(spark, queriesDf, t, k = 5, multiProbe = 2)
         .collect().toSeq
-    assert(probe("lsh_rec") === probe("lsh_rec_ref"),
-      "a recovered-then-compacted index must answer like a fresh build")
     // retire→re-append: delete a batch then append it again BEFORE any
     // manual compact — the overlap guard must fold the old generation
     // so the new rows aren't subtracted by the stale tombstone
     val batch = emb.filter(col("vec_id") % 9 === 2)
     AnnIndex.deleteFromIndex(spark, "lsh_rec_ref", deleted)
     AnnIndex.appendToLshIndex(batch, "lsh_rec_ref")
-    Layout.dropManagedTable(spark, "lsh_rec")
     AnnIndex.buildLshIndex(emb, "lsh_rec", numPlanes = 8, numTables = 2,
       buckets = 4) // rebuilt as the full-corpus reference
     assert(probe("lsh_rec_ref") === probe("lsh_rec"),
       "re-appended rows must be probe-visible, once")
   }
-
-  /** The parked crash above, for the other two catalog-table compactors:
-    * the live table renamed to `<parked>_old`, never promoted back. */
-  private case class ParkedCompactor(name: String, tables: Seq[String], parked: String,
-                                     buildAndDelete: () => Unit, compact: () => Unit,
-                                     probe: () => Set[Seq[Any]],
-                                     fresh: () => Set[Seq[Any]])
 
   private def lexDocs = {
     import spark.implicits._
@@ -202,55 +172,7 @@ class AnnIndexSpec extends SparkSpec {
 
   private def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
 
-  private def parkedCompactors = {
-    import spark.implicits._
-    def lex(name: String, parked: String) =
-      ParkedCompactor(name, Seq("lex_rec", "lex_rec_len"), parked,
-        () => {
-          Retrieval.buildLexIndex(lexDocs, "lex_rec", "lex_rec_len", buckets = 4)
-          Retrieval.deleteFromLexIndex(spark, "lex_rec", Seq(2L).toDF("doc_id"))
-        },
-        () => Retrieval.compactLexIndex(spark, "lex_rec", "lex_rec_len"),
-        () => rows(Retrieval.bm25TopKPrebuilt(spark, "lex_rec", "lex_rec_len",
-          Seq("cat", "fish"), k = 10)),
-        () => rows(Retrieval.bm25TopK(lexDocs.filter(col("doc_id") =!= 2L),
-          Seq("cat", "fish"), k = 10)))
-    Seq(
-      lex("BM25 lex index", "lex_rec"),
-      lex("BM25 lex lengths", "lex_rec_len"),
-      ParkedCompactor("pair state", Seq("ps_rec"), "ps_rec",
-        () => {
-          Dedup.writePairState(stateDocs, "ps_rec", shingleK = 2, buckets = 2)
-          Dedup.deleteFromPairState(spark, "ps_rec", Seq(2L).toDF("doc_id"))
-        },
-        () => Dedup.compactPairState(spark, "ps_rec"),
-        () => rows(Dedup.pairsFromState(Dedup.readPairState(spark, "ps_rec"),
-          minPermille = 300)),
-        () => rows(Dedup.minHashLshPairs(stateDocs.filter(col("doc_id") =!= 2L),
-          shingleK = 2, minPermille = 300))))
-  }
-
-  for (name <- Seq("BM25 lex index", "BM25 lex lengths", "pair state"))
-    test(s"compact recovers a crash parked mid-swap: $name") {
-      val c = parkedCompactors.find(_.name == name).get
-      c.tables.flatMap(t => Seq(t, t + "_old", t + "_compact", t + "_tombs"))
-        .foreach(Layout.dropManagedTable(spark, _))
-      try {
-        c.buildAndDelete()
-        spark.sql(s"ALTER TABLE ${c.parked} RENAME TO ${c.parked}_old")
-        c.compact()
-        assert(c.tables.forall(spark.catalog.tableExists))
-        assert(!spark.catalog.tableExists(c.parked + "_old"))
-        assert(!spark.catalog.tableExists(c.parked + "_tombs"))
-        assert(c.probe().nonEmpty)
-        assert(c.probe() === c.fresh(),
-          "a recovered-then-compacted state must answer like a fresh build")
-      } finally Harness.release(spark, blocking = false)
-    }
-
   test("deleteFromIndex: tombstoned IVF at nprobe=nlist ≡ brute force over the survivors") {
-    Seq("ivf_del", "ivf_del_c", "ivf_del_tombs")
-      .foreach(Layout.dropManagedTable(spark, _))
     val emb = Tables.embeddings(spark, sf)
     val deleted = emb.filter(col("vec_id") % 5 === 1).select("vec_id")
     AnnIndex.buildIvfIndex(emb, "ivf_del", "ivf_del_c",
@@ -264,39 +186,45 @@ class AnnIndexSpec extends SparkSpec {
       "deleted index at nprobe=nlist must equal brute force over the survivors")
   }
 
-  /** One persisted index family: the tables of an index named `t`, a
-    * build of `t` from a frame, a tombstone delete and a probe. */
-  private case class IndexFamily(name: String, tables: String => Seq[String],
+  /** One persisted index family: the tables of an index named `t` in the
+    * order a build writes them, the input's id column, a build of `t`
+    * from a frame, a tombstone delete, a compact and a probe. */
+  private case class IndexFamily(name: String, tables: String => Seq[String], idCol: String,
                                  input: () => org.apache.spark.sql.DataFrame,
                                  deleted: () => org.apache.spark.sql.DataFrame,
                                  build: (org.apache.spark.sql.DataFrame, String) => Unit,
                                  delete: (String, org.apache.spark.sql.DataFrame) => Unit,
+                                 compact: String => Unit,
                                  probe: String => Set[Seq[Any]])
 
   private def indexFamilies = {
     import spark.implicits._
     def emb = Tables.embeddings(spark, sf)
     Seq(
-      IndexFamily("LSH", t => Seq(t), () => emb,
+      IndexFamily("LSH", t => Seq(t), "vec_id", () => emb,
         () => emb.filter(col("vec_id") % 7 === 3).select("vec_id"),
         (df, t) => AnnIndex.buildLshIndex(df, t, numPlanes = 8, numTables = 2, buckets = 4),
         (t, ids) => AnnIndex.deleteFromIndex(spark, t, ids),
+        t => AnnIndex.compactLshIndex(spark, t),
         t => rows(AnnIndex.lshTopKPrebuilt(spark, queriesDf, t, k = 5, multiProbe = 2))),
-      IndexFamily("IVF", t => Seq(t, t + "_c"), () => emb,
+      IndexFamily("IVF", t => Seq(t + "_c", t), "vec_id", () => emb,
         () => emb.filter(col("vec_id") % 5 === 1).select("vec_id"),
         (df, t) => AnnIndex.buildIvfIndex(df, t, t + "_c", nlist = 8,
           maxFitRows = 10000, buckets = 4),
         (t, ids) => AnnIndex.deleteFromIndex(spark, t, ids),
+        t => AnnIndex.compactIvfIndex(spark, t),
         t => rows(AnnIndex.ivfTopKPrebuilt(spark, queriesDf, t, t + "_c", k = 5, nprobe = 8))),
-      IndexFamily("BM25 lex index", t => Seq(t, t + "_len"), () => lexDocs,
+      IndexFamily("BM25 lex index", t => Seq(t, t + "_len"), "doc_id", () => lexDocs,
         () => Seq(2L).toDF("doc_id"),
         (df, t) => Retrieval.buildLexIndex(df, t, t + "_len", buckets = 4),
         (t, ids) => Retrieval.deleteFromLexIndex(spark, t, ids),
+        t => Retrieval.compactLexIndex(spark, t, t + "_len"),
         t => rows(Retrieval.bm25TopKPrebuilt(spark, t, t + "_len", Seq("cat", "fish"), k = 10))),
-      IndexFamily("pair state", t => Seq(t), () => stateDocs,
+      IndexFamily("pair state", t => Seq(t), "doc_id", () => stateDocs,
         () => Seq(2L).toDF("doc_id"),
         (df, t) => Dedup.writePairState(df, t, shingleK = 2, buckets = 2),
         (t, ids) => Dedup.deleteFromPairState(spark, t, ids),
+        t => Dedup.compactPairState(spark, t),
         t => rows(Dedup.pairsFromState(Dedup.readPairState(spark, t), minPermille = 300))))
   }
 
@@ -304,8 +232,6 @@ class AnnIndexSpec extends SparkSpec {
     test(s"rebuilding an index under a used name drops its old tombstones: $name") {
       val f = indexFamilies.find(_.name == name).get
       val (t, ref) = ("rebuilt_idx", "fresh_idx")
-      (f.tables(t) ++ f.tables(ref)).flatMap(x => Seq(x, x + "_tombs"))
-        .foreach(Layout.dropManagedTable(spark, _))
       try {
         f.build(f.input(), ref)
         f.build(f.input(), t)
@@ -314,6 +240,83 @@ class AnnIndexSpec extends SparkSpec {
         f.build(f.input(), t)
         assert(f.probe(t) === f.probe(ref),
           "a rebuild from the full input must answer like a fresh build")
+      } finally Harness.release(spark, blocking = false)
+    }
+
+  /** The store directory the next write of index `t` builds in. */
+  private def nextGeneration(t: String): File = {
+    val link = IndexTable.link(spark, t).toPath
+    val live = Files.readSymbolicLink(link).getFileName.toString.stripPrefix("g").toInt
+    new File(Commit.store(link.toString), s"g${live + 1}")
+  }
+
+  /** `id`, until directory `landed` holds the `_SUCCESS` marker of a
+    * finished write; from then on evaluating it throws. */
+  private def failOnceLanded(id: Column, landed: File): Column =
+    udf { (x: Long) =>
+      if (new File(landed, "_SUCCESS").exists())
+        throw new IllegalStateException(s"injected fault: $landed has landed")
+      x
+    }.asNondeterministic()(id)
+
+  private def injected(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(x => String.valueOf(x.getMessage).contains("injected fault"))
+
+  for (name <- Seq("BM25 lex index", "IVF"))
+    test(s"a build that throws on the group's second table publishes nothing: $name") {
+      val f = indexFamilies.find(_.name == name).get
+      val t = "crash_build"
+      try {
+        f.build(f.input(), t)
+        f.delete(t, f.deleted())
+        val before = f.probe(t)
+        // the rebuild fails once its first table's files have landed:
+        // published, it would answer without the tombstones
+        val next = nextGeneration(t)
+        val e = intercept[Exception](f.build(f.input().withColumn(f.idCol,
+          failOnceLanded(col(f.idCol), new File(next, f.tables(t).head))), t))
+        assert(injected(e), s"expected the injected fault, got $e")
+        assert(!next.exists(), "the failed generation must be removed")
+        assert(f.probe(t) === before, "the old group must answer unchanged")
+      } finally Harness.release(spark, blocking = false)
+    }
+
+  for (name <- Seq("BM25 lex index", "IVF"))
+    test(s"a compact that throws on the group's second table publishes nothing: $name") {
+      val f = indexFamilies.find(_.name == name).get
+      val t = "crash_compact"
+      try {
+        f.build(f.input(), t)
+        f.delete(t, f.deleted())
+        val before = f.probe(t)
+        // one file of the second table is unreadable while compact runs
+        val second = new File(IndexTable.link(spark, t), f.tables(t)(1))
+        val file = second.listFiles().filter(_.getName.endsWith(".parquet")).head.toPath
+        val bytes = Files.readAllBytes(file)
+        val next = nextGeneration(t)
+        Files.write(file, new Array[Byte](bytes.length))
+        try intercept[Exception](f.compact(t)) finally Files.write(file, bytes)
+        assert(!next.exists(), "the failed generation must be removed")
+        assert(new File(IndexTable.link(spark, t), "_tombs").exists(),
+          "the tombstones must stay live")
+        assert(f.probe(t) === before, "the old group must answer unchanged")
+      } finally Harness.release(spark, blocking = false)
+    }
+
+  for (name <- Seq("LSH", "IVF", "BM25 lex index", "pair state"))
+    test(s"an index whose catalog entries are dropped reopens from its manifest: $name") {
+      val f = indexFamilies.find(_.name == name).get
+      val t = "reopen_idx"
+      try {
+        f.build(f.input(), t)
+        f.delete(t, f.deleted())
+        val before = f.probe(t)
+        // external tables: the drop forgets the entries, the files stay
+        f.tables(t).foreach(x => spark.sql(s"DROP TABLE $x"))
+        assert(!f.tables(t).exists(spark.catalog.tableExists))
+        assert(f.probe(t) === before)
+        assert(f.tables(t).forall(spark.catalog.tableExists))
       } finally Harness.release(spark, blocking = false)
     }
 }

@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import graft.core.{Commit, Fs}
 import graft.etl.Pipeline
+import org.apache.spark.SparkException
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -180,5 +181,16 @@ class CommitSpec extends SparkSpec {
     assert(liveGeneration(snap) === storeOf(snap).resolve("g2"))
     assert(new File(storeOf(snap).toFile, "g1").exists() === false)
     assertNoOrphans(snap)
+  }
+
+  test("a read that lists files before a flip and runs after it fails loudly; a retry reads the new generation") {
+    val w = writers.head
+    val f = fixture(w)
+    val snap = snapIn(copy(f.template))
+    val listed = w.read(snap) // lists generation N's files now
+    w.step(snap)
+    val e = intercept[SparkException](listed.collect())
+    assert(e.getMessage.contains("FILE_NOT_EXIST"), e.getMessage)
+    assert(rows(w.read(snap)) === f.new1)
   }
 }

@@ -913,8 +913,11 @@ class DedupSpec extends SparkSpec with SlowSuite {
       val oneShot = pairsOf(
         Dedup.minHashLshPairs(corpus, shingleK = 2, minPermille = 300))
       assert(mined === oneShot)
-      // a table not built by writePairState refuses the append loudly
-      spark.sql(s"ALTER TABLE $tbl UNSET TBLPROPERTIES ('graft.pairstate.shingleK')")
+      // a state whose manifest lacks shingleK refuses the append loudly
+      val live = graft.core.IndexTable.link(spark, tbl)
+      val m = graft.core.Commit.readManifest(live, classOf[graft.core.IndexTable.Manifest]).get
+      graft.core.Commit.writeManifest(live,
+        m.copy(params = m.params - "graft.pairstate.shingleK"))
       intercept[IllegalArgumentException] {
         Dedup.appendPairState(corpus.limit(1), tbl)
       }
@@ -928,8 +931,7 @@ class DedupSpec extends SparkSpec with SlowSuite {
     def pairsOf(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Long)].collect().toSet
     val tbl = "pair_state_crud"
-    for (t <- Seq(tbl, tbl + "_tombs"))
-      spark.sql(s"DROP TABLE IF EXISTS $t")
+    spark.sql(s"DROP TABLE IF EXISTS $tbl")
     try {
       Dedup.writePairState(corpus, tbl, shingleK = 2, buckets = 2)
       // retire doc 2 — a member of the planted 1↔2 pair, so the pair
@@ -942,7 +944,7 @@ class DedupSpec extends SparkSpec with SlowSuite {
       assert(mined === rebuilt)
       assert(mined.forall(p => p._1 != 2L && p._2 != 2L))
       Dedup.compactPairState(spark, tbl)
-      assert(!spark.catalog.tableExists(tbl + "_tombs"))
+      assert(!new java.io.File(graft.core.IndexTable.link(spark, tbl), "_tombs").exists())
       assert(spark.table(tbl).filter("doc_id = 2").count() === 0L)
       assert(pairsOf(Dedup.pairsFromState(
         Dedup.readPairState(spark, tbl), minPermille = 300)) === rebuilt)
@@ -954,8 +956,7 @@ class DedupSpec extends SparkSpec with SlowSuite {
         pairsOf(Dedup.minHashLshPairs(corpus, shingleK = 2,
           minPermille = 300)))
     } finally {
-      for (t <- Seq(tbl, tbl + "_tombs"))
-        spark.sql(s"DROP TABLE IF EXISTS $t")
+      spark.sql(s"DROP TABLE IF EXISTS $tbl")
       Harness.release(spark, blocking = false)
     }
   }
@@ -965,8 +966,7 @@ class DedupSpec extends SparkSpec with SlowSuite {
     def pairsOf(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Long)].collect().toSet
     val tbl = "pair_state_reapp"
-    for (t <- Seq(tbl, tbl + "_tombs"))
-      spark.sql(s"DROP TABLE IF EXISTS $t")
+    spark.sql(s"DROP TABLE IF EXISTS $tbl")
     try {
       Dedup.writePairState(corpus, tbl, shingleK = 2, buckets = 2)
       Dedup.deleteFromPairState(spark, tbl, Seq(2L).toDF("doc_id"))
@@ -985,8 +985,7 @@ class DedupSpec extends SparkSpec with SlowSuite {
       assert(pairsOf(Dedup.pairsFromState(
         Dedup.readPairState(spark, tbl), minPermille = 300)) === oneShot)
     } finally {
-      for (t <- Seq(tbl, tbl + "_tombs"))
-        spark.sql(s"DROP TABLE IF EXISTS $t")
+      spark.sql(s"DROP TABLE IF EXISTS $tbl")
       Harness.release(spark, blocking = false)
     }
   }

@@ -8,14 +8,15 @@ import graft.core.{Layout, Tables}
 class LayoutSpec extends SparkSpec {
 
   test("bucketed self-layout join plans without any Exchange") {
-    Layout.dropManagedTable(spark, "orders_b")
-    Layout.dropManagedTable(spark, "lineitem_b")
+    val dir = java.nio.file.Files.createTempDirectory("graft-bucketed").toString
+    def drop(): Unit = Seq("orders_b", "lineitem_b").foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    drop()
     val orders = Tables.orders(spark, sf)
     val lineitem = Tables.lineitem(spark, sf)
     Layout.writeBucketed(orders.select("o_orderkey", "o_totalprice"),
-      "orders_b", buckets = 4, bucketCols = Seq("o_orderkey"))
+      "orders_b", s"$dir/orders_b", buckets = 4, bucketCols = Seq("o_orderkey"))
     Layout.writeBucketed(lineitem.select("l_orderkey", "l_quantity"),
-      "lineitem_b", buckets = 4, bucketCols = Seq("l_orderkey"))
+      "lineitem_b", s"$dir/lineitem_b", buckets = 4, bucketCols = Seq("l_orderkey"))
     val joined = spark.table("orders_b")
       .join(spark.table("lineitem_b"), col("o_orderkey") === col("l_orderkey"))
       .groupBy("o_orderkey").agg(sum("l_quantity").as("q"))
@@ -24,6 +25,8 @@ class LayoutSpec extends SparkSpec {
     assert(!plan.contains("Exchange hashpartitioning"),
       s"bucketed join must not shuffle; plan:\n$plan")
     assert(joined.count() > 0)
+    drop()
+    graft.core.Fs.deleteRecursively(new java.io.File(dir))
   }
 
   test("partitioned write enables partition pruning at the scan") {

@@ -549,4 +549,17 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("partitioning(1 "),
       "no global single-partition window may ever form")
   }
+
+  test("x218: the RBO nested-loop join builds the depth table, never the rank join") {
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    val p = SparkEntry.queries("x218_rank_rbo")(spark, sf).queryExecution.executedPlan
+    val nlj = new AdaptiveSparkPlanHelper {}.collect(p) {
+      case j: BroadcastNestedLoopJoinExec if j.condition.isDefined => j
+    }
+    assert(nlj.size === 1, s"one theta join over the depth table:\n$p")
+    assert(nlj.head.buildSide === BuildRight && nlj.head.right.output.map(_.name) === Seq("d", "pw"),
+      s"the broadcast side must be the depth-row table:\n$p")
+  }
 }

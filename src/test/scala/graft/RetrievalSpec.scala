@@ -88,8 +88,6 @@ class RetrievalSpec extends SparkSpec with SlowSuite {
   }
 
   test("prebuilt index returns row-for-row the on-the-fly bm25 result") {
-    graft.core.Layout.dropManagedTable(spark, "lex_post_t")
-    graft.core.Layout.dropManagedTable(spark, "lex_len_t")
     Retrieval.buildLexIndex(docs, "lex_post_t", "lex_len_t", buckets = 4)
     val fly = Retrieval.bm25TopK(docs, Seq("cat", "fish"), k = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
@@ -101,8 +99,6 @@ class RetrievalSpec extends SparkSpec with SlowSuite {
   }
 
   test("prebuilt postings scan bucket-prunes to the query terms") {
-    graft.core.Layout.dropManagedTable(spark, "lex_post_p")
-    graft.core.Layout.dropManagedTable(spark, "lex_len_p")
     Retrieval.buildLexIndex(docs, "lex_post_p", "lex_len_p", buckets = 4)
     val df = Retrieval.bm25TopKPrebuilt(spark, "lex_post_p", "lex_len_p",
       Seq("cat"), k = 5)
@@ -120,9 +116,6 @@ class RetrievalSpec extends SparkSpec with SlowSuite {
     def collectTopk(post: String, len: String) =
       Retrieval.bm25TopKPrebuilt(spark, post, len, Seq("cat", "fish"), k = 10)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    for (t <- Seq("lex_crud", "lex_crud_len", "lex_crud_tombs",
-                  "lex_ref", "lex_ref_len"))
-      graft.core.Layout.dropManagedTable(spark, t)
     // append law: build on the first half, append the second —
     // probe ≡ a one-shot build over the union
     Retrieval.buildLexIndex(docs.filter($"doc_id" <= 2), "lex_crud",
@@ -143,11 +136,11 @@ class RetrievalSpec extends SparkSpec with SlowSuite {
     val tombstoned = collectTopk("lex_crud", "lex_crud_len")
     assert(tombstoned === expect)
     assert(!tombstoned.exists(_._1 == 2L))
-    // compact: probe unchanged, tombstone table dropped, postings
+    // compact: probe unchanged, tombstones gone, postings
     // physically shrunk to the survivors
     Retrieval.compactLexIndex(spark, "lex_crud", "lex_crud_len")
     assert(collectTopk("lex_crud", "lex_crud_len") === expect)
-    assert(!spark.catalog.tableExists("lex_crud_tombs"))
+    assert(!new java.io.File(graft.core.IndexTable.link(spark, "lex_crud"), "_tombs").exists())
     assert(spark.table("lex_crud").filter($"doc_id" === 2).count() === 0L)
     assert(spark.table("lex_crud_len").filter($"doc_id" === 2).count() === 0L)
     // the compacted index still carries its bucket pin: a further
@@ -163,9 +156,6 @@ class RetrievalSpec extends SparkSpec with SlowSuite {
     def collectTopk(post: String, len: String) =
       Retrieval.bm25TopKPrebuilt(spark, post, len, Seq("cat", "fish"), k = 10)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    for (t <- Seq("lex_re", "lex_re_len", "lex_re_tombs",
-                  "lex_re_ref", "lex_re_ref_len"))
-      graft.core.Layout.dropManagedTable(spark, t)
     Retrieval.buildLexIndex(docs, "lex_re", "lex_re_len", buckets = 4)
     Retrieval.deleteFromLexIndex(spark, "lex_re", Seq(2L).toDF("doc_id"))
     // the r15-ADVICE trap: re-append doc 2 while its tombstone is live.
