@@ -13,8 +13,8 @@ package graft.etl
   * @param maxPages      scan cap (etl_connector.py:88,96)
   * @param batchSize     sink batch size (etl_connector.py:206): bounds
   *                      rows per output file in the batch sink
-  *                      (maxRecordsPerFile) and the flush cadence of
-  *                      the streaming sink
+  *                      (`Pipeline.run`'s maxRecordsPerFile); the
+  *                      streaming sink does not read it
   * @param maxRetries    transport retry attempts (etl_connector.py:53)
   * @param backoffMs     initial backoff, doubles per attempt
   *                      (etl_connector.py:55,62)

@@ -4,7 +4,7 @@ import java.io.File
 import java.nio.file.Files
 
 import graft.core.Commit
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -90,8 +90,10 @@ object Pipeline {
   /** Validate (R16): split valid/quarantine instead of silently
     * dropping — the reference logs a warning per dropped doc
     * (etl_connector.py:221-223); here dropped rows land in a
-    * quarantine DataFrame and valid-row counts surface via observe()
-    * metrics (R20 analog of the processed-count log). */
+    * quarantine DataFrame and the valid frame carries an
+    * `observe("etl", valid_rows)` metric for whichever action runs it
+    * (R20 analog of the processed-count log; [[run]] counts inside its
+    * snapshot write instead). */
   def validate(df: DataFrame): (DataFrame, DataFrame) = {
     val valid = df.filter(isValid)
       .observe("etl", count(lit(1)).as("valid_rows"))
@@ -99,16 +101,19 @@ object Pipeline {
     (valid, quarantine)
   }
 
-  /** Last-write-wins batch-internal dedup (R18 semantics: the last
-    * write for a key replaces earlier ones; keyless rows all append,
-    * R19). Orders by (ingestion_timestamp, page) — the reference's
-    * arrival order within a run. */
+  /** Last-write-wins dedup (R18 semantics: the last write for a key
+    * replaces earlier ones; keyless rows all append, R19): one window,
+    * ranked by `orderCols` descending, keeps the top row of each key
+    * and every keyless row, so the input is read once. Keyless rows
+    * are spread over the window's partitions by a hash of the whole
+    * row (one NULL-key partition would put them all in one task); a
+    * hash collision cannot drop one, because no keyless row is ranked
+    * out. */
   def lastWins(df: DataFrame, key: String, orderCols: Seq[Column]): DataFrame = {
-    val w = Window.partitionBy(col(key)).orderBy(orderCols.map(_.desc): _*)
-    val keyed = df.filter(col(key).isNotNull)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-    keyed.unionByName(df.filter(col(key).isNull))
+    val spread = when(col(key).isNull, xxhash64(df.columns.toIndexedSeq.map(col): _*))
+    val w = Window.partitionBy(col(key), spread).orderBy(orderCols.map(_.desc): _*)
+    df.withColumn("__rn", row_number().over(w))
+      .filter(col(key).isNull || col("__rn") === 1).drop("__rn")
   }
 
   /** Load (R17–R19, etl_connector.py:167-191): key-based upsert into a
@@ -144,13 +149,12 @@ object Pipeline {
                                  gen: File, key: String = "pulse_id",
                                  maxRecordsPerFile: Int = 0): Unit = {
     val live = new File(snapshotDir)
-    val batchDeduped = lastWins(batch.withColumn("__gen", lit(1)), key, arrival(batch))
-    val merged =
-      if (live.exists() && live.listFiles() != null && live.listFiles().nonEmpty) {
-        val existing = spark.read.parquet(snapshotDir).withColumn("__gen", lit(0))
-        // batch rows (gen=1) beat snapshot rows (gen=0) per key
-        lastWins(existing.unionByName(batchDeduped), key, col("__gen") +: arrival(batch))
-      } else batchDeduped
+    val fresh = batch.withColumn("__gen", lit(1))
+    val rows =
+      if (live.exists() && live.listFiles() != null && live.listFiles().nonEmpty)
+        spark.read.parquet(snapshotDir).withColumn("__gen", lit(0)).unionByName(fresh)
+      else fresh
+    val merged = lastWins(rows, key, mergeOrder(batch))
     // R17's sink batch size, Spark-shaped: the reference flushes every
     // `batchSize` docs per bulk write (etl_connector.py:206,229); the
     // parquet analog bounds rows per output file.
@@ -160,12 +164,15 @@ object Pipeline {
      else writer).parquet(gen.getPath)
   }
 
-  /** Within a batch, arrival order = (ingestion ts, page, item) — the
+  /** A merge's rank: batch rows (`__gen` 1) beat snapshot rows
+    * (`__gen` 0) per key, and arrival order decides among batch rows,
+    * so one window over snapshot ∪ batch also dedups the batch itself.
+    * Within a batch, arrival order = (ingestion ts, page, item) — the
     * reference's sequential page-then-item loop; without the item
     * index, two same-key docs in ONE page tie on (ts, page) and the
     * survivor depends on shuffle order. */
-  private def arrival(batch: DataFrame): Seq[Column] =
-    Seq(col("ingestion_timestamp")) ++
+  private def mergeOrder(batch: DataFrame): Seq[Column] =
+    Seq(col("__gen"), col("ingestion_timestamp")) ++
       (if (batch.columns.contains("source_page")) Seq(col("source_page")) else Nil) ++
       (if (batch.columns.contains("source_item")) Seq(col("source_item")) else Nil)
 
@@ -244,12 +251,12 @@ object Pipeline {
               "incremental layout into a snapshot written by the full-rewrite upsert")
           SnapshotManifest(numBuckets, key)
       }
-      val deduped = lastWins(batch.withColumn("__gen", lit(1)), key, arrival(batch))
       // persisted: the touched-bucket collect and the merge write are two
       // jobs, and both MUST see the same batch rows — an unpersisted
       // nondeterministic batch (e.g. rand-derived keys) could route rows
-      // to buckets the first job never saw
-      val keyed = deduped.filter(col(key).isNotNull)
+      // to buckets the first job never saw. Not yet deduped: the merge's
+      // one window does that, and routing reads only the keys.
+      val keyed = batch.withColumn("__gen", lit(1)).filter(col(key).isNotNull)
         .withColumn("bucket",
           pmod(xxhash64(col(key)), lit(manifest.numBuckets.toLong)).cast("int"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -260,11 +267,11 @@ object Pipeline {
           .collect().map(_.getInt(0)).sorted
         if (touched.nonEmpty) {
           val existing = liveBuckets(snapshotDir, touched)
-          val merged =
-            if (existing.nonEmpty) {
-              val live = readBuckets(spark, snapshotDir, existing).withColumn("__gen", lit(0))
-              lastWins(live.unionByName(keyed), key, col("__gen") +: arrival(batch))
-            } else keyed
+          val rows =
+            if (existing.nonEmpty)
+              readBuckets(spark, snapshotDir, existing).withColumn("__gen", lit(0)).unionByName(keyed)
+            else keyed
+          val merged = lastWins(rows, key, mergeOrder(batch))
           val writer = merged.drop("__gen").write.mode("overwrite").partitionBy("bucket")
           (if (maxRecordsPerFile > 0)
              writer.option("maxRecordsPerFile", maxRecordsPerFile.toLong)
@@ -285,7 +292,7 @@ object Pipeline {
         }
         // keyless rows (R19): append-only — new immutable files into the
         // reserved bucket, no read-modify-write of anything
-        val keyless = deduped.filter(col(key).isNull).drop("__gen")
+        val keyless = batch.filter(col(key).isNull)
         if (!keyless.isEmpty)
           keyless.write.mode("append").parquet(new File(gen, "bucket=-1").getPath)
         if (gen.exists()) completeGeneration(snapshotDir, gen, manifest, touched.toSet)
@@ -380,17 +387,22 @@ object Pipeline {
 
   /** Full run (reference main(), etl_connector.py:206-239): extract →
     * transform → validate → upsert. Returns (validCount, quarantineCount).
-    * The TRANSFORMED frame is what gets cached: both the quarantine
-    * count and the upsert read it, so the source (with its retries and
-    * JSON parsing) is scanned once, not once per consumer. */
+    * One pass: an `Observation` counts the rows inside the snapshot
+    * write, the only job that reads the source. When no row reaches the
+    * merge window's shuffle (an empty source, every row quarantined),
+    * adaptive execution drops the empty stage with its collector and the
+    * observation completes empty; one aggregate job then counts. */
   def run(spark: SparkSession, fixtureDir: String, snapshotDir: String,
           cfg: EtlConfig): (Long, Long) = {
-    val t = transform(extract(spark, fixtureDir, cfg), cfg).cache()
-    try {
-      val (valid, quarantine) = validate(t)
-      val q = quarantine.count()
-      upsert(spark, valid, snapshotDir, maxRecordsPerFile = cfg.batchSize)
-      (valid.count(), q)
-    } finally { t.unpersist(); () }
+    val t = transform(extract(spark, fixtureDir, cfg), cfg)
+    val (rows, valid) = (count(lit(1)).as("rows"), count_if(isValid).as("valid"))
+    val counts = Observation("etl_run")
+    upsert(spark, t.observe(counts, rows, valid).filter(isValid), snapshotDir,
+      maxRecordsPerFile = cfg.batchSize)
+    val observed = counts.get
+    val m = if (observed.nonEmpty) observed
+            else t.agg(rows, valid).head().getValuesMap[Any](Seq("rows", "valid"))
+    val (n, v) = (m("rows").asInstanceOf[Long], m("valid").asInstanceOf[Long])
+    (v, n - v)
   }
 }

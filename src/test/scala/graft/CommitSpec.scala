@@ -74,13 +74,13 @@ class CommitSpec extends SparkSpec {
 
   private val fixtures = scala.collection.mutable.Map.empty[String, Fixture]
   private def fixture(w: Writer): Fixture = fixtures.getOrElseUpdate(w.name, {
-    val template = Files.createTempDirectory(s"commit-${w.name}")
+    val template = tempDir(s"commit-${w.name}")
     w.setup(snapIn(template))
     val ref = copy(template)
     val snap = snapIn(ref)
     val old = rows(w.read(snap))
     w.step(snap)
-    val nextGen = Files.createTempDirectory("commit-gen").resolve("gen")
+    val nextGen = tempDir("commit-gen").resolve("gen")
     copyTree(liveGeneration(snap), nextGen)
     val new1 = rows(w.read(snap))
     w.step(snap)
@@ -88,7 +88,7 @@ class CommitSpec extends SparkSpec {
   })
 
   private def copy(template: Path): Path = {
-    val dir = Files.createTempDirectory("commit-case")
+    val dir = tempDir("commit-case")
     Files.delete(dir)
     copyTree(template, dir)
     dir
@@ -135,7 +135,7 @@ class CommitSpec extends SparkSpec {
       ()
     }, f => Some(f.old), published = false),
     Crash("published, old generation not yet collected", { (w, _, snap) =>
-      val saved = Files.createTempDirectory("commit-saved").resolve("store")
+      val saved = tempDir("commit-saved").resolve("store")
       copyTree(storeOf(snap), saved)
       w.step(snap)
       copyTree(saved, storeOf(snap))
@@ -163,7 +163,7 @@ class CommitSpec extends SparkSpec {
   }
 
   test("Fs.deleteRecursively removes a symbolic link, never its target") {
-    val dir = Files.createTempDirectory("fs-link")
+    val dir = tempDir("fs-link")
     val target = Files.createDirectories(dir.resolve("outside"))
     Files.writeString(target.resolve("data"), "kept")
     val tree = Files.createDirectories(dir.resolve("tree"))
@@ -174,7 +174,7 @@ class CommitSpec extends SparkSpec {
   }
 
   test("a generation is one link flip: the snapshot path is a link into the store") {
-    val snap = snapIn(Files.createTempDirectory("commit-link"))
+    val snap = snapIn(tempDir("commit-link"))
     Pipeline.upsert(spark, seed, snap)
     Pipeline.upsert(spark, seed, snap)
     assert(Files.isSymbolicLink(Paths.get(snap)))

@@ -4,6 +4,9 @@ import java.nio.file.Files
 import graft.etl.{EtlConfig, Pipeline}
 import graft.sources.PagedJsonSource
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.ThreadSignaler
+import org.scalatest.concurrent.TimeLimits.failAfter
+import org.scalatest.time.{Seconds, Span}
 
 /** End-to-end ETL semantics over the authored JSON page fixtures
   * (FIXTURES.md §1): extract (all envelope shapes) → transform
@@ -75,7 +78,7 @@ class EtlPipelineSpec extends SparkSpec {
     // apply the same rule (a count-based take() read the first
     // maxPages FILES, so batch returned page 7 here while streaming
     // never would — the two forms of one source disagreed).
-    val dir = Files.createTempDirectory("gapped_pages").toFile
+    val dir = tempDir("gapped_pages").toFile
     Files.writeString(new java.io.File(dir, "page-5.json").toPath,
       """{"results": [{"id": "a5", "name": "n5"}]}""")
     Files.writeString(new java.io.File(dir, "page-7.json").toPath,
@@ -137,7 +140,7 @@ class EtlPipelineSpec extends SparkSpec {
   }
 
   test("upsert: last-write-wins per key, append for keyless, idempotent (R17–R19)") {
-    val dir = Files.createTempDirectory("graft-upsert").toFile
+    val dir = tempDir("graft-upsert").toFile
     val snap = dir.getAbsolutePath + "/snapshot"
     val batch = Pipeline.transform(Pipeline.extract(spark, fixtures, cfg), cfg).cache()
 
@@ -184,7 +187,7 @@ class EtlPipelineSpec extends SparkSpec {
     def mkBatch(rows: Seq[(String, Long, String)], ts: String): org.apache.spark.sql.DataFrame =
       rows.toDF("pulse_name", "pulse_id", "raw")
         .withColumn("ingestion_timestamp", lit(java.sql.Timestamp.valueOf(ts)))
-    val snap = Files.createTempDirectory("inc_upsert").toFile.getAbsolutePath + "/snap"
+    val snap = tempDir("inc_upsert").toFile.getAbsolutePath + "/snap"
     val seed = mkBatch((1L to 40L).map(i => (s"name$i", i, s"""{"id": $i}""")),
       "2024-01-01 00:00:00")
     Pipeline.upsertIncremental(spark, seed, snap, numBuckets = 8)
@@ -251,7 +254,7 @@ class EtlPipelineSpec extends SparkSpec {
     def mkBatch(rows: Seq[(String, Long, String)], ts: String): org.apache.spark.sql.DataFrame =
       rows.toDF("pulse_name", "pulse_id", "raw")
         .withColumn("ingestion_timestamp", lit(java.sql.Timestamp.valueOf(ts)))
-    val snap = Files.createTempDirectory("purge_apply").toFile.getAbsolutePath + "/snap"
+    val snap = tempDir("purge_apply").toFile.getAbsolutePath + "/snap"
     Pipeline.upsertIncremental(spark,
       mkBatch((1L to 60L).map(i => (s"name$i", i, s"""{"id": $i}""")),
         "2024-01-01 00:00:00"), snap, numBuckets = 8)
@@ -320,7 +323,8 @@ class EtlPipelineSpec extends SparkSpec {
     assert(finalSnap.count() === 58L - purgedAll)
 
     // refuses a directory without the incremental manifest
-    val plain = Files.createTempDirectory("purge_plain").toFile.getAbsolutePath
+    // a directory inside the temp one: purgeApply adopts it into a store beside it
+    val plain = Files.createDirectory(tempDir("purge_plain").resolve("snap")).toString
     val e = intercept[IllegalArgumentException] {
       Pipeline.purgeApply(spark, plain, ids)
     }
@@ -328,11 +332,31 @@ class EtlPipelineSpec extends SparkSpec {
   }
 
   test("full pipeline run returns counts (R20)") {
-    val dir = Files.createTempDirectory("graft-run").toFile
+    val dir = tempDir("graft-run").toFile
     val (valid, quarantined) = Pipeline.run(
       spark, fixtures, dir.getAbsolutePath + "/snap", cfg)
     assert(valid === 7L)
     assert(quarantined === 0L)
+  }
+
+  /** `run` within a minute: its counts must never wait on a metric
+    * that is not coming. */
+  private def runBounded(pages: java.io.File, snap: String): (Long, Long) =
+    failAfter(Span(60, Seconds))(Pipeline.run(spark, pages.getAbsolutePath, snap, cfg))(
+      ThreadSignaler)
+
+  test("run counts a source whose every item is quarantined: (0, n)") {
+    val dir = tempDir("graft-all-quarantined").toFile
+    val pages = new java.io.File(dir, "pages"); pages.mkdirs()
+    java.nio.file.Files.writeString(new java.io.File(pages, "page-0.json").toPath, "[5, 6, 7]")
+    java.nio.file.Files.writeString(new java.io.File(pages, "page-1.json").toPath, "[8]")
+    assert(runBounded(pages, dir.getAbsolutePath + "/snap") === ((0L, 4L)))
+  }
+
+  test("run counts an empty page directory: (0, 0)") {
+    val dir = tempDir("graft-no-pages").toFile
+    val pages = new java.io.File(dir, "pages"); pages.mkdirs()
+    assert(runBounded(pages, dir.getAbsolutePath + "/snap") === ((0L, 0L)))
   }
 
   test("envelope extraction precedence: results beats pulses beats discovery") {
@@ -352,7 +376,7 @@ class EtlPipelineSpec extends SparkSpec {
   }
 
   test("intra-page duplicate keys: the LATER item wins deterministically (R18)") {
-    val dir = Files.createTempDirectory("graft-intra-page").toFile
+    val dir = tempDir("graft-intra-page").toFile
     val pages = new java.io.File(dir, "pages"); pages.mkdirs()
     java.nio.file.Files.writeString(new java.io.File(pages, "page-0.json").toPath,
       """{"results": [
@@ -369,7 +393,7 @@ class EtlPipelineSpec extends SparkSpec {
   }
 
   test("malformed payloads are quarantined, parseable keyless ones are not (R16)") {
-    val dir = Files.createTempDirectory("graft-malformed").toFile
+    val dir = tempDir("graft-malformed").toFile
     val pages = new java.io.File(dir, "pages"); pages.mkdirs()
     // a JSON ARRAY payload: items 1-2 are objects (one keyless), item 3
     // is a bare scalar — not an object, fails the pulse parse
@@ -430,7 +454,7 @@ class EtlPipelineSpec extends SparkSpec {
   }
 
   test("batchSize bounds rows per sink file (R17 batch analog)") {
-    val dir = Files.createTempDirectory("graft-batchsize").toFile
+    val dir = tempDir("graft-batchsize").toFile
     val snap = dir.getAbsolutePath + "/snap"
     Pipeline.run(spark, fixtures, snap, cfg.copy(batchSize = 2))
     val files = new java.io.File(snap).listFiles()

@@ -13,7 +13,7 @@ class FileFormatsSpec extends SparkSpec {
     .filter(col("event_id") < 100)
 
   test("json write/read round trip preserves rows and values") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-json").toString + "/events"
+    val dir = tempDir("graft-json").toString + "/events"
     slice.write.mode("overwrite").json(dir)
     val back = spark.read
       .schema("event_id BIGINT, user_id BIGINT, event_type STRING, props STRING")
@@ -25,7 +25,7 @@ class FileFormatsSpec extends SparkSpec {
   }
 
   test("csv write/read round trip with explicit schema and header") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-csv").toString + "/events"
+    val dir = tempDir("graft-csv").toString + "/events"
     slice.write.mode("overwrite").option("header", "true").csv(dir)
     val back = spark.read
       .schema("event_id BIGINT, user_id BIGINT, event_type STRING, props STRING")
@@ -38,7 +38,7 @@ class FileFormatsSpec extends SparkSpec {
   }
 
   test("permissive vs failfast JSON modes (schema enforcement at read, R9 analog)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-badjson").toString
+    val dir = tempDir("graft-badjson").toString
     java.nio.file.Files.writeString(
       java.nio.file.Path.of(dir, "data.json"),
       """{"event_id": 1, "user_id": 2}
@@ -64,7 +64,7 @@ class FileFormatsSpec extends SparkSpec {
     // the union schema and back-fills the missing column with nulls
     // instead of failing the scan or silently dropping the new column.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-evolve").toString
+    val dir = tempDir("graft-evolve").toString
     Seq((1L, "old doc")).toDF("doc_id", "text")
       .write.parquet(s"$dir/drop=1")
     Seq((2L, "new doc", "en")).toDF("doc_id", "text", "lang")

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{GraftFunctions, VectorAgg}
+import graft.functions.GraftFunctions
 import graft.operators.Similarity
 
 class FunctionsSpec extends SparkSpec {
@@ -116,7 +116,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("vec_avg aggregator computes element-wise centroids") {
-    VectorAgg.register(spark)
     val df = Seq(
       (0, Array(1.0f, 2.0f)),
       (0, Array(3.0f, 4.0f)),
@@ -129,7 +128,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("vec_avg averages ragged inputs per ELEMENT, not over the vector count") {
-    VectorAgg.register(spark)
     val df = Seq(
       (0, Array(2.0f)),
       (0, Array(4.0f, 6.0f))
@@ -141,7 +139,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("vec_avg merge is partition-invariant") {
-    VectorAgg.register(spark)
     val data = (1 to 100).map(i => (i % 3, Array.tabulate(8)(j => (i * j).toFloat)))
     val one = data.toDF("label", "embedding").coalesce(1)
       .groupBy("label").agg(expr("vec_avg(embedding)").as("c")).orderBy("label").collect()

@@ -8,7 +8,7 @@ import graft.core.{Layout, Tables}
 class LayoutSpec extends SparkSpec {
 
   test("bucketed self-layout join plans without any Exchange") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bucketed").toString
+    val dir = tempDir("graft-bucketed").toString
     def drop(): Unit = Seq("orders_b", "lineitem_b").foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     drop()
     val orders = Tables.orders(spark, sf)
@@ -26,11 +26,10 @@ class LayoutSpec extends SparkSpec {
       s"bucketed join must not shuffle; plan:\n$plan")
     assert(joined.count() > 0)
     drop()
-    graft.core.Fs.deleteRecursively(new java.io.File(dir))
   }
 
   test("partitioned write enables partition pruning at the scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-part").toString + "/events"
+    val dir = tempDir("graft-part").toString + "/events"
     val events = Tables.events(spark, sf)
       .withColumn("d", col("ts").cast("date").cast("string"))
     Layout.writePartitioned(events.select("event_id", "event_type", "d"),
@@ -105,10 +104,8 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("GraftSession factory registers native functions and UDAFs") {
-    // the shared test session was not built by GraftSession; register
-    // directly and confirm the SQL surface the factory promises
-    graft.functions.GraftFunctions.register(spark)
-    graft.functions.VectorAgg.register(spark)
+    // the shared test session is GraftSession.local's: nothing is
+    // registered by hand, so this is the SQL surface the factory promises
     import spark.implicits._
     Seq((1, Array(1.0f, 0.0f))).toDF("label", "embedding")
       .createOrReplaceTempView("gs_vecs")

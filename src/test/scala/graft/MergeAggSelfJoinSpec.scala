@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -15,7 +13,7 @@ class MergeAggSelfJoinSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("agg_selfjoin").toFile.getAbsolutePath
+    val d = tempDir("agg_selfjoin").toFile.getAbsolutePath
     Seq((1L, 10.0), (1L, 20.0), (2L, 5.0), (0L, 99.0))
       .toDF("k", "v")
       // k = 0 becomes the NULL-key group the inner join must drop

@@ -1,6 +1,8 @@
 package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -36,6 +38,27 @@ class ObservabilitySpec extends SparkSpec {
       assert(observed.asScala().exists(_ == 2L),
         s"expected observed valid_rows=2, got ${observed}")
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** Spark jobs `f` launches, counted by a listener once the bus has
+    * delivered every event. */
+  private def jobsOf(f: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try { f; ListenerBusDrain(spark.sparkContext); jobs.get }
+    finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("Pipeline.run: 2 jobs into an empty snapshot, 3 into an existing one") {
+    val fixtures = getClass.getResource("/pages").getPath
+    val cfg = graft.etl.EtlConfig(apiKey = "test-key")
+    val snap = tempDir("graft-run-jobs").resolve("snap").toString
+    assert(jobsOf(graft.etl.Pipeline.run(spark, fixtures, snap, cfg)) === 2)
+    assert(jobsOf(graft.etl.Pipeline.run(spark, fixtures, snap, cfg)) === 3)
   }
 
   private implicit class QAsScala(q: ConcurrentLinkedQueue[Long]) {

@@ -50,6 +50,21 @@ class PropertySpec extends SparkSpec with SlowSuite {
     })
   }
 
+  test("one merge window dedups the batch too: lastWins(existing ∪ batch) ≡ lastWins(existing ∪ lastWins(batch))") {
+    val side = Gen.listOfN(15, Gen.zip(Gen.chooseNum(0L, 4L), Gen.alphaStr.map(_.take(3))))
+    check(Prop.forAll(side, side) { (old, fresh) =>
+      // key 0 is keyless; a row's position is its distinct arrival order
+      def frame(rows: List[(Long, String)], gen: Int) = rows.zipWithIndex
+        .map { case ((k, v), i) => (if (k == 0L) null else Long.box(k), i.toLong, v, gen) }
+        .toDF("k", "ts", "v", "gen")
+      val order = Seq(col("gen"), col("ts"))
+      val (existing, batch) = (frame(old, 0), frame(fresh, 1))
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+      rows(Pipeline.lastWins(existing.unionByName(batch), "k", order)) ==
+        rows(Pipeline.lastWins(existing.unionByName(Pipeline.lastWins(batch, "k", order)), "k", order))
+    })
+  }
+
   test("token count equals the split length for single-spaced text") {
     val words = Gen.listOfN(8, Gen.nonEmptyListOf(Gen.alphaChar).map(_.mkString))
     check(Prop.forAll(words) { ws =>

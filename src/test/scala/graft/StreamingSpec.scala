@@ -192,7 +192,7 @@ class StreamingSpec extends SparkSpec with SlowSuite {
   }
 
   test("paged source streams new pages as micro-batches (page offset = R4 generator)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-paged-stream").toFile
+    val dir = tempDir("graft-paged-stream").toFile
     def writePage(n: Int, items: String): Unit = {
       val f = new java.io.File(dir, s"page-$n.json")
       java.nio.file.Files.writeString(f.toPath, s"""{"results": [$items]}""")
@@ -293,7 +293,7 @@ class StreamingSpec extends SparkSpec with SlowSuite {
   }
 
   test("paged source restart from checkpoint: offset replay, no dups, no gaps") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-paged-ckpt").toFile
+    val dir = tempDir("graft-paged-ckpt").toFile
     val ckpt = new java.io.File(dir, "ckpt").getAbsolutePath
     val sink = new java.io.File(dir, "sink").getAbsolutePath
     val pages = new java.io.File(dir, "pages"); pages.mkdirs()
@@ -328,7 +328,7 @@ class StreamingSpec extends SparkSpec with SlowSuite {
   }
 
   test("page-number offsets: late lower pages are skipped (never replayed), strays ignored") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-paged-identity").toFile
+    val dir = tempDir("graft-paged-identity").toFile
     def writePage(n: String, items: String): Unit =
       java.nio.file.Files.writeString(
         new java.io.File(dir, s"page-$n.json").toPath, s"""{"results": [$items]}""")
@@ -487,7 +487,7 @@ class StreamingSpec extends SparkSpec with SlowSuite {
   }
 
   test("streaming ETL ingest upserts per micro-batch (R17 streaming twin)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream-etl").toFile
+    val dir = tempDir("graft-stream-etl").toFile
     val snap = dir.getAbsolutePath + "/snap"
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[String]
@@ -537,7 +537,7 @@ class StreamingSpec extends SparkSpec with SlowSuite {
       dir.resolve(Files.readSymbolicLink(dir.resolve("snap"))).normalize
 
     // one delivery, then a redelivery of the published batch: a no-op
-    val after = Files.createTempDirectory("graft-stream-redeliver")
+    val after = tempDir("graft-stream-redeliver")
     val in1 = MemoryStream[String]
     deliver(after, in1, first)
     deliver(after, in1, second)
@@ -549,11 +549,11 @@ class StreamingSpec extends SparkSpec with SlowSuite {
     // a crash after the quarantine write, before the publish: the batch's
     // quarantine partition is on disk, its generation is built but the
     // link still names the generation before it, the batch is uncommitted
-    val crashed = Files.createTempDirectory("graft-stream-crash")
+    val crashed = tempDir("graft-stream-crash")
     val in2 = MemoryStream[String]
     deliver(crashed, in2, first)
     val before = liveGeneration(crashed)
-    val saved = Files.createTempDirectory("graft-stream-saved").resolve("gen")
+    val saved = tempDir("graft-stream-saved").resolve("gen")
     Files.walk(before).forEach(p => Files.copy(p, saved.resolve(before.relativize(p).toString)))
     deliver(crashed, in2, second)
     Files.walk(saved).forEach { p =>
