@@ -98,16 +98,21 @@ object Harness {
     spark
   }
 
-  /** Drop everything a query left held: every persistent RDD
-    * (localCheckpoints, ML-internal caches), then the SQL cache. An
-    * operator's blocks stay readable while the DataFrame it returned
-    * is reachable and until this release, which frees a long-lived
-    * session; call it only after the query's results are materialized:
-    * checkpoint blocks are the only copy of their data. `blocking =
-    * true` waits for block removal, so the cost lands before whatever
-    * runs next, not inside its clock. */
+  /** Drop everything a query left held: the SQL cache, then every
+    * persistent RDD still registered (localCheckpoints, ML-internal
+    * caches). Clearing the cache first unregisters each cached table's
+    * RDD, so every RDD is unpersisted once: two removals of one RDD
+    * race, and the later one logs a WARN or an ERROR for a block
+    * already gone. An operator's blocks stay readable while the
+    * DataFrame it returned is reachable and until this release, which
+    * frees a long-lived session; call it only after the query's results
+    * are materialized: checkpoint blocks are the only copy of their
+    * data. `blocking = true` waits for the persistent RDDs' block
+    * removal, so the cost lands before whatever runs next, not inside
+    * its clock; the SQL cache's blocks are always removed in the
+    * background. */
   def release(spark: SparkSession, blocking: Boolean): Unit = {
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking))
     spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking))
   }
 }

@@ -1,8 +1,6 @@
 package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -40,25 +38,20 @@ class ObservabilitySpec extends SparkSpec {
     } finally spark.listenerManager.unregister(listener)
   }
 
-  /** Spark jobs `f` launches, counted by a listener once the bus has
-    * delivered every event. */
-  private def jobsOf(f: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
-    ListenerBusDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try { f; ListenerBusDrain(spark.sparkContext); jobs.get }
-    finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("Pipeline.run: 2 jobs into an empty snapshot, 3 into an existing one") {
     val fixtures = getClass.getResource("/pages").getPath
     val cfg = graft.etl.EtlConfig(apiKey = "test-key")
     val snap = tempDir("graft-run-jobs").resolve("snap").toString
     assert(jobsOf(graft.etl.Pipeline.run(spark, fixtures, snap, cfg)) === 2)
     assert(jobsOf(graft.etl.Pipeline.run(spark, fixtures, snap, cfg)) === 3)
+  }
+
+  test("building a q* query launches no job once each table has been loaded") {
+    graft.core.Tables.all.foreach(graft.core.Tables.load(spark, sf, _))
+    val core = SparkEntry.queries.keys.filter(_.startsWith("q")).toSeq.sorted
+    assert(core.size === 22)
+    val jobs = core.map(q => q -> jobsOf(SparkEntry.queries(q)(spark, sf))).filter(_._2 != 0)
+    assert(jobs.isEmpty, s"jobs launched while building: ${jobs.mkString(", ")}")
   }
 
   private implicit class QAsScala(q: ConcurrentLinkedQueue[Long]) {

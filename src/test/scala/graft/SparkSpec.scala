@@ -4,6 +4,8 @@ import java.nio.file.{Files, Path}
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import graft.core.{Fs, GraftSession}
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -43,6 +45,19 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val d = Files.createTempDirectory(prefix)
     tempDirs.add(d)
     d
+  }
+
+  /** Spark jobs `f` launches, counted by a listener once the bus has
+    * delivered every event. */
+  protected def jobsOf(f: => Any): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try { f; ListenerBusDrain(spark.sparkContext); jobs.get }
+    finally spark.sparkContext.removeSparkListener(listener)
   }
 
   override protected def afterAll(): Unit =
