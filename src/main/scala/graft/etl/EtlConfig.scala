@@ -11,10 +11,17 @@ package graft.etl
   *                      (etl_connector.py:31,142)
   * @param perPage       server page size, pushed as a limit (R5)
   * @param maxPages      scan cap (etl_connector.py:88,96)
-  * @param batchSize     sink batch size (etl_connector.py:206): bounds
-  *                      rows per output file in the batch sink
-  *                      (`Pipeline.run`'s maxRecordsPerFile); the
-  *                      streaming sink does not read it
+  * @param batchSize     the reference's sink batch size
+  *                      (etl_connector.py:206): the number of documents
+  *                      in one MongoDB bulk request. No sink reads it.
+  *                      Each snapshot write here is one generation that
+  *                      publishes atomically, so a partial 20-document
+  *                      flush has no analog, and rows per file are not a
+  *                      unit of storage: `Pipeline.run` writes one file
+  *                      per post-AQE partition. Kept, validated and
+  *                      parsed (`BATCH_SIZE`) for config compatibility;
+  *                      `Pipeline.upsert`'s `maxRecordsPerFile` is the
+  *                      explicit per-file bound
   * @param maxRetries    transport retry attempts (etl_connector.py:53)
   * @param backoffMs     initial backoff, doubles per attempt
   *                      (etl_connector.py:55,62)
@@ -30,8 +37,7 @@ final case class EtlConfig(
     maxRetries: Int = 5,
     backoffMs: Long = 1000L) {
   // ALL invariants fail at construction, not hours later mid-retry-loop:
-  // a negative backoff would reach Thread.sleep, a non-positive
-  // batchSize would silently disable the documented per-file bound
+  // a negative backoff would reach Thread.sleep
   require(apiKey.nonEmpty, "apiKey must be set (fail-fast, reference R2)")
   require(perPage > 0, s"perPage ($perPage) must be positive")
   require(maxPages >= 0, s"maxPages ($maxPages) must be >= 0")

@@ -138,7 +138,10 @@ object Pipeline {
     *
     * Scale: the snapshot rewrite is the no-Delta fallback; the merge
     * itself is one hash shuffle on the key. On a real deployment this
-    * slot is a Delta/Iceberg MERGE — same logical semantics. */
+    * slot is a Delta/Iceberg MERGE — same logical semantics.
+    *
+    * Files: one per post-AQE partition of the merge window; a positive
+    * `maxRecordsPerFile` also bounds the rows in each. */
   def upsert(spark: SparkSession, batch: DataFrame, snapshotDir: String,
              key: String = "pulse_id", maxRecordsPerFile: Int = 0): Unit =
     Commit.write(snapshotDir)(writeMerged(spark, batch, snapshotDir, _, key, maxRecordsPerFile))
@@ -155,9 +158,10 @@ object Pipeline {
         spark.read.parquet(snapshotDir).withColumn("__gen", lit(0)).unionByName(fresh)
       else fresh
     val merged = lastWins(rows, key, mergeOrder(batch))
-    // R17's sink batch size, Spark-shaped: the reference flushes every
-    // `batchSize` docs per bulk write (etl_connector.py:206,229); the
-    // parquet analog bounds rows per output file.
+    // one file per post-AQE partition of the merge window unless the
+    // caller bounds rows per file; the reference's 20-doc bulk flush
+    // (R17, etl_connector.py:206,229) has no analog in a generation
+    // that publishes atomically (see EtlConfig.batchSize)
     val writer = merged.drop("__gen").write.mode("overwrite")
     (if (maxRecordsPerFile > 0)
        writer.option("maxRecordsPerFile", maxRecordsPerFile.toLong)
@@ -234,8 +238,7 @@ object Pipeline {
     * layout column). Crash contract: [[upsert]]'s — the new generation,
     * every bucket at once, is published by one link flip. */
   def upsertIncremental(spark: SparkSession, batch: DataFrame, snapshotDir: String,
-                        key: String = "pulse_id", numBuckets: Int = 32,
-                        maxRecordsPerFile: Int = 0): Unit = {
+                        key: String = "pulse_id", numBuckets: Int = 32): Unit = {
     require(numBuckets >= 1, s"numBuckets ($numBuckets) must be >= 1")
     Commit.write(snapshotDir) { gen =>
       val manifest = Commit.readManifest(new File(snapshotDir), classOf[SnapshotManifest]) match {
@@ -272,10 +275,7 @@ object Pipeline {
               readBuckets(spark, snapshotDir, existing).withColumn("__gen", lit(0)).unionByName(keyed)
             else keyed
           val merged = lastWins(rows, key, mergeOrder(batch))
-          val writer = merged.drop("__gen").write.mode("overwrite").partitionBy("bucket")
-          (if (maxRecordsPerFile > 0)
-             writer.option("maxRecordsPerFile", maxRecordsPerFile.toLong)
-           else writer).parquet(gen.getPath)
+          merged.drop("__gen").write.mode("overwrite").partitionBy("bucket").parquet(gen.getPath)
           // what was ACTUALLY written must equal `touched` exactly. A
           // written bucket outside `touched` was never merged with its live
           // data (publishing it would drop live rows; skipping it would drop
@@ -387,6 +387,9 @@ object Pipeline {
 
   /** Full run (reference main(), etl_connector.py:206-239): extract →
     * transform → validate → upsert. Returns (validCount, quarantineCount).
+    * Sized by bytes at both ends: the source packs pages into byte-sized
+    * input partitions, and the snapshot gets one file per post-AQE
+    * partition of the merge window (`cfg.batchSize` bounds nothing here).
     * One pass: an `Observation` counts the rows inside the snapshot
     * write, the only job that reads the source. When no row reaches the
     * merge window's shuffle (an empty source, every row quarantined),
@@ -397,8 +400,7 @@ object Pipeline {
     val t = transform(extract(spark, fixtureDir, cfg), cfg)
     val (rows, valid) = (count(lit(1)).as("rows"), count_if(isValid).as("valid"))
     val counts = Observation("etl_run")
-    upsert(spark, t.observe(counts, rows, valid).filter(isValid), snapshotDir,
-      maxRecordsPerFile = cfg.batchSize)
+    upsert(spark, t.observe(counts, rows, valid).filter(isValid), snapshotDir)
     val observed = counts.get
     val m = if (observed.nonEmpty) observed
             else t.agg(rows, valid).head().getValuesMap[Any](Seq("rows", "valid"))

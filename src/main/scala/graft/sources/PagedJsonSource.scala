@@ -4,10 +4,12 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.types.{StructField, StructType, StringType, IntegerType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -17,13 +19,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * each "page" is a local JSON file `page-<N>.json` under `path`.
   *
   * Spark-first design:
-  *  - one InputPartition per page → pages fetched IN PARALLEL across
-  *    executor slots (the reference is strictly sequential; at scale a
-  *    1000-executor cluster fetches 1000 pages concurrently),
+  *  - pages are packed into input partitions by Spark's file-source
+  *    split rule ([[PagedJsonSource.partitions]]): each partition is a
+  *    run of consecutive pages sized by bytes, so pages are fetched IN
+  *    PARALLEL across executor slots (the reference is strictly
+  *    sequential) while a task's cost follows the bytes it reads, not
+  *    one task per page,
   *  - retry with exponential backoff lives INSIDE the partition reader
-  *    (R3), so a transient failure retries one page, not the job,
+  *    (R3), so a transient failure retries one page, not the pages the
+  *    partition already emitted nor the job,
   *  - LIMIT pushdown (R5): `df.limit(n)` reaches the source via
-  *    SupportsPushDownLimit and caps the number of page partitions —
+  *    SupportsPushDownLimit and caps the number of pages planned —
   *    the analog of the reference pushing `limit` to the server,
   *  - envelope handling (R7/R8): items under `results`, else `pulses`,
   *    else the first array-valued member, else the payload itself if
@@ -76,6 +82,37 @@ object PagedJsonSource {
         case _ => None
       })
       .sortBy(_._2)
+  }
+
+  /** `pages` (in page-number order) packed into input partitions of
+    * consecutive pages by the rule Spark's file sources split files
+    * with: a page costs its length plus `spark.sql.files.openCostInBytes`,
+    * the split size is `FilePartition.maxSplitBytes` over the total cost
+    * (`min(maxPartitionBytes, max(openCost, totalCost / minPartitionNum))`,
+    * `minPartitionNum` being `spark.sql.files.minPartitionNum` or else
+    * the session's default parallelism), and a partition is closed before
+    * the page that would take it past the split, as in
+    * `FilePartition.getFilePartitions`. Unlike the file source, pages are
+    * not sorted by size: each partition is a run of consecutive pages. */
+  def partitions(pages: Seq[(java.io.File, Int)]): Array[InputPartition] = {
+    val spark = SparkSession.active
+    val openCost = spark.sessionState.conf.filesOpenCostInBytes
+    val sized = pages.map { case (f, num) => (f.getAbsolutePath -> num, f.length()) }
+    val maxSplit = FilePartition.maxSplitBytes(spark, sized.map(_._2 + openCost).sum)
+    val out = Array.newBuilder[InputPartition]
+    var run = Vector.empty[(String, Int)]
+    var runCost = 0L
+    sized.foreach { case (page, len) =>
+      if (run.nonEmpty && runCost + len > maxSplit) {
+        out += PagedJsonPartition(run)
+        run = Vector.empty
+        runCost = 0L
+      }
+      run :+= page
+      runCost += len + openCost
+    }
+    if (run.nonEmpty) out += PagedJsonPartition(run)
+    out.result()
   }
 
   /** Envelope extraction (R7/R8, etl_connector.py:102-117): `results`,
@@ -146,7 +183,7 @@ class PagedJsonTable(options: CaseInsensitiveStringMap) extends Table with Suppo
     new PagedJsonScanBuilder(options)
 }
 
-/** LIMIT pushdown (R5): a pushed limit caps how many page partitions
+/** LIMIT pushdown (R5): a pushed limit caps how many pages
   * are planned — `ceil(limit / perPage)` pages, mirroring the
   * reference's server-side `limit` + `max_pages` cap. */
 class PagedJsonScanBuilder(options: CaseInsensitiveStringMap)
@@ -188,12 +225,9 @@ class PagedJsonScan(options: CaseInsensitiveStringMap, pushedLimit: Int)
     // stream would never emit.) The pushed-limit cap stays a COUNT of
     // pages: under assumeFullPages the first k surviving pages hold
     // the LIMIT rows regardless of their numbers.
-    PagedJsonSource.pages(path)
+    PagedJsonSource.partitions(PagedJsonSource.pages(path)
       .filter { case (_, num) => num < maxPages }
-      .take(limitPages)
-      .map {
-        case (f, num) => PagedJsonPartition(f.getAbsolutePath, num): InputPartition
-      }.toArray
+      .take(limitPages))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -203,7 +237,8 @@ class PagedJsonScan(options: CaseInsensitiveStringMap, pushedLimit: Int)
       options.getInt("failFirstN", 0))
 }
 
-case class PagedJsonPartition(file: String, page: Int) extends InputPartition
+/** A run of consecutive pages, each as (file, page number). */
+case class PagedJsonPartition(pages: Seq[(String, Int)]) extends InputPartition
 
 /** Streaming form of the paginated scan (reference R4's incremental
   * generator, SURVEY §2.1: "in streaming: a micro-batch source with
@@ -237,10 +272,8 @@ class PagedJsonMicroBatchStream(options: CaseInsensitiveStringMap)
                                    end: streaming.Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[PagedJsonOffset].page
     val e = end.asInstanceOf[PagedJsonOffset].page
-    PagedJsonSource.pages(path)
-      .filter { case (_, num) => num >= s && num < e }
-      .map { case (f, num) => PagedJsonPartition(f.getAbsolutePath, num): InputPartition }
-      .toArray
+    PagedJsonSource.partitions(PagedJsonSource.pages(path)
+      .filter { case (_, num) => num >= s && num < e })
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -260,14 +293,20 @@ class PagedJsonReaderFactory(maxRetries: Int, backoffMs: Long, failFirstN: Int)
       maxRetries, backoffMs, failFirstN)
 }
 
-/** Per-page reader. The fetch (file read + JSON parse) runs under the
-  * R3 retry loop; `failFirstN` injects transient failures for tests. */
+/** Reads a partition's pages in order. Each page's fetch (file read +
+  * JSON parse) runs under its own R3 retry loop, so a transient failure
+  * re-fetches that page only, never the pages already emitted;
+  * `failFirstN` injects that many transient failures into every page's
+  * fetch, for tests. `item` restarts at 0 on each page. */
 class PagedJsonReader(p: PagedJsonPartition, maxRetries: Int, backoffMs: Long,
                       failFirstN: Int) extends PartitionReader[InternalRow] {
-  private var items: Iterator[JsonNode] = _
+  private val pages = p.pages.iterator
+  private var page = -1
+  private var items: Iterator[JsonNode] = Iterator.empty
+  private var itemIdx = -1
   private var current: InternalRow = _
 
-  private def fetchPage(): Seq[JsonNode] = {
+  private def fetchPage(file: String): Seq[JsonNode] = {
     var failures = 0
     PagedJsonSource.withRetry(maxRetries, backoffMs) { () =>
       if (failures < failFirstN) {
@@ -275,18 +314,21 @@ class PagedJsonReader(p: PagedJsonPartition, maxRetries: Int, backoffMs: Long,
         throw new java.io.IOException(s"injected transient failure $failures")
       }
       val mapper = new ObjectMapper()
-      PagedJsonSource.extractItems(mapper.readTree(new java.io.File(p.file)))
+      PagedJsonSource.extractItems(mapper.readTree(new java.io.File(file)))
     }
   }
 
-  private var itemIdx = -1
-
   override def next(): Boolean = {
-    if (items == null) items = fetchPage().iterator
+    while (!items.hasNext && pages.hasNext) {
+      val (file, num) = pages.next()
+      items = fetchPage(file).iterator
+      page = num
+      itemIdx = -1
+    }
     if (items.hasNext) {
       val node = items.next()
       itemIdx += 1
-      current = InternalRow(UTF8String.fromString(node.toString), p.page, itemIdx)
+      current = InternalRow(UTF8String.fromString(node.toString), page, itemIdx)
       true
     } else false
   }

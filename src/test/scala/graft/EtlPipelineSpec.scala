@@ -453,17 +453,100 @@ class EtlPipelineSpec extends SparkSpec {
     assert(sleeps.toSeq === Seq(100L, 200L, 400L))
   }
 
-  test("batchSize bounds rows per sink file (R17 batch analog)") {
-    val dir = tempDir("graft-batchsize").toFile
-    val snap = dir.getAbsolutePath + "/snap"
-    Pipeline.run(spark, fixtures, snap, cfg.copy(batchSize = 2))
-    val files = new java.io.File(snap).listFiles()
+  /** Data files of the live snapshot at `snap`. */
+  private def snapshotFiles(snap: String): Seq[java.io.File] =
+    new java.io.File(snap).listFiles().toSeq
       .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
-    assert(files.nonEmpty)
-    // 6 merged rows with ≤2 rows per file → every data file respects the cap
-    val counts = files.map(f =>
-      spark.read.parquet(f.getAbsolutePath).count())
-    assert(counts.sum === 6L)
-    assert(counts.forall(_ <= 2L), s"file row counts ${counts.mkString(",")} exceed batchSize=2")
+
+  test("upsert's maxRecordsPerFile bounds rows per sink file") {
+    val snap = tempDir("graft-max-records").toString + "/snap"
+    val batch = spark.range(5).select(
+      current_timestamp().as("ingestion_timestamp"), col("id").as("pulse_id"))
+    Pipeline.upsert(spark, batch, snap, maxRecordsPerFile = 2)
+    val counts = snapshotFiles(snap).map(f => spark.read.parquet(f.getAbsolutePath).count())
+    assert(counts.sum === 5L)
+    assert(counts.size >= 3 && counts.forall(_ <= 2L),
+      s"file row counts ${counts.mkString(",")} exceed maxRecordsPerFile=2")
+  }
+
+  test("batchSize does not size Pipeline.run's sink files") {
+    val dir = tempDir("graft-batchsize")
+    def runWith(c: EtlConfig, name: String) = {
+      val snap = dir.resolve(name).toString
+      Pipeline.run(spark, fixtures, snap, c)
+      (spark.read.parquet(snap).select("pulse_id", "raw", "source_page", "source_item")
+        .collect().map(_.toString).sorted.toSeq, snapshotFiles(snap).size)
+    }
+    val (small, smallFiles) = runWith(cfg.copy(batchSize = 2), "small")
+    val (default, defaultFiles) = runWith(cfg, "default")
+    assert(small.size === 6 && small === default)
+    assert(smallFiles === defaultFiles)
+    // files follow the merge window's partitions, not 2-row cuts of 6 rows
+    assert(smallFiles >= 1 && smallFiles <= spark.conf.get("spark.sql.shuffle.partitions").toInt)
+  }
+
+  /** 12 pages of identical length, 3 items each. */
+  private lazy val equalPages: String = {
+    val dir = tempDir("graft-packed-pages").toFile
+    (0 until 12).foreach { p =>
+      val items = (0 until 3).map(i => f"""{"id": "${p * 100 + i}%04d"}""").mkString(", ")
+      Files.writeString(new java.io.File(dir, f"page-$p%02d.json").toPath, s"""{"results": [$items]}""")
+    }
+    dir.getAbsolutePath
+  }
+
+  private def pagedRead(opts: (String, String)*) =
+    spark.read.format("graft.sources.PagedJsonSource")
+      .option("path", equalPages).options(opts.toMap).load()
+
+  /** Pages per input partition, in partition order. */
+  private def pagesByPartition(df: org.apache.spark.sql.DataFrame): Seq[Seq[Int]] =
+    df.select(spark_partition_id().as("pid"), col("page")).distinct().collect()
+      .groupBy(_.getInt(0)).toSeq.sortBy(_._1).map(_._2.map(_.getInt(1)).toSeq.sorted)
+
+  /** `f` with the SQL confs `kvs` set, each restored afterwards. */
+  private def withConfs[T](kvs: (String, String)*)(f: => T): T = {
+    val prior = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("paged source packs runs of consecutive pages by bytes") {
+    val df = pagedRead()
+    val runs = pagesByPartition(df)
+    assert(runs.size > 1 && runs.size <= spark.sparkContext.defaultParallelism,
+      s"runs $runs")
+    assert(df.rdd.getNumPartitions === runs.size)
+    // each partition a run of consecutive pages, the runs in page order
+    assert(runs.flatten === (0 until 12))
+    runs.foreach(r => assert(r === (r.head to r.last)))
+  }
+
+  test("paged source: a page above the split is its own partition") {
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("raw_json", "page", "item").collect().map(_.toString).sorted.toSeq
+    val packedRows = rows(pagedRead())
+    val (perPageRuns, perPageRows) = withConfs(
+        "spark.sql.files.maxPartitionBytes" -> "16",
+        "spark.sql.files.openCostInBytes" -> "8") {
+      val df = pagedRead()
+      (pagesByPartition(df), rows(df))
+    }
+    assert(perPageRuns === (0 until 12).map(Seq(_)))
+    assert(packedRows.size === 36 && perPageRows === packedRows)
+    assert(pagesByPartition(pagedRead()).size < 12) // confs restored
+  }
+
+  test("retries on a packed partition's later pages replay no row") {
+    val df = pagedRead("failFirstN" -> "2", "maxRetries" -> "5", "retryBackoffMs" -> "1")
+    assert(pagesByPartition(df).forall(_.size > 1))
+    val keys = df.select("page", "item").collect().map(r => (r.getInt(0), r.getInt(1)))
+    assert(keys.length === 36)
+    assert(keys.distinct.length === 36)
+    // item restarts at 0 on every page
+    assert(keys.groupBy(_._1).values.forall(_.map(_._2).sorted.toSeq === Seq(0, 1, 2)))
   }
 }
